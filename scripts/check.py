@@ -3,6 +3,8 @@
 
 Usage: python3 scripts/check.py <verifyOutDir> <sfDir>
 
+Exits 1 when any query FAILs, 0 otherwise.
+
 Reads each <verifyOutDir>/<query>/ parquet (Spark result), runs the
 matching oracle_sql.json query in DuckDB over the sf tables, sorts
 columns by name and rows by all values, and compares cell-by-cell.
@@ -116,7 +118,8 @@ def main():
     if missing:
         print(f"rows-only (no oracle): {missing}")
     print(f"== {n_pass} pass / {n_fail} fail ==")
+    return 1 if n_fail else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -131,4 +131,35 @@ object Cleanup {
 
   /** Checkpoint-releasing handles currently parked. */
   def fragileCount: Int = fragilePending.size()
+
+  /** Driver-pool bound of [[concurrently]] — above the widest caller
+    * (a PQ store build's five overlapped sidecar writes).
+    */
+  private val MaxDriverTasks = 8
+
+  /** Map `items` through `f` on a bounded driver thread pool and return
+    * the results in input order — the overlap-independent-jobs pattern
+    * (each item is its own chain of Spark actions; serialized, every
+    * chain's planning gap idles the cluster). Each task runs under the
+    * caller's [[scoped]] owner, so a [[defer]] on a pool thread is
+    * attributed exactly as it would be on the caller's thread. Every
+    * task settles before the first failure is rethrown, so no action
+    * is left in flight.
+    */
+  def concurrently[A, B](items: Seq[A])(f: A => B): Seq[B] =
+    if (items.sizeIs <= 1) items.map(f)
+    else {
+      val owner = currentOwner.get()
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(items.size, MaxDriverTasks))
+      try {
+        val futs = items.map(a => pool.submit(new java.util.concurrent.Callable[B] {
+          override def call(): B = if (owner == null) f(a) else scoped(owner)(f(a))
+        }))
+        val settled = futs.map(fu =>
+          try Right(fu.get())
+          catch { case e: java.util.concurrent.ExecutionException => Left(e.getCause) })
+        settled.collectFirst { case Left(e) => throw e }
+        settled.collect { case Right(b) => b }
+      } finally { pool.shutdown() }
+    }
 }

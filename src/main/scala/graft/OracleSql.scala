@@ -537,9 +537,9 @@ QUALIFY row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
   <= greatest(16, CAST(ceil(sqrt((SELECT count(*) FROM c))) AS BIGINT)))"""
 
   /** Rank-1 SQUARED-L2 codeword assignment CTE — the oracle mirror of
-    * Similarity.pqRank1(l2 = true), the residual-PQ metric: round(
-    * dot(v,v) − 2·dot(v,c) + dot(c,c), 4) ASC, cent_id ASC. The same
-    * three-dot expansion the engine computes, term for term.
+    * the residual-PQ metric of graft.plans.PqArgBestExpr (l2 = true):
+    * round(dot(v,v) − 2·dot(v,c) + dot(c,c), 4) ASC, cent_id ASC. The
+    * same three-dot expansion the kernel computes, term for term.
     */
   private def l2AssignCte(out: String, cents: String, src: String): String =
     s"""$out AS (SELECT vec_id, emb, cent_id FROM (

@@ -74,98 +74,17 @@ object IvfIndex {
     }
   }
 
-  /** Run independent sink actions CONCURRENTLY (guide §2.6 — overlap
-    * independent jobs). Every sidecar write of a store build is its
-    * own Spark action paying a full Catalyst plan + job cycle;
-    * serialized, those cycles dominated the builds (r19 profile:
-    * ~40-50 jobs with ~5 s of inter-job planning gaps per PQ store,
-    * core-count-flat). Submitting them from a small pool overlaps one
-    * write's planning with another's execution and lets short jobs
-    * back-fill the tail. Safe by construction: every task writes a
-    * DISTINCT directory (no commit overlap), the frames they consume
-    * are either driver-literal or an already-materialized persist
-    * (no duplicate recompute), and job-description state is
-    * thread-local. All tasks are drained before the first failure is
-    * rethrown, so no write is left in flight.
-    */
-  private def runConcurrent(tasks: Seq[() => Unit]): Unit =
-    if (tasks.sizeIs <= 1) tasks.foreach(_())
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
-      try {
-        val futs = tasks.map(t => pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = t()
-        }))
-        val errs = futs.flatMap(f =>
-          try { f.get(); None }
-          catch { case e: java.util.concurrent.ExecutionException => Option(e.getCause) })
-        errs.headOption.foreach(e => throw e)
-      } finally { pool.shutdownNow(); () }
-    }
-
-  /** Collect a fitted codebook plan and append the stored rank column
-    * `__ci__` = row_number over (sub_id, cent_id asc) − 1. For
-    * integral draw-id types the rank derives DRIVER-SIDE from the
-    * collected rows (r20 opt: the in-plan window paid an exchange +
-    * sort per build for an m·ksub frame; a stable sort by the numeric
-    * id replays SQL's row_number exactly — ids are distinct within a
-    * subspace, so the rank is unambiguous). Non-integral id types keep
-    * the window form, whose SQL ordering is the defined contract.
-    */
-  private def collectCodebookWithCi(
-      cbPlan0: DataFrame): (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType) = {
-    import org.apache.spark.sql.types._
-    val idIdx = cbPlan0.schema.fieldIndex("cent_id")
-    val subIdx = cbPlan0.schema.fieldIndex("sub_id")
-    val integral = cbPlan0.schema(idIdx).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    def windowed(): (Array[org.apache.spark.sql.Row], StructType) = {
-      val wCi = Window.partitionBy(col("sub_id")).orderBy(col("cent_id"))
-      val p = cbPlan0.withColumn("__ci__", row_number().over(wCi) - 1)
-      (p.collect(), p.schema)
-    }
-    if (!integral) windowed()
-    else {
-      val raw = cbPlan0.collect()
-      // a null draw id has no defined numeric order here — keep SQL's
-      if (raw.exists(_.isNullAt(idIdx))) return windowed()
-      val schema = cbPlan0.schema.add(StructField("__ci__", IntegerType, nullable = false))
-      val rows = raw
-        .groupBy(_.getAs[Int](subIdx))
-        .valuesIterator
-        .flatMap { rs =>
-          rs.sortBy(r => java.lang.Long.parseLong(r.get(idIdx).toString))
-            .zipWithIndex
-            .map { case (r, ci) =>
-              org.apache.spark.sql.Row.fromSeq(r.toSeq :+ ci)
-            }
-        }
-        .toArray
-      (rows, schema)
-    }
-  }
-
-  /** Collect a model-sized frame (centroids, codebooks — rows the
-    * driver already holds whole whenever the frame is broadcast) and
-    * re-embed it as a depth-1 literal relation, broadcast-tagged.
+  /** Collect a model-sized frame (centroids — rows the driver
+    * already holds whole whenever the frame is broadcast) and re-embed
+    * it as a depth-1 literal relation, broadcast-tagged.
     * [[Similarity]]'s compactCentroids recipe: values round-trip
     * exactly (double / array-of-double / longs), so every consumer
     * sees identical bits — but sidecar writes and routing joins stop
     * re-planning (and re-executing) the fit lineage per action.
     */
-  private def compactFrame(df: DataFrame): DataFrame =
-    compactRows(df.sparkSession, df.collect(), df.schema)
-
-  /** [[compactFrame]] over already-collected rows. */
-  private def compactRows(
-      spark: SparkSession,
-      rows: Array[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType
-  ): DataFrame = {
+  private def compactFrame(df: DataFrame): DataFrame = {
     import scala.jdk.CollectionConverters._
-    broadcast(spark.createDataFrame(rows.toList.asJava, schema))
+    broadcast(df.sparkSession.createDataFrame(df.collect().toList.asJava, df.schema))
   }
 
   /** Post-maintenance cell-balance report (drift under frozen
@@ -380,19 +299,21 @@ object IvfIndex {
       // phase 1 — the cell write (which materializes the persist) runs
       // CONCURRENTLY with the driver-literal sidecars; phase 2 — the
       // sinks that re-read `assigned` run once the persist is
-      // populated, again overlapped (r20 opt, guide §2.6)
-      runConcurrent(Seq(
+      // populated, again overlapped (r20 opt, guide §2.6). Safe: every
+      // task writes a DISTINCT directory from a driver-literal frame or
+      // an already-materialized persist (no duplicate recompute).
+      graft.Cleanup.concurrently(Seq(
         () => graft.sources.Sink.writePartitioned(
           assigned, path, partitionCols = Seq("cent_id"), sortCols = Seq(idCol)),
         () => cents.write.mode("overwrite").parquet(s"$path/$CentroidsDir"),
-        () => meta.foreach(writeLayoutMeta(corpus.sparkSession, path, _))))
-      runConcurrent(Seq(
+        () => meta.foreach(writeLayoutMeta(corpus.sparkSession, path, _))))(_())
+      graft.Cleanup.concurrently(Seq(
         () => graft.sources.Sink.writePartitioned(
           keymapRows(assigned, idCol, meta), s"$path/$KeymapDir",
           partitionCols = Seq("kb"), sortCols = Seq(idCol))) ++
         (if (histogramCols.nonEmpty)
           Seq(() => writeCellHist(corpus.sparkSession, path, assigned, histogramCols))
-        else Nil))
+        else Nil))(_())
     } finally { assigned.unpersist(); () }
   }
 
@@ -509,20 +430,10 @@ object IvfIndex {
     // codebooks carry the RANK of each codeword within its subspace's
     // (code_id) order — pqSearch's flat-LUT index — so appends and
     // serving never need the original draw ids.
-    val (cbRows, cbSchema) = collectCodebookWithCi(
+    val cb = Similarity.PqCodebook.collect(
       Similarity.pqCodebooks(nz, idCol, vecCol, dims, m, ksub, iters, scoreDecimals))
-    // fail fast on a dropped codeword (ADVICE r16): Lloyd drops a
-    // codeword whose cluster empties, and a subspace with fewer
-    // than ksub codewords would silently mis-address the flat ADC
-    // LUT (s*ksub + rank) everywhere downstream
-    val bySub = cbRows.groupBy(_.getAs[Int]("sub_id")).map { case (s, rs) => s -> rs.length.toLong }
-    require(bySub.size == m && bySub.valuesIterator.forall(_ == ksub.toLong),
-      s"buildPq: Lloyd training left unequal codeword counts per subspace " +
-        s"(expected $m x $ksub, got ${bySub.toSeq.map { case (s, n) => s"sub $s: $n" }.sorted.mkString(", ")}) " +
-        "- the flat ADC addressing requires exactly ksub codewords in every subspace; " +
-        "lower ksub (an empty cluster means the corpus cannot support this many codewords), " +
-        "reduce iters, or train on more rows")
-    val cbStored = compactRows(spark, cbRows, cbSchema)
+    cb.requireFull(m, ksub, "buildPq")
+    val cbStored = cb.frame(spark)
     val tiny = ksub <= 256
     // routed streams straight into the packed single-projection encode
     // (ONE consumer — refine triple and payload ride the same
@@ -530,7 +441,7 @@ object IvfIndex {
     // fan-out is gone (r19 opt, guide §2.4)
     val routed = Similarity.ivfAssignTwoLevel(nz, cents, idCol, vecCol, "row", scoreDecimals,
       carryCols = payloadCols, knownRows = nzCount)
-    val assigned = pqCellRows(cbStored, routed, idCol, scoreDecimals, tiny,
+    val assigned = pqCellRows(cb, routed, idCol, scoreDecimals, tiny,
       refine = refineInt8, payload = payloadCols)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -538,20 +449,20 @@ object IvfIndex {
       // phase 1 — cells (materializing the persist) overlapped with the
       // four driver-literal sidecars; phase 2 — the assigned re-readers
       // (r20 opt, guide §2.6)
-      runConcurrent(Seq(
+      graft.Cleanup.concurrently(Seq(
         () => graft.sources.Sink.writePartitioned(
           assigned, path, partitionCols = Seq("cent_id"), sortCols = Seq(idCol)),
         () => cents.write.mode("overwrite").parquet(s"$path/$CentroidsDir"),
         () => cbStored.write.mode("overwrite").parquet(s"$path/$CodebooksDir"),
         () => writePqMeta(spark, path, m, ksub, dims / m, tiny, residual = false),
-        () => writeLayoutMeta(spark, path, meta)))
-      runConcurrent(Seq(
+        () => writeLayoutMeta(spark, path, meta)))(_())
+      graft.Cleanup.concurrently(Seq(
         () => graft.sources.Sink.writePartitioned(
           keymapRows(assigned, idCol, Some(meta)), s"$path/$KeymapDir",
           partitionCols = Seq("kb"), sortCols = Seq(idCol))) ++
         (if (histogramCols.nonEmpty)
           Seq(() => writeCellHist(spark, path, assigned, histogramCols))
-        else Nil))
+        else Nil))(_())
     } finally { assigned.unpersist(); () }
   }
 
@@ -610,16 +521,11 @@ object IvfIndex {
           zip_with(col("__rowv__"), col("__cv__"), (a, b) => a - b).as("__rv__"))
       // ONE collect of the fitted codebook feeds the count check, the
       // packed encode, and the sidecar write (see buildPq — r19 opt)
-      val (cbRows, cbSchema) = collectCodebookWithCi(
+      val cb = Similarity.PqCodebook.collect(
         Similarity.pqCodebooks(resid.select(col("row_id").as(idCol), col("__rv__")),
           idCol, "__rv__", dims, m, ksub, iters, scoreDecimals, l2 = true))
-      val bySub = cbRows.groupBy(_.getAs[Int]("sub_id")).map { case (s, rs) => s -> rs.length.toLong }
-      require(bySub.size == m && bySub.valuesIterator.forall(_ == ksub.toLong),
-        s"buildPq(residual): Lloyd training left unequal codeword counts per subspace " +
-          s"(expected $m x $ksub, got ${bySub.toSeq.map { case (s, n) => s"sub $s: $n" }.sorted.mkString(", ")}) " +
-          "- flat ADC addressing requires exactly ksub codewords per subspace; lower ksub, " +
-          "reduce iters, or train on more rows")
-      val cbStored = compactRows(spark, cbRows, cbSchema)
+      cb.requireFull(m, ksub, "buildPq(residual)")
+      val cbStored = cb.frame(spark)
       val tiny = ksub <= 256
       // the refine triple quantizes the FULL vector, not the
       // residual — exact re-ranking needs cosine against x, and a
@@ -627,26 +533,26 @@ object IvfIndex {
       // compaction-only rebuild (a residual-scoped code would be
       // bound to the frozen cells twice over). It rides the packed
       // encode projection, like the payload (r19 opt).
-      val assigned = pqCellRowsResidual(cbStored, routed, cents, idCol,
-        scoreDecimals, tiny, dims, m, refine = refineInt8, payload = payloadCols)
+      val assigned = pqCellRowsResidual(cb, routed, cents, idCol,
+        scoreDecimals, tiny, refine = refineInt8, payload = payloadCols)
         .persist(StorageLevel.MEMORY_AND_DISK)
       try {
         dumpBuildPlan(assigned, path)
         // overlapped sink phases, as in the raw build (r20 opt, §2.6)
-        runConcurrent(Seq(
+        graft.Cleanup.concurrently(Seq(
           () => graft.sources.Sink.writePartitioned(
             assigned, path, partitionCols = Seq("cent_id"), sortCols = Seq(idCol)),
           () => cents.write.mode("overwrite").parquet(s"$path/$CentroidsDir"),
           () => cbStored.write.mode("overwrite").parquet(s"$path/$CodebooksDir"),
           () => writePqMeta(spark, path, m, ksub, dims / m, tiny, residual = true),
-          () => writeLayoutMeta(spark, path, meta)))
-        runConcurrent(Seq(
+          () => writeLayoutMeta(spark, path, meta)))(_())
+        graft.Cleanup.concurrently(Seq(
           () => graft.sources.Sink.writePartitioned(
             keymapRows(assigned, idCol, Some(meta)), s"$path/$KeymapDir",
             partitionCols = Seq("kb"), sortCols = Seq(idCol))) ++
           (if (histogramCols.nonEmpty)
             Seq(() => writeCellHist(spark, path, assigned, histogramCols))
-          else Nil))
+          else Nil))(_())
       } finally { assigned.unpersist(); () }
     } finally { routed.unpersist(); () }
   }
@@ -658,99 +564,36 @@ object IvfIndex {
     * recipe, so the stored path shares q_ann_pq_residual's oracle.
     */
   private def pqCellRowsResidual(
-      cb: DataFrame,
+      cb: Similarity.PqCodebook,
       routed: DataFrame,
       cents: DataFrame,
       idCol: String,
       scoreDecimals: Int,
       tiny: Boolean,
-      dims: Int,
-      m: Int,
       refine: Boolean = false,
       payload: Seq[String] = Nil
-  ): DataFrame =
-    Similarity.packCodebook(cb.collect(), cb.schema) match {
-      case Some(packed) =>
-        // PACKED residual encode (r19 opt): residual against the
-        // broadcast cell centroid, L2 rank-1 argmax over the collected
-        // codebook, rank packing, and the FULL reconstruction norm
-        // |c_cell + r̂| — one projection after the (broadcast) centroid
-        // join, replacing pqEncode's explode × join × window and two
-        // id-keyed regroups. Values bit-identical: same residual
-        // zip_with, same rounded L2 metric ((sv·sv) − 2·dot + stored
-        // __cbn2__, pqRank1's expression with the identical stored
-        // squared norm), same (dist asc, id asc) tiebreak, same
-        // norm(c + r̂) expression over the same codeword doubles.
-        val pc = new Similarity.PackedCodebook(packed, scoreDecimals, l2 = true)
-        val withRv = routed
-          .join(cents.select(col("cent_id"), col("__cv__")), Seq("cent_id"))
-          .withColumn("__rv__", zip_with(col("__rowv__"), col("__cv__"), (a, b) => a - b))
-        val q8 = if (refine) Seq(int8TripleStruct(col("__rowv__")).as("__q8__")) else Nil
-        val carry = (if (refine) Seq(col("__q8__")) else Nil) ++ payload.map(col)
-        val s1 = withRv.select(Seq(col("cent_id"), col("row_id").as(idCol), col("__cv__")) ++
-          pc.stagedCols(col("__rv__")) ++ q8 ++ payload.map(col): _*)
-        val s2 = s1.select(Seq(col("cent_id"), col(idCol), col("__cv__")) ++ pc.idxCols ++ carry: _*)
-        val rh = concat((0 until pc.m).map(pc.v): _*)
-        pqPackedFinal(s2, idCol, pc, tiny,
-          xn = Similarity.norm(zip_with(col("__cv__"), rh, (a, b) => a + b)),
-          refine, payload)
-      case None =>
-        withJoinedExtras(
-          pqCellRowsResidualShuffled(cb, routed, cents, idCol, scoreDecimals, tiny, dims, m),
-          routed, idCol, refine, payload)
-    }
-
-  /** The pre-r19-opt shuffled residual encode — the fallback for
-    * codebooks the packed path can't take (see
-    * [[Similarity.packCodebook]]).
-    */
-  private def pqCellRowsResidualShuffled(
-      cb: DataFrame,
-      routed: DataFrame,
-      cents: DataFrame,
-      idCol: String,
-      scoreDecimals: Int,
-      tiny: Boolean,
-      dims: Int,
-      m: Int
   ): DataFrame = {
-    val resid = routed
+    // PACKED residual encode (r19 opt): residual against the broadcast
+    // cell centroid, L2 rank-1 argmax over the collected codebook, rank
+    // packing, and the FULL reconstruction norm |c_cell + r̂| — one
+    // projection after the (broadcast) centroid join. Same residual
+    // zip_with, same rounded L2 metric ((sv·sv) − 2·dot + |cbv|²), same
+    // (dist asc, id asc) tiebreak, same norm(c + r̂) expression over the
+    // same codeword doubles as the q_ann_pq_residual oracle.
+    val withRv = routed
       .join(cents.select(col("cent_id"), col("__cv__")), Seq("cent_id"))
-      .select(col("row_id").as(idCol), col("cent_id"),
-        zip_with(col("__rowv__"), col("__cv__"), (a, b) => a - b).as("__rv__"))
-    val codes = Similarity.pqEncode(
-      resid.select(col(idCol), col("__rv__")),
-      cb, idCol, "__rv__", dims, m, scoreDecimals, l2 = true)
-    val rankArr = transform(
-      array_sort(collect_list(struct(col("sub_id"), col("__ci__")))), x => x("__ci__"))
-    val pqArr =
-      if (tiny) transform(rankArr, r => r - 128).cast("array<tinyint>")
-      else rankArr.cast("array<smallint>")
-    val packed = codes
-      .join(cb.select(col("sub_id"), col("cent_id").as("code_id"),
-        col("__ci__"), col("__cbv__")), Seq("sub_id", "code_id"))
-      .groupBy(col(idCol))
-      .agg(pqArr.as("__pq__"),
-        flatten(transform(
-          array_sort(collect_list(struct(col("sub_id"), col("__cbv__")))),
-          x => x("__cbv__"))).as("__rh__"))
-    resid.select(col("cent_id"), col(idCol))
-      .join(packed, Seq(idCol))
-      .join(cents.select(col("cent_id"), col("__cv__")), Seq("cent_id"))
-      .select(col("cent_id"), col(idCol), col("__pq__"),
-        Similarity.norm(zip_with(col("__cv__"), col("__rh__"), (a, b) => a + b)).as("__xn__"))
+      .withColumn("__rv__", zip_with(col("__rowv__"), col("__cv__"), (a, b) => a - b))
+    val q8 = if (refine) Seq(int8TripleStruct(col("__rowv__")).as("__q8__")) else Nil
+    val carry = (if (refine) Seq(col("__q8__")) else Nil) ++ payload.map(col)
+    val s1 = withRv.select(Seq(col("cent_id"), col("row_id").as(idCol), col("__cv__")) ++
+      cb.stagedCols(col("__rv__"), l2 = true) ++ q8 ++ payload.map(col): _*)
+    val s2 = s1.select(Seq(col("cent_id"), col(idCol), col("__cv__")) ++
+      cb.idxCols(scoreDecimals, l2 = true) ++ carry: _*)
+    val rh = concat((0 until cb.m).map(cb.v): _*)
+    pqPackedFinal(s2, idCol, cb.m, tiny,
+      xn = Similarity.norm(zip_with(col("__cv__"), rh, (a, b) => a + b)),
+      refine, payload)
   }
-
-  /** The int8 refine triple of a routed batch — (key, `__codes__`,
-    * `__scale__`, `__cn__`), [[Similarity.quantizeInt8]] over the
-    * FULL float vector exactly as [[build]]'s int8 layout stores it,
-    * so the refine re-rank shares q_ann_ivf_store_int8's scoring
-    * math (and its oracle recipe). Joined into the PQ cell rows by
-    * [[buildPq]]`(refineInt8 = true)` and [[appendBatch]].
-    */
-  private def refineTriple(routed: DataFrame, idCol: String): DataFrame =
-    cellRows(routed, idCol, "__fv__", int8 = true)
-      .select(col(idCol), col("__codes__"), col("__scale__"), col("__cn__"))
 
   /** The refine-column names a REFINE layout adds to its cell rows —
     * present iff the store was built with `refineInt8 = true` (the
@@ -819,71 +662,51 @@ object IvfIndex {
     * under the (frozen) codebooks and pack per id the rank-index code
     * array `__pq__` (ordered by subspace — [[Similarity.pqSearch]]'s
     * flat-LUT addressing) and the reconstruction norm `__xn__` (from
-    * the codeword squared norms, exactly pqFit's recipe). `cb` must
-    * carry the stored-codebook schema (incl. `__ci__`, `__cbn2__`).
+    * the codeword squared norms, exactly pqFit's recipe).
+    *
+    * PACKED raw encode (r19 opt): rank-1 cosine argmax over the
+    * collected codebook + rank packing + codeword-norm reconstruction,
+    * as ONE projection over the routed frame — zero exchanges for any
+    * orderable id type. Same rounded cosine over the same stored
+    * norms, same (sim desc, id asc) tiebreak, and `__xn__` sums the
+    * squared norms in FIXED ascending-subspace order, as the oracle
+    * recipe does.
     */
-  private def pqCellRows(
-      cb: DataFrame,
+  private[graft] def pqCellRows(
+      cb: Similarity.PqCodebook,
       routed: DataFrame,
       idCol: String,
       scoreDecimals: Int,
       tiny: Boolean,
       refine: Boolean = false,
       payload: Seq[String] = Nil
-  ): DataFrame =
-    Similarity.packCodebook(cb.collect(), cb.schema) match {
-      case Some(packed) =>
-        // PACKED raw encode (r19 opt): rank-1 cosine argmax over the
-        // collected codebook + rank packing + codeword-norm
-        // reconstruction, as ONE projection over the routed frame —
-        // replacing pqEncode's explode × codebook join × per-(row,sub)
-        // window plus two regroup/joins by id. Values bit-identical:
-        // same rounded cosine (pqRank1's expression over the same
-        // stored norms), same (sim desc, id asc) tiebreak, and __xn__
-        // sums the stored squared norms in FIXED ascending-subspace
-        // order. (The replaced sqrt(sum(__cbn2__)) hash aggregation had
-        // no guaranteed add order, so this is a determinism IMPROVEMENT
-        // over the old path, not a bit replay of it — pre-r19 stores
-        // can differ at the ULP; the oracle recipe also sums in
-        // ascending subspace order, making the packed form canonical.)
-        val pc = new Similarity.PackedCodebook(packed, scoreDecimals, l2 = false)
-        val q8 = if (refine) Seq(int8TripleStruct(col("__rowv__")).as("__q8__")) else Nil
-        val carry = (if (refine) Seq(col("__q8__")) else Nil) ++ payload.map(col)
-        val s1 = routed.select(Seq(col("cent_id"), col("row_id").as(idCol)) ++
-          pc.stagedCols(col("__rowv__")) ++ q8 ++ payload.map(col): _*)
-        val s2 = s1.select(Seq(col("cent_id"), col(idCol)) ++ pc.idxCols ++ carry: _*)
-        pqPackedFinal(s2, idCol, pc, tiny,
-          xn = sqrt((0 until pc.m).map(pc.n2).reduce(_ + _)), refine, payload)
-      case None =>
-        // the fallback consumes routed up to three times (shuffled
-        // encode, refine triple, payload join) and callers stream it
-        // unpersisted (the packed path is ONE consumer) — persist here
-        // so the two-level routing doesn't recompute per consumer;
-        // released after the consuming action (ADVICE r19)
-        val routedP = routed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        graft.Cleanup.defer(() => { routedP.unpersist(); () })
-        withJoinedExtras(pqCellRowsShuffled(cb, routedP, idCol, scoreDecimals, tiny),
-          routedP, idCol, refine, payload)
-    }
+  ): DataFrame = {
+    val q8 = if (refine) Seq(int8TripleStruct(col("__rowv__")).as("__q8__")) else Nil
+    val carry = (if (refine) Seq(col("__q8__")) else Nil) ++ payload.map(col)
+    val s1 = routed.select(Seq(col("cent_id"), col("row_id").as(idCol)) ++
+      cb.stagedCols(col("__rowv__"), l2 = false) ++ q8 ++ payload.map(col): _*)
+    val s2 = s1.select(Seq(col("cent_id"), col(idCol)) ++ cb.idxCols(scoreDecimals, l2 = false) ++ carry: _*)
+    pqPackedFinal(s2, idCol, cb.m, tiny,
+      xn = sqrt((0 until cb.m).map(cb.n2).reduce(_ + _)), refine, payload)
+  }
 
   /** Shared tail of the packed encodes: `__pq__` rank packing (tinyint
-    * −128 offset / smallint — the stored encodings, byte-identical to
-    * the former transform-over-collect_list), `__xn__`, the refine
-    * triple split out of its staged quantize struct, and the LEGACY
-    * column order of the former join-built frames (id first when
-    * refine/payload are present) so packed and join-built layouts stay
-    * schema-identical.
+    * −128 offset / smallint — the stored encodings; a subspace's rank
+    * IS the kernel's winner position `__bi{s}__`), `__xn__`, the
+    * refine triple split out of its staged quantize struct, and the
+    * stored column order (id first when refine/payload are present),
+    * which stores built before the packed encode also carry.
     */
   private def pqPackedFinal(
       s2: DataFrame,
       idCol: String,
-      pc: Similarity.PackedCodebook,
+      m: Int,
       tiny: Boolean,
       xn: org.apache.spark.sql.Column,
       refine: Boolean,
       payload: Seq[String]
   ): DataFrame = {
-    val cis = (0 until pc.m).map(pc.ci)
+    val cis = (0 until m).map(s => col(s"__bi${s}__"))
     val ranks =
       if (tiny) array(cis.map(c => (c - 128).cast("tinyint")): _*)
       else array(cis.map(_.cast("smallint")): _*)
@@ -907,57 +730,6 @@ object IvfIndex {
   private def int8TripleStruct(vec: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     graft.internal.exprColumn(graft.plans.Int8QuantizeExpr(
       graft.internal.columnExpr(vec.cast("array<double>"))))
-
-  /** Fallback-path extras: the former id-joins for the refine triple
-    * and carried payload, applied to a shuffled-encode result.
-    */
-  private def withJoinedExtras(
-      base: DataFrame,
-      routed: DataFrame,
-      idCol: String,
-      refine: Boolean,
-      payload: Seq[String]
-  ): DataFrame = {
-    val r1 = if (!refine) base else base.join(refineTriple(routed, idCol), Seq(idCol))
-    if (payload.isEmpty) r1
-    else r1.join(routed.select((col("row_id").as(idCol) +: payload.map(col)): _*), Seq(idCol))
-  }
-
-  /** The pre-r19-opt shuffled raw encode — the fallback for codebooks
-    * the packed path can't take (see [[Similarity.packCodebook]]).
-    */
-  private def pqCellRowsShuffled(
-      cb: DataFrame,
-      routed: DataFrame,
-      idCol: String,
-      scoreDecimals: Int,
-      tiny: Boolean
-  ): DataFrame = {
-    val mk = cb.groupBy()
-      .agg(max(col("sub_id")).as("m"), max(size(col("__cbv__"))).as("sub")).head()
-    val m = mk.getInt(0) + 1
-    val dims = m * mk.getInt(1)
-    val codes = Similarity.pqEncode(
-      routed.select(col("row_id").as(idCol), col("__rowv__")),
-      cb, idCol, "__rowv__", dims, m, scoreDecimals)
-    // rank encoding: ranks < ksub always fit smallint (<= 32767 by
-    // buildPq's contract); at ksub <= 256 they store as tinyint with
-    // a fixed -128 offset (0..255 -> -128..127) — half the payload
-    // again, on disk AND through every scoring join the codes ride
-    val rankArr = transform(
-      array_sort(collect_list(struct(col("sub_id"), col("__ci__")))), x => x("__ci__"))
-    val pqArr =
-      if (tiny) transform(rankArr, r => r - 128).cast("array<tinyint>")
-      else rankArr.cast("array<smallint>")
-    val packed = codes
-      .join(cb.select(col("sub_id"), col("cent_id").as("code_id"),
-        col("__ci__"), col("__cbn2__")), Seq("sub_id", "code_id"))
-      .groupBy(col(idCol))
-      .agg(pqArr.as("__pq__"), sqrt(sum(col("__cbn2__"))).as("__xn__"))
-    routed.select(col("cent_id"), col("row_id").as(idCol))
-      .join(packed, Seq(idCol))
-      .select(col("cent_id"), col(idCol), col("__pq__"), col("__xn__"))
-  }
 
   /** (id, __pq__, __xn__, reconstructed vector) back OUT of a PQ
     * layout: each code rank looks up its codeword and the subvectors
@@ -1306,18 +1078,16 @@ object IvfIndex {
         // conform to the STORE's rank encoding (tinyint-offset vs
         // smallint), recovered from the stored element type — an
         // append must never mix widths into one cell layout
-        val cb = broadcast(spark.read.parquet(s"$path/$CodebooksDir"))
-        val meta = readPqMeta(spark, path)
-        if (meta.exists(_._4)) {
+        val cb = Similarity.PqCodebook.collect(spark.read.parquet(s"$path/$CodebooksDir"))
+        if (layoutIsResidual(spark, path))
           // residual store: residual vs the FROZEN cell centroid,
           // L2-encoded under the FROZEN codebooks — the append is the
           // one maintenance path that re-derives residual codes, and
           // it does so from original float vectors, so the coupling
           // contract (see buildPqResidual) holds
-          val (m0, _, sub0, _) = meta.get
           pqCellRowsResidual(cb, routed, cents, idCol, scoreDecimals,
-            pqCodesTiny(layoutSchema), m0 * sub0, m0, refine, payload)
-        } else
+            pqCodesTiny(layoutSchema), refine, payload)
+        else
           pqCellRows(cb, routed, idCol, scoreDecimals, pqCodesTiny(layoutSchema),
             refine, payload)
       } else
@@ -2568,8 +2338,8 @@ object IvfIndex {
     try {
       val total = truth.count()
       // independent per-nprobe serves overlapped, results in declared
-      // order (r20 opt, guide §2.6 — see [[Similarity.concurrently]])
-      val rows = Similarity.concurrently(nprobes) { nprobe =>
+      // order (r20 opt, guide §2.6 — see [[graft.Cleanup.concurrently]])
+      val rows = graft.Cleanup.concurrently(nprobes) { nprobe =>
         val served = searchTopK(spark, path, queries, idCol, vecCol, k, nprobe,
           scoreDecimals, filter, refine)
           .select(col("query_id"), col("neighbor_id"))
@@ -2809,7 +2579,7 @@ object IvfIndex {
       // downstream routing reference plans against a literal relation
       val centDf = spark.read.parquet(s"$path/$CentroidsDir")
       val centRows = centDf.collect()
-      val cents = compactRows(spark, centRows, centDf.schema)
+      val cents = broadcast(spark.createDataFrame(java.util.Arrays.asList(centRows: _*), centDf.schema))
       val nlist = centRows.length
       val cap = if (maxProbe > 0) math.min(maxProbe, nlist) else nlist
       val qNz = Similarity.dropZeroVectors(queries, vecCol)

@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -650,7 +651,6 @@ object Similarity {
     }
     var cents =
       if (cleanInit) {
-        import org.apache.spark.sql.types._
         import scala.jdk.CollectionConverters._
         val idType = initSrc.schema(initSrc.schema.fieldIndex(idCol)).dataType
         val initSchema = StructType(Seq(
@@ -681,7 +681,7 @@ object Similarity {
           .withColumn("__cbn__", norm(col("__cbv__"))))
       }
     for (i <- 1 to iters) {
-      val assigned = pqRank1(ex, cents, idCol, scoreDecimals, l2)
+      val assigned = pqRank1(ex, PqCodebook.collect(cents), scoreDecimals, l2)
       cents = broadcast(assigned
         .select(col("sub_id"), col("cent_id"), posexplode(col("__sv__")).as(Seq("__dim__", "__v__")))
         .groupBy(col("sub_id"), col("cent_id"), col("__dim__"))
@@ -695,240 +695,206 @@ object Similarity {
     broadcast(cents.withColumn("__cbn2__", dot(col("__cbv__"), col("__cbv__"))))
   }
 
-  /** One collected codeword of the PACKED rank-1 encode (r19 opt):
-    * `(draw id, stored rank, codeword vector, norm, squared norm)` —
-    * the per-subspace literal array the packed argmax scans per row.
+  /** One collected codeword: `(draw id, codeword vector, norm,
+    * squared norm)` — the id as the collected external value of the
+    * codebook's id type (null allowed).
     */
-  private[pipeline] final case class PqCw(id: Long, ci: Int, v: Seq[Double], n: Double, n2: Double)
+  private[pipeline] final case class PqCw(id: Any, v: Array[Double], n: Double, n2: Double)
 
-  /** Collect a stored-schema codebook frame's rows into per-subspace
-    * [[PqCw]] arrays for the packed encode — `None` when the shape
-    * can't take the packed path (non-integral draw ids, a legacy
-    * sidecar lacking `__ci__`/`__cbn2__`, or a Long.MinValue id whose
-    * negation would overflow the tiebreak), in which case callers keep
-    * the shuffled explode/join/window pipeline. The collect is bounded
-    * by m·ksub — the same frame [[pqSearch]] already broadcasts whole.
+  /** A collected codebook: per-subspace [[PqCw]] arrays, each sorted by
+    * draw id in Spark's SQL ascending order (nulls first). A
+    * codeword's POSITION in its subspace is its stored rank `__ci__` —
+    * `row_number() OVER (PARTITION BY sub_id ORDER BY cent_id) - 1` —
+    * and [[graft.plans.PqArgBestExpr]]'s positional tiebreak is the
+    * (metric, id asc) rule, for any orderable id type. The sidecar
+    * frame ([[frame]]) and the packed kernel inputs both come from
+    * this one value; the collect is bounded by m·ksub — the frame
+    * serving broadcasts whole.
     */
-  private[pipeline] def packCodebook(
-      rows: Array[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType
-  ): Option[Array[Array[PqCw]]] = {
-    import org.apache.spark.sql.types._
-    def idx(n: String): Option[Int] = if (schema.fieldNames.contains(n)) Some(schema.fieldIndex(n)) else None
-    val out = for {
-      subI <- idx("sub_id"); idI <- idx("cent_id"); ciI <- idx("__ci__")
-      vI <- idx("__cbv__"); nI <- idx("__cbn__"); n2I <- idx("__cbn2__")
-      integral = schema(idI).dataType match {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      }
-      if integral && rows.nonEmpty && rows.forall(r => !r.isNullAt(idI) && !r.isNullAt(ciI))
-      entries = rows.map { r =>
-        val id = r.get(idI) match {
-          case b: Byte => b.toLong; case s: Short => s.toLong
-          case i: Int => i.toLong; case l: Long => l
-        }
-        (r.getInt(subI), PqCw(id, r.getInt(ciI), r.getSeq[Double](vI), r.getDouble(nI), r.getDouble(n2I)))
-      }
-      if !entries.exists(_._2.id == Long.MinValue)
-      m = entries.map(_._1).max + 1
-      grouped = entries.groupBy(_._1)
-      if (0 until m).forall(grouped.contains)
-    } yield (0 until m).map(s => grouped(s).map(_._2)).toArray
-    out
-  }
+  private[graft] final case class PqCodebook(idType: DataType, subs: Array[Array[PqCw]]) {
+    def m: Int = subs.length
 
-  /** The PACKED rank-1 encode helper (r19 opt): the winning codeword
-    * of every subspace computed per ROW against the driver-collected
-    * codebook — [[graft.plans.PqArgBestExpr]], a codegen'd primitive
-    * loop — instead of explode × codebook-join × window over
-    * n·m·ksub rows. ONE projection chain, zero exchanges; at corpus
-    * scale the encode stops shuffling anything at all (guide §2.4).
-    *
-    * Bit-identical to the shuffled form by construction: the kernel
-    * replays pqRank1's metric arithmetic term for term over the same
-    * staged subvector norms and the same collected codeword doubles,
-    * and applies the same (metric, draw-id) tiebreak with the window
-    * defaults' NaN/null placement — see [[graft.plans.PqArgBestExpr]]'s
-    * contract note.
-    *
-    * Usage: select [[stagedCols]] first (slices + norms hoisted so
-    * each computes once per row), then [[idxCols]] (`__bi{s}__`, the
-    * winner positions — ONE kernel eval per (row, subspace)), then
-    * map positions to rank / squared norm / codeword via [[ci]] /
-    * [[n2]] / [[v]] literal lookups.
-    */
-  private[pipeline] final class PackedCodebook(
-      packed: Array[Array[PqCw]],
-      scoreDecimals: Int,
-      l2: Boolean
-  ) {
-    val m: Int = packed.length
-    val sub: Int = packed.head.head.v.length
-    private val ids = packed.map(_.map(_.id))
-    private val vsA = packed.map(_.map(_.v.toArray))
-    private val nsA = packed.map(_.map(_.n))
+    /** Fail fast on a dropped codeword (ADVICE r16): Lloyd drops a
+      * codeword whose cluster empties, and a subspace with fewer than
+      * ksub codewords would silently mis-address the flat ADC LUT
+      * (s*ksub + rank) everywhere downstream.
+      */
+    def requireFull(m: Int, ksub: Int, op: String): Unit =
+      require(this.m == m && subs.forall(_.length == ksub),
+        s"$op: Lloyd training left unequal codeword counts per subspace (expected $m x $ksub, got " +
+          s"${subs.zipWithIndex.map { case (cws, s) => s"sub $s: ${cws.length}" }.mkString(", ")}) " +
+          "- the flat ADC addressing requires exactly ksub codewords in every subspace; " +
+          "lower ksub (an empty cluster means the corpus cannot support this many codewords), " +
+          "reduce iters, or train on more rows")
 
-    /** Slices + their norms, hoisted so each computes once per row
-      * (the norm re-derives the slice expression — twice per row, not
-      * ksub times — because a projection cannot reference its own
+    /** The stored-codebook frame `(sub_id, cent_id, __cbv__, __cbn__,
+      * __cbn2__, __ci__)` as a broadcast literal relation.
+      */
+    def frame(spark: org.apache.spark.sql.SparkSession): DataFrame = {
+      import scala.jdk.CollectionConverters._
+      val schema = StructType(Seq(
+        StructField("sub_id", IntegerType, nullable = false),
+        StructField("cent_id", idType),
+        StructField("__cbv__", ArrayType(DoubleType)),
+        StructField("__cbn__", DoubleType),
+        StructField("__cbn2__", DoubleType),
+        StructField("__ci__", IntegerType, nullable = false)))
+      val rows = for {
+        (cws, s) <- subs.toSeq.zipWithIndex
+        (c, ci) <- cws.toSeq.zipWithIndex
+      } yield Row(s, c.id, c.v.toSeq, c.n, c.n2, ci)
+      broadcast(spark.createDataFrame(rows.asJava, schema))
+    }
+
+    /** The winner position of `sv` in subspace `subId` (-1: the
+      * subspace has no codeword). `aux` is the staged subvector norm
+      * (cosine) or squared norm (`l2`).
+      */
+    def argBest(sv: Column, aux: Column, subId: Column, scoreDecimals: Int, l2: Boolean): Column =
+      graft.internal.exprColumn(graft.plans.PqArgBestExpr(
+        graft.internal.columnExpr(sv.cast("array<double>")),
+        graft.internal.columnExpr(aux),
+        graft.internal.columnExpr(subId),
+        subs.map(_.map(_.v)), subs.map(_.map(_.n)), scoreDecimals, l2))
+
+    /** Draw id at position `idx` of subspace `subId`, in the codebook's
+      * own id type.
+      */
+    def idAt(subId: Column, idx: Column): Column =
+      element_at(element_at(graft.internal.exprColumn(
+        org.apache.spark.sql.catalyst.expressions.Literal.create(
+          subs.toSeq.map(_.toSeq.map(_.id)), ArrayType(ArrayType(idType)))),
+        subId + 1), idx + 1)
+
+    /** The packed per-row encode, step 1: every subspace's slice of
+      * `vec` and its norm (`l2`: squared norm), hoisted so each
+      * computes once per row (a projection cannot reference its own
       * output aliases).
       */
-    def stagedCols(vec: Column): Seq[Column] = (0 until m).flatMap { s =>
-      val svExpr = slice(vec.cast("array<double>"), s * sub + 1, sub)
-      val aux =
-        if (l2) dot(svExpr, svExpr).as(s"__sv2${s}__")
-        else norm(svExpr).as(s"__svn${s}__")
-      Seq(svExpr.as(s"__sv${s}__"), aux)
+    def stagedCols(vec: Column, l2: Boolean): Seq[Column] = {
+      val sub = subs.head.head.v.length
+      (0 until m).flatMap { s =>
+        val svExpr = slice(vec.cast("array<double>"), s * sub + 1, sub)
+        val aux =
+          if (l2) dot(svExpr, svExpr).as(s"__sv2${s}__")
+          else norm(svExpr).as(s"__svn${s}__")
+        Seq(svExpr.as(s"__sv${s}__"), aux)
+      }
     }
 
-    def idxCols: Seq[Column] = (0 until m).map { s =>
+    /** Step 2, over [[stagedCols]]: `__bi{s}__`, subspace `s`'s winner
+      * position — its rank `__ci__` — ONE kernel eval per (row,
+      * subspace).
+      */
+    def idxCols(scoreDecimals: Int, l2: Boolean): Seq[Column] = (0 until m).map { s =>
       val aux = if (l2) col(s"__sv2${s}__") else col(s"__svn${s}__")
-      graft.internal.exprColumn(graft.plans.PqArgBestExpr(
-        graft.internal.columnExpr(col(s"__sv${s}__")),
-        graft.internal.columnExpr(aux),
-        graft.internal.columnExpr(lit(s)),
-        ids, vsA, nsA, scoreDecimals, l2)).as(s"__bi${s}__")
+      argBest(col(s"__sv${s}__"), aux, lit(s), scoreDecimals, l2).as(s"__bi${s}__")
     }
 
-    /** Winner rank (`__ci__`) of subspace `s` — a literal lookup. */
-    def ci(s: Int): Column =
-      element_at(typedLit(packed(s).map(_.ci).toSeq), col(s"__bi${s}__") + 1)
-
-    /** Winner stored squared norm (`__cbn2__`) of subspace `s`. */
+    /** Subspace `s`'s winner squared norm (`__cbn2__`) — a literal lookup. */
     def n2(s: Int): Column =
-      element_at(typedLit(packed(s).map(_.n2).toSeq), col(s"__bi${s}__") + 1)
+      element_at(typedLit(subs(s).toSeq.map(_.n2)), col(s"__bi${s}__") + 1)
 
-    /** Winner codeword vector (`__cbv__`) of subspace `s`. */
+    /** Subspace `s`'s winner codeword (`__cbv__`) — a literal lookup. */
     def v(s: Int): Column =
-      element_at(typedLit(packed(s).map(_.v).toSeq), col(s"__bi${s}__") + 1)
+      element_at(typedLit(subs(s).toSeq.map(_.v.toSeq)), col(s"__bi${s}__") + 1)
+  }
+
+  private[graft] object PqCodebook {
+
+    /** Collect a codebook frame `(sub_id, cent_id, __cbv__, __cbn__,
+      * ...)` — a fitted one, or a stored sidecar read back (whose own
+      * `__ci__`/`__cbn2__` are re-derived, never trusted). Every
+      * subspace `0 until m` must hold a codeword.
+      */
+    def collect(cb: DataFrame): PqCodebook = {
+      val (idType, groups) =
+        collectCodewords(cb, col("sub_id").cast("int"), col("cent_id"), col("__cbv__"), col("__cbn__"))
+      val bySub = groups.toMap
+      val m = if (groups.isEmpty) 0 else groups.map(_._1.asInstanceOf[Int]).max + 1
+      require(groups.forall(_._1.asInstanceOf[Int] >= 0) && (0 until m).forall(bySub.contains),
+        s"PQ codebook must hold codewords for every subspace 0 until $m, " +
+          s"got sub_ids ${groups.map(_._1).mkString(", ")}")
+      PqCodebook(idType, (0 until m).map(bySub).toArray)
+    }
+
+    /** A centroid frame `(cent_id, __cv__, __cn__)` as a one-subspace
+      * codebook — the [[ivfAssign]] rank-1 route.
+      */
+    def ofCentroids(cents: DataFrame): PqCodebook = {
+      val (idType, groups) = collectCodewords(cents, lit(0), col("cent_id"), col("__cv__"), col("__cn__"))
+      PqCodebook(idType, Array(groups.headOption.map(_._2).getOrElse(Array.empty[PqCw])))
+    }
+  }
+
+  /** ONE collect of `(key, id, vector, norm)` rows, sorted on the
+    * driver by (key, id) in Spark's own SQL ascending order (Catalyst's
+    * natural ordering over the converted values, nulls first — the
+    * window default) and grouped by key in that order. Returns the id
+    * type and the per-key codeword arrays. Adds no Spark job: the sort
+    * runs over rows the collect already returns.
+    */
+  private def collectCodewords(
+      df: DataFrame,
+      key: Column,
+      id: Column,
+      v: Column,
+      n: Column
+  ): (DataType, Seq[(Any, Array[PqCw])]) = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.RowOrdering
+    val sel = df.select(key.as("k"), id.as("id"), v.cast("array<double>").as("v"), n.as("n"))
+    val keySchema = StructType(sel.schema.fields.take(2))
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(keySchema)
+    val ord = RowOrdering.createNaturalAscendingOrdering(keySchema.map(_.dataType))
+    val sorted = sel.collect()
+      .map(r => toCatalyst(Row(r.get(0), r.get(1))).asInstanceOf[InternalRow] -> r)
+      .sortBy(_._1)(ord)
+      .map(_._2)
+    val groups = scala.collection.mutable.LinkedHashMap.empty[Any, Vector[PqCw]]
+    sorted.foreach { r =>
+      val cv = r.getSeq[Double](2).toArray
+      val cw = PqCw(r.get(1), cv, r.getDouble(3), graft.plans.PqArgBestExpr.selfDot(cv))
+      groups.update(r.get(0), groups.getOrElse(r.get(0), Vector.empty) :+ cw)
+    }
+    (keySchema(1).dataType, groups.toSeq.map { case (k, cws) => k -> cws.toArray })
   }
 
   /** Rank-1 codeword assignment for one exploded (row, sub_id, __sv__)
-    * frame — the step shared by PQ training and [[pqEncode]]. Two
-    * metrics behind one deterministic contract:
+    * frame — the step shared by PQ training and [[pqEncode]]: the
+    * per-(row, subspace) winner of a [[graft.plans.PqArgBestExpr]]
+    * argmax over the collected codebook, one projection with zero
+    * exchanges. Two metrics behind one deterministic contract:
     *
     *  - cosine (`l2 = false`, the raw-vector mode): (rounded cosine
-    *    desc, cent_id asc) — byte-identical to the pre-r17 inline
-    *    form;
+    *    desc, cent_id asc);
     *  - squared L2 (`l2 = true`, the RESIDUAL mode): (rounded
     *    |sv − cbv|² asc, cent_id asc), expanded as
-    *    `dot(sv,sv) − 2·dot(sv,cbv) + dot(cbv,cbv)` — three native
-    *    codegen'd dots, no per-element lambda, and the exact IEEE
+    *    `dot(sv,sv) − 2·dot(sv,cbv) + dot(cbv,cbv)` — the exact IEEE
     *    expression an external engine replays term-for-term.
     *    Residuals NEED l2: a residual can be exactly zero (every
     *    coarse centroid's own row), and zero-vector cosine is 0/0 —
     *    null in Spark but NaN in DuckDB, ranked at OPPOSITE ends of a
     *    desc window. L2 has no division, so the degenerate class
     *    vanishes instead of needing a filter.
+    *
+    * An empty codebook assigns nothing (no rows), as an inner join
+    * against it would.
     */
   private def pqRank1(
       ex: DataFrame,
-      cents: DataFrame,
-      idCol: String,
+      cb: PqCodebook,
       scoreDecimals: Int,
       l2: Boolean
-  ): DataFrame = pqRank1Packed(ex, cents, scoreDecimals, l2).getOrElse {
-    if (!l2) {
-      val w = Window.partitionBy(col(idCol), col("sub_id"))
-        .orderBy(col("__psim__").desc, col("cent_id").asc)
-      ex
-        .withColumn("__svn__", norm(col("__sv__")))
-        .join(cents, Seq("sub_id"))
-        .withColumn("__psim__",
-          round(dot(col("__sv__"), col("__cbv__")) / (col("__svn__") * col("__cbn__")), scoreDecimals))
-        .withColumn("__pr__", row_number().over(w))
-        .where(col("__pr__") === 1)
-    } else {
-      val w = Window.partitionBy(col(idCol), col("sub_id"))
-        .orderBy(col("__pd__").asc, col("cent_id").asc)
-      ex
-        .withColumn("__sv2__", dot(col("__sv__"), col("__sv__")))
-        .join(cents.withColumn("__cbn2a__", dot(col("__cbv__"), col("__cbv__"))), Seq("sub_id"))
-        .withColumn("__pd__",
-          round(col("__sv2__") - lit(2.0) * dot(col("__sv__"), col("__cbv__")) + col("__cbn2a__"),
-            scoreDecimals))
-        .withColumn("__pr__", row_number().over(w))
-        .where(col("__pr__") === 1)
-        .drop("__sv2__", "__cbn2a__", "__pd__")
-    }
-  }
-
-  /** The PACKED form of [[pqRank1]] (r19 opt): the per-(row, subspace)
-    * winning codeword as an argmax over the COLLECTED codebook — one
-    * projection over the exploded frame instead of a ksub-fold
-    * codebook join plus a per-(row, sub) window sort. This is the step
-    * every Lloyd training iteration and every [[pqEncode]] pays, so at
-    * corpus scale it removes the largest shuffle+sort of each PQ fit.
-    * `None` (→ shuffled fallback) for codebooks the packed path can't
-    * take: non-integral draw ids or a Long.MinValue id.
-    *
-    * Bit-identical to the window form: same staged subvector norm /
-    * squared norm, the same rounded metric expression (the l2 branch's
-    * codeword squared norm is computed driver-side by the same
-    * left-to-right accumulation as [[graft.plans.DotProductExpr]] —
-    * IEEE double arithmetic is engine-independent), and the same
-    * (metric, id) tiebreak with the same NaN/null placement (see
-    * [[pqPackedWinners]]'s comparator note). The collect is bounded by
-    * m·ksub — the frame every consumer already broadcasts whole; the
-    * per-iteration collect also REPLACES the compactCentroids
-    * plan-depth relief (each iteration now trains from a literal).
-    */
-  private def pqRank1Packed(
-      ex: DataFrame,
-      cents: DataFrame,
-      scoreDecimals: Int,
-      l2: Boolean
-  ): Option[DataFrame] = {
-    import org.apache.spark.sql.types._
-    val schema = cents.schema
-    val need = Seq("sub_id", "cent_id", "__cbv__", "__cbn__")
-    if (!need.forall(schema.fieldNames.contains)) return None
-    val idI = schema.fieldIndex("cent_id")
-    val integral = schema(idI).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    if (!integral) return None
-    val rows = cents
-      .select(col("sub_id"), col("cent_id").cast("long"),
-        col("__cbv__").cast("array<double>"), col("__cbn__")).collect()
-    if (rows.isEmpty || rows.exists(r => r.isNullAt(1) || r.getLong(1) == Long.MinValue)) return None
-    val bySub = rows.groupBy(_.getInt(0))
-    val m = bySub.keysIterator.max + 1
-    if (!(0 until m).forall(bySub.contains)) return None
-    // the l2 metric's codeword squared norm, by the same left-to-right
-    // accumulation as DotProductExpr (the value the shuffled form
-    // computes fresh per join row) — IEEE doubles, engine-independent
-    def dotLR(a: Seq[Double]): Double = {
-      var s = 0.0d; var i = 0
-      while (i < a.length) { s += a(i) * a(i); i += 1 }
-      s
-    }
-    val packed: Seq[Seq[PqCw]] = (0 until m).map { s =>
-      bySub(s).toSeq.map { r =>
-        val v = r.getSeq[Double](2)
-        PqCw(r.getLong(1), -1, v, r.getDouble(3), dotLR(v))
-      }
-    }
-    val ids = packed.map(_.map(_.id).toArray).toArray
-    val vsA = packed.map(_.map(_.v.toArray).toArray).toArray
-    val nsA = packed.map(_.map(_.n).toArray).toArray
-    val allIds = typedLit(packed.map(_.map(_.id)))
+  ): DataFrame = {
+    if (cb.m == 0) return ex.where(lit(false)).withColumn("cent_id", lit(null).cast(cb.idType))
     val staged =
       if (!l2) ex.withColumn("__svn__", norm(col("__sv__")))
       else ex.withColumn("__sv2__", dot(col("__sv__"), col("__sv__")))
     val aux = if (l2) col("__sv2__") else col("__svn__")
-    val idx = graft.internal.exprColumn(graft.plans.PqArgBestExpr(
-      graft.internal.columnExpr(col("__sv__")),
-      graft.internal.columnExpr(aux),
-      graft.internal.columnExpr(col("sub_id").cast("int")),
-      ids, vsA, nsA, scoreDecimals, l2))
-    val out = staged.withColumn("__bi__", idx)
-      .withColumn("cent_id",
-        element_at(element_at(allIds, col("sub_id") + 1), col("__bi__") + 1))
+    staged.withColumn("__bi__", cb.argBest(col("__sv__"), aux, col("sub_id").cast("int"), scoreDecimals, l2))
+      .withColumn("cent_id", cb.idAt(col("sub_id"), col("__bi__")))
       .drop("__bi__", "__sv2__")
-    Some(out)
   }
 
   /** PQ codes: one `(idCol, sub_id, code_id)` row per (vector,
@@ -946,13 +912,26 @@ object Similarity {
       m: Int,
       scoreDecimals: Int = 4,
       l2: Boolean = false
+  ): DataFrame =
+    pqCodes(df, PqCodebook.collect(codebook), idCol, vecCol, dims, m, scoreDecimals, l2)
+
+  /** [[pqEncode]] under an already-collected codebook. */
+  private def pqCodes(
+      df: DataFrame,
+      cb: PqCodebook,
+      idCol: String,
+      vecCol: String,
+      dims: Int,
+      m: Int,
+      scoreDecimals: Int,
+      l2: Boolean
   ): DataFrame = {
     val sub = dims / m
     val subsArr = array((0 until m).map(s =>
       slice(col(vecCol).cast("array<double>"), s * sub + 1, sub)): _*)
     val exploded = df
       .select(col(idCol), posexplode(subsArr).as(Seq("sub_id", "__sv__")))
-    pqRank1(exploded, codebook, idCol, scoreDecimals, l2)
+    pqRank1(exploded, cb, scoreDecimals, l2)
       .select(col(idCol), col("sub_id"), col("cent_id").as("code_id"))
   }
 
@@ -1032,8 +1011,10 @@ object Similarity {
     * `persist` (the serving default) those frames materialize to
     * MEMORY_AND_DISK so each query batch reads the encoded corpus
     * from cache instead of re-running encode; `persist = false`
-    * keeps the model fully lazy for single-shot plans (and for the
-    * oracle, which must replay the whole fit).
+    * keeps those frames lazy for single-shot plans (and for the
+    * oracle, which must replay the whole fit). The codebooks are
+    * collected at fit time either way (m·ksub rows) and the model
+    * carries them as a literal [[PqCodebook]] frame.
     *
     * At 100 TB: fit on the full corpus (encode is one scan; training
     * can subsample via [[Sampling.deterministicSample]] upstream),
@@ -1078,32 +1059,26 @@ object Similarity {
   ): PqModel = {
     import org.apache.spark.storage.StorageLevel
     val corpusNz = dropZeroVectors(corpus, vecCol)
-    // the model frames (nlist + m*ksub rows) persist too in serving
-    // mode: the LUT of EVERY search joins the codebook frame, whose
-    // lineage is the whole iterative Lloyd training — uncached, each
-    // query batch would silently retrain
+    // the centroid frame persists too in serving mode: every search
+    // routes its queries against it
     var cents = ivfCentroids(corpusNz, idCol, vecCol, resolveNlist(nlist, corpusNz))
     if (residual) return pqFitResidual(corpusNz, cents, idCol, vecCol, dims, m, ksub,
       iters, nprobe, scoreDecimals, persist)
-    var cb = pqCodebooks(corpusNz, idCol, vecCol, dims, m, ksub, iters, scoreDecimals)
+    // ONE collect of the trained codebook (m*ksub rows) feeds the
+    // encode, and the model's codebook frame is its literal relation —
+    // so no search re-runs the Lloyd lineage, and `__ci__` comes with it
+    val cbv = PqCodebook.collect(pqCodebooks(corpusNz, idCol, vecCol, dims, m, ksub, iters, scoreDecimals))
+    // serving mode fails fast if Lloyd dropped a codeword (r17,
+    // ADVICE r16): pqSearch addresses a flat m x ksub LUT. (The lazy
+    // persist=false form stays unchecked by contract — it exists for
+    // single-shot plans the oracle replays relationally, where a
+    // dropped codeword shows up as a gated mismatch instead.)
     if (persist) {
       cents = cents.persist(StorageLevel.MEMORY_AND_DISK)
-      cb = cb.persist(StorageLevel.MEMORY_AND_DISK)
-      // serving mode fails fast if Lloyd dropped a codeword (r17,
-      // ADVICE r16): pqSearch addresses a flat m x ksub LUT, so a
-      // subspace with fewer codewords would silently mis-score every
-      // candidate; the count doubles as the cache warm-up. (The lazy
-      // persist=false form stays uncounted by contract — it exists
-      // for single-shot plans the oracle replays relationally, where
-      // a dropped codeword shows up as a gated mismatch instead.)
-      val counts = cb.groupBy(col("sub_id")).agg(count(lit(1)).as("n")).collect()
-      require(counts.length == m && counts.forall(_.getLong(1) == ksub.toLong),
-        s"pqFit: Lloyd training left unequal codeword counts per subspace " +
-          s"(expected $m x $ksub, got ${counts.map(r => s"sub ${r.getInt(0)}: ${r.getLong(1)}").sorted.mkString(", ")}) " +
-          "- flat ADC addressing requires exactly ksub codewords per subspace; lower ksub, " +
-          "reduce iters, or train on more rows")
+      cbv.requireFull(m, ksub, "pqFit")
     }
-    var codes = pqEncode(corpusNz, cb, idCol, vecCol, dims, m, scoreDecimals)
+    val cb = cbv.frame(corpus.sparkSession)
+    var codes = pqCodes(corpusNz, cbv, idCol, vecCol, dims, m, scoreDecimals, l2 = false)
       .withColumnRenamed(idCol, "neighbor_id")
     var cells = ivfAssignTwoLevel(corpusNz, cents, idCol, vecCol, "neighbor", scoreDecimals)
       .select(col("neighbor_id"), col("cent_id"))
@@ -1118,7 +1093,7 @@ object Similarity {
       .groupBy(col("neighbor_id"))
       .agg(sqrt(sum(col("__cbn2__"))).as("__xn__"))
     if (persist) xnorm = xnorm.persist(StorageLevel.MEMORY_AND_DISK)
-    val persisted = if (persist) Seq(cents, cb, codes, cells, xnorm) else Nil
+    val persisted = if (persist) Seq(cents, codes, cells, xnorm) else Nil
     PqModel(cents, cb, codes, cells, xnorm, dims, m, ksub, nprobe, scoreDecimals,
       residual = false, () => persisted.foreach(_.unpersist()))
   }
@@ -1161,18 +1136,12 @@ object Similarity {
       .join(cents.select(col("cent_id"), col("__cv__")), Seq("cent_id"))
       .select(col("neighbor_id"), col("cent_id"),
         zip_with(col("__neighborv__"), col("__cv__"), (a, b) => a - b).as("__rv__"))
-    var cb = pqCodebooks(resid.select(col("neighbor_id"), col("__rv__")),
-      "neighbor_id", "__rv__", dims, m, ksub, iters, scoreDecimals, l2 = true)
-    if (persist) {
-      cb = cb.persist(StorageLevel.MEMORY_AND_DISK)
-      val counts = cb.groupBy(col("sub_id")).agg(count(lit(1)).as("n")).collect()
-      require(counts.length == m && counts.forall(_.getLong(1) == ksub.toLong),
-        s"pqFit(residual): Lloyd training left unequal codeword counts per subspace " +
-          s"(expected $m x $ksub, got ${counts.map(r => s"sub ${r.getInt(0)}: ${r.getLong(1)}").sorted.mkString(", ")}) " +
-          "- flat ADC addressing requires exactly ksub codewords per subspace; lower ksub, " +
-          "reduce iters, or train on more rows")
-    }
-    var codes = pqEncode(resid, cb, "neighbor_id", "__rv__", dims, m, scoreDecimals, l2 = true)
+    // one collect of the trained codebook, as in the raw fit
+    val cbv = PqCodebook.collect(pqCodebooks(resid.select(col("neighbor_id"), col("__rv__")),
+      "neighbor_id", "__rv__", dims, m, ksub, iters, scoreDecimals, l2 = true))
+    if (persist) cbv.requireFull(m, ksub, "pqFit(residual)")
+    val cb = cbv.frame(corpusNz.sparkSession)
+    var codes = pqCodes(resid, cbv, "neighbor_id", "__rv__", dims, m, scoreDecimals, l2 = true)
     var cellsP = cells
     if (persist) {
       codes = codes.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1194,7 +1163,7 @@ object Similarity {
       .select(col("neighbor_id"),
         norm(zip_with(col("__cv__"), col("__rh__"), (a, b) => a + b)).as("__xn__"))
     if (persist) xnorm = xnorm.persist(StorageLevel.MEMORY_AND_DISK)
-    val persisted = if (persist) Seq(cents, assigned, cb, codes, cellsP, xnorm) else Nil
+    val persisted = if (persist) Seq(cents, assigned, codes, cellsP, xnorm) else Nil
     PqModel(cents, cb, codes, cellsP, xnorm, dims, m, ksub, nprobe, scoreDecimals,
       residual = true, () => persisted.foreach(_.unpersist()))
   }
@@ -1256,12 +1225,11 @@ object Similarity {
           array_sort(collect_list(struct(col("sub_id"), col("code_id"), col("__part__")))),
           x => x("__part__")).as("__lutf__"))
     // code ids are draw ids, not 0..ksub-1 — the flat index is the
-    // code's RANK within its sub's (sub_id, code_id) order, matching
-    // the lut array's sort
-    val wCi = Window.partitionBy(col("sub_id")).orderBy(col("code_id"))
+    // code's RANK `__ci__` within its sub's (sub_id, code_id) order,
+    // matching the lut array's sort (the model's codebook frame is a
+    // [[PqCodebook]] frame, which carries it)
     val codeIdx = model.codebooks
-      .select(col("sub_id"), col("cent_id").as("code_id"))
-      .withColumn("__ci__", row_number().over(wCi) - 1)
+      .select(col("sub_id"), col("cent_id").as("code_id"), col("__ci__"))
     val codesArr = model.codes
       .join(broadcast(codeIdx), Seq("sub_id", "code_id"))
       .groupBy(col("neighbor_id"))
@@ -1337,7 +1305,7 @@ object Similarity {
       // the tail (r20 opt, guide §2.6); `futs.map(_.get())` keeps the
       // declared configs order, and each value is a pure function of
       // its config, so the report is unchanged
-      val rows = concurrently(configs) { case (nlist, nprobe) =>
+      val rows = graft.Cleanup.concurrently(configs) { case (nlist, nprobe) =>
         // clamped to the nonzero corpus count (r17, ADVICE r16):
         // ivfCentroids' limit(nlist) yields fewer cells when the
         // corpus is smaller than nlist, so the unclamped value would
@@ -1355,27 +1323,6 @@ object Similarity {
       rows.toDF("nlist", "nprobe", "resolved_nlist", "probed_fraction", "recall_at_k")
     } finally { truth.unpersist(); () }
   }
-
-  /** Map `items` through `f` on a small thread pool and return the
-    * results in input order — the guide §2.6 overlap-independent-jobs
-    * pattern for the per-config recall serves (each config is its own
-    * chain of Spark actions; serialized, every chain's planning gap
-    * idles the cluster). Exceptions propagate (first failure rethrown
-    * after all tasks settle).
-    */
-  private[pipeline] def concurrently[A, B](items: Seq[A])(f: A => B): Seq[B] =
-    if (items.sizeIs <= 1) items.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(items.size, 4))
-      try {
-        val futs = items.map(a => pool.submit(new java.util.concurrent.Callable[B] {
-          override def call(): B = f(a)
-        }))
-        futs.map(fu =>
-          try fu.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
-      } finally { pool.shutdownNow(); () }
-    }
 
   /** [[recallReport]] for a FITTED quantizer: sweep `nprobes` under
     * one trained centroid frame (a [[kmeansCentroids]] fit — or any
@@ -1425,8 +1372,8 @@ object Similarity {
     try {
       val total = truth.count()
       // independent per-nprobe serves overlapped, results in declared
-      // order (r20 opt, guide §2.6 — see [[concurrently]])
-      val rows = concurrently(nprobes) { nprobe =>
+      // order (r20 opt, guide §2.6 — see [[graft.Cleanup.concurrently]])
+      val rows = graft.Cleanup.concurrently(nprobes) { nprobe =>
         val served = ivfTopK(corpus, queries, idCol, vecCol, k,
           nlist, nprobe, scoreDecimals, centroids = Some(cents))
           .select(col("query_id"), col("neighbor_id"))
@@ -1550,7 +1497,6 @@ object Similarity {
       carryCols: Seq[String] = Nil,
       knownRows: Option[Long] = None
   ): DataFrame = {
-    import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
     import scala.jdk.CollectionConverters._
     val spark = cents0.sparkSession
     val rows = cents0.collect()
@@ -1638,37 +1584,23 @@ object Similarity {
       // the level-1 winner index, selecting that super's member-cell
       // array. Values bit-identical: same metric expressions over
       // the same collected doubles, same comparator semantics (see
-      // PqArgBestExpr's contract note).
-      val liveRows = live.select(col("__sup__"),
-        col("__sv__").cast("array<double>"), col("__sn__")).collect()
-      val memRows = mem.select(col("cent_id").cast("long"),
-        col("__cv__").cast("array<double>"), col("__cn__"),
-        col("__sup__").cast("long")).collect()
-      val supIds = liveRows.map(r => java.lang.Long.parseLong(r.get(0).toString))
-      val supVs = liveRows.map(_.getSeq[Double](1).toArray)
-      val supNs = liveRows.map(_.getDouble(2))
-      val memBySup: Map[Long, Array[org.apache.spark.sql.Row]] = memRows.groupBy(_.getLong(3))
-      val memIds = supIds.map(s => memBySup(s).map(_.getLong(0)))
-      val memVs = supIds.map(s => memBySup(s).map(_.getSeq[Double](1).toArray))
-      val memNs = supIds.map(s => memBySup(s).map(_.getDouble(2)))
+      // PqArgBestExpr's contract note). Both levels' arrays sort by id
+      // (the positional tiebreak); members group per live super, in
+      // the supers' order.
+      val sups = PqCodebook.ofCentroids(
+        live.select(col("__sup__").cast("long").as("cent_id"), col("__sv__").as("__cv__"),
+          col("__sn__").as("__cn__")))
+      val (idType, memGroups) = collectCodewords(mem, col("__sup__").cast("long"), col("cent_id"),
+        col("__cv__"), col("__cn__"))
+      val memBySup = memGroups.toMap
+      val members = PqCodebook(idType, sups.subs.head.map(sup => memBySup(sup.id)))
       val base = df.select(Seq(col(idCol).as(s"${pfx}_id"), col(vecCol).as(s"__${pfx}v__"),
         norm(col(vecCol)).as(s"__${pfx}n__")) ++ carryCols.map(col): _*)
-      val supIdx = graft.internal.exprColumn(graft.plans.PqArgBestExpr(
-        graft.internal.columnExpr(col(s"__${pfx}v__").cast("array<double>")),
-        graft.internal.columnExpr(col(s"__${pfx}n__")),
-        graft.internal.columnExpr(lit(0)),
-        Array(supIds), Array(supVs), Array(supNs), scoreDecimals, l2 = false))
-      val centIdx = graft.internal.exprColumn(graft.plans.PqArgBestExpr(
-        graft.internal.columnExpr(col(s"__${pfx}v__").cast("array<double>")),
-        graft.internal.columnExpr(col(s"__${pfx}n__")),
-        graft.internal.columnExpr(col("__si__")),
-        memIds, memVs, memNs, scoreDecimals, l2 = false))
-      base.withColumn("__si__", supIdx)
-        // preserve the centroid frame's id type (the long literal
-        // lookup would otherwise widen an int cent_id)
-        .withColumn("cent_id",
-          element_at(element_at(typedLit(memIds.map(_.toSeq).toSeq), col("__si__") + 1),
-            centIdx + 1).cast(cents0.schema(idIdx).dataType))
+      val pv = col(s"__${pfx}v__")
+      val pn = col(s"__${pfx}n__")
+      base.withColumn("__si__", sups.argBest(pv, pn, lit(0), scoreDecimals, l2 = false))
+        .withColumn("cent_id", members.idAt(col("__si__"),
+          members.argBest(pv, pn, col("__si__"), scoreDecimals, l2 = false)))
         .drop("__si__")
     }
   }
@@ -1689,41 +1621,18 @@ object Similarity {
   ): DataFrame = {
     // keep=1 PACKED route (r19 opt): rank-1 nearest-centroid is the
     // same per-row argbest the PQ encode runs — one projection over
-    // the collected centroid frame ([[graft.plans.PqArgBestExpr]],
-    // same rounded cosine, same (sim desc, id asc) tiebreak with the
-    // window defaults' NaN/null placement), replacing the
-    // crossJoin × per-row window sort that shuffled the corpus with
-    // its vectors. Non-integral / overflow-risk ids keep the window.
+    // the collected centroid frame as a one-subspace [[PqCodebook]]
+    // (same rounded cosine, same (sim desc, id asc) rule), replacing
+    // the crossJoin × per-row window sort that shuffled the corpus
+    // with its vectors
     if (keep == 1) {
-      import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
-      val sch = cents.schema
-      val ok = Seq("cent_id", "__cv__", "__cn__").forall(sch.fieldNames.contains) &&
-        (sch(sch.fieldIndex("cent_id")).dataType match {
-          case ByteType | ShortType | IntegerType | LongType => true
-          case _ => false
-        })
-      if (ok) {
-        val rows = cents.select(col("cent_id").cast("long"),
-          col("__cv__").cast("array<double>"), col("__cn__")).collect()
-        if (rows.nonEmpty && !rows.exists(r => r.isNullAt(0) || r.getLong(0) == Long.MinValue)) {
-          val ids = rows.map(_.getLong(0))
-          val vs = rows.map(_.getSeq[Double](1).toArray)
-          val ns = rows.map(_.getDouble(2))
-          val base = df.select(Seq(col(idCol).as(s"${pfx}_id"),
-            col(vecCol).as(s"__${pfx}v__"),
-            norm(col(vecCol)).as(s"__${pfx}n__")) ++ carryCols.map(col): _*)
-          val idx = graft.internal.exprColumn(graft.plans.PqArgBestExpr(
-            graft.internal.columnExpr(col(s"__${pfx}v__").cast("array<double>")),
-            graft.internal.columnExpr(col(s"__${pfx}n__")),
-            graft.internal.columnExpr(lit(0)),
-            Array(ids), Array(vs), Array(ns), scoreDecimals, l2 = false))
-          // preserve the centroid frame's id type (the long literal
-          // lookup would otherwise widen an int cent_id)
-          return base.withColumn("cent_id",
-            element_at(typedLit(ids.toSeq), idx + 1)
-              .cast(sch(sch.fieldIndex("cent_id")).dataType))
-        }
-      }
+      val cb = PqCodebook.ofCentroids(cents)
+      val base = df.select(Seq(col(idCol).as(s"${pfx}_id"),
+        col(vecCol).as(s"__${pfx}v__"),
+        norm(col(vecCol)).as(s"__${pfx}n__")) ++ carryCols.map(col): _*)
+      return if (cb.subs.head.isEmpty) base.where(lit(false)).withColumn("cent_id", lit(null).cast(cb.idType))
+      else base.withColumn("cent_id", cb.idAt(lit(0),
+        cb.argBest(col(s"__${pfx}v__"), col(s"__${pfx}n__"), lit(0), scoreDecimals, l2 = false)))
     }
     ivfAssignRanked(df, cents, idCol, vecCol, pfx, keep, scoreDecimals, carryCols)
       .drop("__cr__")

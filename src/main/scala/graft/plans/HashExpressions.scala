@@ -282,7 +282,7 @@ case class WinnowExpr(child: Expression, k: Int, w: Int)
   * machinery dominated the m=8/ksub=256 builds (4M lambda evals per
   * corpus pass at sf0.1; 400M at sf10).
   *
-  * Bit-identical to the window/argmax forms it stands in for:
+  * Replays the SQL rank `row_number() OVER (ORDER BY metric, id ASC)`:
   *  - the metric replays the expression arithmetic term for term —
   *    cosine `round(dot / (aux * |cw|), dec)` with `aux` the staged
   *    subvector norm, L2 `round((aux - 2·dot) + |cw|², dec)` with
@@ -292,7 +292,9 @@ case class WinnowExpr(child: Expression, k: Int, w: Int)
   *    Spark's own Round recipe for doubles —
   *    `BigDecimal.valueOf(x).setScale(dec, HALF_UP)` with NaN/Inf
   *    passed through;
-  *  - the tiebreak is (metric best, then draw id ascending); a null
+  *  - the id tiebreak is POSITIONAL: callers pass each subspace's
+  *    codewords sorted by id in Spark's SQL ascending order (nulls
+  *    first), so the first strictly better codeword wins. A null
   *    metric orders SMALLEST exactly like the window defaults (desc
   *    NULLS LAST → loses under cosine-max; asc NULLS FIRST → wins
   *    under L2-min) and NaN orders largest, NaN == NaN
@@ -301,17 +303,17 @@ case class WinnowExpr(child: Expression, k: Int, w: Int)
   *    can never emit).
   *
   * Children: (subvector: array<double>, aux: double, subId: int).
-  * The codebook rides the expression as driver data (one entry array
-  * per subspace, bounded by m·ksub — the frame serving broadcasts
-  * whole) and lands on executors inside the serialized plan, exactly
-  * like a literal. Returns the winner's position in `ids(subId)`;
-  * callers map the index to rank/norm/codeword via literal lookups.
+  * The codebook rides the expression as driver data (one codeword
+  * array per subspace, bounded by m·ksub — the frame serving
+  * broadcasts whole) and lands on executors inside the serialized
+  * plan, exactly like a literal. Returns the winner's position in
+  * `vs(subId)` — -1 when that subspace has no codeword; callers map
+  * the index to id/norm/codeword via literal lookups.
   */
 case class PqArgBestExpr(
     sv: Expression,
     aux: Expression,
     subId: Expression,
-    ids: Array[Array[Long]],
     vs: Array[Array[Array[Double]]],
     ns: Array[Array[Double]],
     dec: Int,
@@ -334,13 +336,9 @@ case class PqArgBestExpr(
   override def nullable: Boolean = false
   override def prettyName: String = "graft_pq_argbest"
 
-  // L2 codeword squared norms: the same left-to-right self-dot the
-  // shuffled form computes per join row (IEEE doubles — deterministic)
-  private lazy val n2s: Array[Array[Double]] = vs.map(_.map { v =>
-    var s = 0.0d; var i = 0
-    while (i < v.length) { s += v(i) * v(i); i += 1 }
-    s
-  })
+  // L2 codeword squared norms: the same left-to-right self-dot as
+  // `dot(cbv, cbv)` in SQL (IEEE doubles — deterministic)
+  private lazy val n2s: Array[Array[Double]] = vs.map(_.map(PqArgBestExpr.selfDot))
 
   private def roundHalfUp(x: Double): Double =
     if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
@@ -359,14 +357,14 @@ case class PqArgBestExpr(
     if (svA == null) throw new IllegalArgumentException(
       "graft_pq_argbest: null subvector - callers must drop null/zero vectors " +
         "(Similarity.dropZeroVectors) before the packed encode")
-    val idsS = ids(s); val vsS = vs(s); val nsS = ns(s); val n2sS = n2s(s)
+    if (s < 0 || s >= vs.length || vs(s).isEmpty) return -1
+    val vsS = vs(s); val nsS = ns(s); val n2sS = n2s(s)
     val n = svA.numElements()
     var bi = 0
     var bNull = true
     var bMet = 0.0d
-    var bId = 0L
     var j = 0
-    while (j < idsS.length) {
+    while (j < vsS.length) {
       val cw = vsS(j)
       var d = 0.0d
       var isNull = n != cw.length
@@ -391,7 +389,6 @@ case class PqArgBestExpr(
           else met = roundHalfUp(d / div)
         } else met = roundHalfUp((aux - 2.0d * d) + n2sS(j))
       }
-      val id = idsS(j)
       val better =
         if (j == 0) true
         else {
@@ -401,10 +398,9 @@ case class PqArgBestExpr(
             else if (metNull) -1
             else if (bNull) 1
             else java.lang.Double.compare(met, bMet)
-          if (!l2) c > 0 || (c == 0 && id < bId) // max (sim desc, id asc)
-          else c < 0 || (c == 0 && id < bId)     // min (dist asc, id asc)
+          if (!l2) c > 0 else c < 0 // max (sim desc) / min (dist asc)
         }
-      if (better) { bi = j; bNull = metNull; bMet = met; bId = id }
+      if (better) { bi = j; bNull = metNull; bMet = met }
       j += 1
     }
     bi
@@ -422,4 +418,17 @@ case class PqArgBestExpr(
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): PqArgBestExpr =
     copy(sv = f, aux = s, subId = t)
+}
+
+object PqArgBestExpr {
+
+  /** `dot(v, v)` by the same left-to-right accumulation as
+    * [[graft.functions.VectorKernel.dotOrNull]] — the codeword squared
+    * norm, bit-identical to the SQL expression.
+    */
+  def selfDot(v: Array[Double]): Double = {
+    var s = 0.0d; var i = 0
+    while (i < v.length) { s += v(i) * v(i); i += 1 }
+    s
+  }
 }

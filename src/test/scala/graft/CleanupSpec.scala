@@ -55,6 +55,34 @@ class CleanupSpec extends SparkSuite {
     assert(releasedOwned == 112 && Cleanup.pendingCount == 0)
   }
 
+  test("concurrently runs each task under the caller's owner scope and drains before rethrowing") {
+    Cleanup.drainAll() // isolate from other suites
+    val released = new java.util.concurrent.atomic.AtomicInteger(0)
+    val out = Cleanup.scoped("o") {
+      Cleanup.concurrently(Seq(1, 2, 3)) { i =>
+        Cleanup.defer(() => { released.addAndGet(i); () })
+        i * 10
+      }
+    }
+    assert(out == Seq(10, 20, 30), "results come back in input order")
+    assert(Cleanup.pendingCount == 3)
+    Cleanup.drain() // a defer on a pool thread must not escape the scope
+    assert(released.get == 0, "drain() must not release a pool task's owner-scoped handles")
+    Cleanup.drainOwner("o")
+    assert(released.get == 6 && Cleanup.pendingCount == 0)
+    // a failure is rethrown only after every task has settled
+    val finished = new java.util.concurrent.atomic.AtomicInteger(0)
+    val ex = intercept[IllegalStateException] {
+      Cleanup.concurrently(Seq(0, 1, 2)) { i =>
+        if (i == 0) throw new IllegalStateException("boom")
+        Thread.sleep(200)
+        finished.incrementAndGet()
+      }
+    }
+    assert(ex.getMessage == "boom")
+    assert(finished.get == 2, "every task drains before the first failure is rethrown")
+  }
+
   test("checkpoint-releasing conveniences are fragile-tier: drain() leaves frames usable (ADVICE r12)") {
     val s = spark; import s.implicits._
     Cleanup.drainAll() // isolate from other suites

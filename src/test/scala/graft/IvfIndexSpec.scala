@@ -540,6 +540,34 @@ class IvfIndexSpec extends SparkSuite {
     assert(ex.getMessage.contains("codeword counts"), s"unexpected: ${ex.getMessage}")
   }
 
+  test("PQ codebook sidecar: __ci__ is the SQL row_number rank for long and string ids, raw and residual") {
+    import org.apache.spark.sql.expressions.Window
+    val byType = Seq("long" -> emb,
+      "string" -> emb.select(col("vec_id").cast("string").as("vec_id"), col("emb")))
+    for ((t, corpus) <- byType; residual <- Seq(false, true)) {
+      val path = tempPath(s"pqcb-$t-$residual")
+      IvfIndex.buildPq(corpus, "vec_id", "emb", path, dims = 64, m = 4, ksub = 8,
+        iters = 1, nlist = 16, residual = residual)
+      val cb = spark.read.parquet(s"$path/_codebooks")
+        .select(col("sub_id"), col("cent_id"), col("__ci__"))
+      assert(cb.schema("cent_id").dataType == corpus.schema("vec_id").dataType,
+        s"$t/$residual: the sidecar keeps the draw-id type")
+      val bad = cb
+        .withColumn("__rn__", row_number().over(Window.partitionBy(col("sub_id")).orderBy(col("cent_id"))) - 1)
+        .where(col("__ci__") =!= col("__rn__"))
+      assert(cb.count() == 32L && bad.isEmpty,
+        s"$t/$residual: stored __ci__ differs from the SQL rank: ${bad.collect().mkString(", ")}")
+      // 500 corpus rows cannot seed 600 codewords per subspace
+      val ex = intercept[IllegalArgumentException] {
+        IvfIndex.buildPq(corpus, "vec_id", "emb", tempPath(s"pqcb-fail-$t-$residual"),
+          dims = 64, m = 4, ksub = 600, iters = 0, nlist = 16, residual = residual)
+      }
+      assert(ex.getMessage.contains("Lloyd training left unequal codeword counts per subspace"),
+        s"unexpected: ${ex.getMessage}")
+    }
+    SparkEntry.runPendingCleanups()
+  }
+
   test("PQ managed lifecycle: catch-up carries codes verbatim so the drain gate holds across the flip (r16)") {
     val s = spark
     val root = java.nio.file.Files.createTempDirectory("graft-ivf-pqmng").toString + "/root"

@@ -938,53 +938,77 @@ class PipelineSpec extends SparkSuite {
     val s = spark; import s.implicits._
     // Subspace 0's codeword 5 is ALL-ZERO — reachable when the init
     // draw lands on an all-zero subvector slice (sparse/padded
-    // embeddings) or a Lloyd mean rounds to exactly zero. The window
-    // form scores round(dot / (svn * cbn), 4) with Spark's Divide,
-    // which returns NULL on a zero divisor; NULL loses under desc
-    // NULLS LAST. Java's d/0.0 in the packed kernel would instead be
-    // NaN (0/0), which the comparator ranks LARGEST — every row would
-    // silently assign to the zero codeword. This A/Bs the packed path
-    // (integral ids) against the shuffled window fallback (decimal ids
-    // force it) over the identical codebook values.
+    // embeddings) or a Lloyd mean rounds to exactly zero. SQL scores
+    // round(dot / (svn * cbn), 4) with Spark's Divide, which returns
+    // NULL on a zero divisor; NULL loses under desc NULLS LAST. Java's
+    // d/0.0 in the packed kernel would instead be NaN (0/0), which the
+    // comparator ranks LARGEST — every row would silently assign to
+    // the zero codeword. Codewords 9 and 10 of subspace 0 are equal (a
+    // tie whose string order, "10" < "9", differs from the numeric
+    // one), and subspace 1's codewords are all parallel, with a null
+    // draw id among them (nulls order first). The same codebook is
+    // keyed by long, decimal and string draw ids, and each encode is
+    // checked against an explode × join × row_number SQL reference.
     val cbRows = Seq(
-      (0, 5L, Seq(0.0, 0.0)), (0, 9L, Seq(1.0, 0.25)),
-      (1, 5L, Seq(0.5, 1.0)), (1, 9L, Seq(0.25, 0.5)))
-    def cbDf(decimalIds: Boolean) = {
-      val base = cbRows.toDF("sub_id", "cent_id", "__cbv__")
-        .withColumn("__cbn__", Similarity.norm(col("__cbv__")))
-      if (decimalIds) base.withColumn("cent_id", col("cent_id").cast("decimal(10,0)"))
-      else base
-    }
+      (0, Option(5L), Seq(0.0, 0.0)), (0, Option(9L), Seq(1.0, 0.25)), (0, Option(10L), Seq(1.0, 0.25)),
+      (1, Option(5L), Seq(0.5, 1.0)), (1, Option(9L), Seq(0.25, 0.5)), (1, Option.empty[Long], Seq(0.5, 1.0)))
+    def cbDf(idType: String) = cbRows.toDF("sub_id", "cent_id", "__cbv__")
+      .withColumn("cent_id", col("cent_id").cast(idType))
+      .withColumn("__cbn__", Similarity.norm(col("__cbv__")))
     val corpus = Seq(
       (1L, Seq(0.3, 0.7, 0.2, 0.9)),
       (2L, Seq(0.8, 0.1, 0.4, 0.6)),
       // a zero SLICE on the row side: every divisor is zero, so every
-      // metric is null and the id-asc tiebreak picks codeword 5 —
-      // identical in both forms
+      // metric is null and the id-asc tiebreak picks the first id
       (3L, Seq(0.0, 0.0, 1.0, 1.0))).toDF("id", "v")
     def enc(cb: org.apache.spark.sql.DataFrame) =
       Similarity.pqEncode(corpus, cb, "id", "v", dims = 4, m = 2)
-        .select(col("id"), col("sub_id"), col("code_id").cast("long").as("code_id"))
-    val packed = enc(cbDf(decimalIds = false))
-    // the shuffled window form divides in SQL, where a zero divisor is
-    // NULL only under non-ANSI semantics (ANSI — the Spark 4 session
-    // default — throws DIVIDE_BY_ZERO instead); the DuckDB oracle also
-    // yields NULL, so non-ANSI IS the documented contract the packed
-    // kernel replays. Flip ANSI off just for the fallback side.
-    val ansiBefore = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    val shuffled =
-      try enc(cbDf(decimalIds = true)).collect()
+    // the reference divides in SQL, where a zero divisor is NULL only
+    // under non-ANSI semantics (ANSI — the Spark 4 session default —
+    // throws DIVIDE_BY_ZERO instead); the DuckDB oracle also yields
+    // NULL, so non-ANSI IS the documented contract the packed kernel
+    // replays. Flip ANSI off just for the reference.
+    def reference(cb: org.apache.spark.sql.DataFrame) = {
+      val sv = col("__sv__")
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("id"), col("sub_id"))
+        .orderBy(col("__psim__").desc, col("cent_id").asc)
+      val ansiBefore = spark.conf.get("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      try corpus
+        .select(col("id"), posexplode(array(slice(col("v"), 1, 2), slice(col("v"), 3, 2)))
+          .as(Seq("sub_id", "__sv__")))
+        .join(cb, Seq("sub_id"))
+        .withColumn("__psim__", round(Similarity.dotExpr(sv, col("__cbv__")) /
+          (sqrt(Similarity.dotExpr(sv, sv)) * col("__cbn__")), 4))
+        .withColumn("__pr__", row_number().over(w))
+        .where(col("__pr__") === 1)
+        .select(col("id"), col("sub_id"), col("cent_id").as("code_id"))
+        .collect()
       finally spark.conf.set("spark.sql.ansi.enabled", ansiBefore)
-    assertSame(packed, spark.createDataFrame(
-      java.util.Arrays.asList(shuffled: _*), packed.schema))
-    // and explicitly: rows with a nonzero slice never assign to the
-    // zero-norm codeword in subspace 0
-    val sub0 = packed.where(col("sub_id") === 0).collect()
-      .map(r => r.getLong(0) -> r.getLong(2)).toMap
-    assert(sub0(1L) == 9L && sub0(2L) == 9L,
-      s"zero-norm codeword must lose for nonzero slices, got $sub0")
-    assert(sub0(3L) == 5L, s"all-null metrics tiebreak by id asc, got $sub0")
+    }
+    def codes(idType: String): Map[(Long, Int), Any] = {
+      val packed = enc(cbDf(idType))
+      assert(packed.schema("code_id").dataType.simpleString == idType,
+        s"code_id must keep the draw-id type $idType, got ${packed.schema("code_id").dataType}")
+      assertSame(packed, spark.createDataFrame(
+        java.util.Arrays.asList(reference(cbDf(idType)): _*), packed.schema))
+      packed.collect().map(r => (r.getLong(0), r.getInt(1)) -> r.get(2)).toMap
+    }
+    val byLong = codes("bigint")
+    // explicitly: rows with a nonzero slice never assign to the
+    // zero-norm codeword in subspace 0, and the 9/10 tie goes to 9
+    assert(byLong((1L, 0)) == 9L && byLong((2L, 0)) == 9L,
+      s"zero-norm codeword must lose for nonzero slices, got $byLong")
+    assert(byLong((3L, 0)) == 5L, s"all-null metrics tiebreak by id asc, got $byLong")
+    assert((1L to 3L).forall(i => byLong((i, 1)) == null), s"a null draw id wins its tie, got $byLong")
+    val byDec = codes("decimal(10,0)")
+    assert(byDec.map { case (k, v) => k -> Option(v).map(_.toString).orNull } ==
+      byLong.map { case (k, v) => k -> Option(v).map(_.toString).orNull },
+      s"decimal ids order numerically, got $byDec")
+    // string ids order as strings: "10" < "5" < "9"
+    val byStr = codes("string")
+    assert((1L to 3L).forall(i => byStr((i, 0)) == "10"), s"string ids tiebreak in string order, got $byStr")
+    assert((1L to 3L).forall(i => byStr((i, 1)) == null), s"a null draw id wins its tie, got $byStr")
   }
 
   test("pqFit/pqSearch: one fit serves many query batches from cache, release drops it") {

@@ -210,6 +210,40 @@ class PlanSpec extends SparkSuite {
       s"label predicate must push into the probed PQ cell scan:\n${scanLine.get}")
   }
 
+  test("PQ encode plans zero exchanges for long, decimal and string draw ids") {
+    // pqEncode and a build's encode frame (pqCellRows) are one packed
+    // projection over the collected codebook for EVERY orderable id
+    // type: the (metric, id asc) tiebreak is the codewords' sorted
+    // position, so no id type needs an explode/join/window shuffle
+    val s = spark; import s.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.pipeline.{IvfIndex, Similarity}
+    // a file source: a local Seq would fold into a LocalRelation
+    val corpusPath = java.nio.file.Files.createTempDirectory("graft-pq-plan").toString + "/corpus"
+    Seq((1L, Seq(0.3, 0.7, 0.2, 0.9)), (2L, Seq(0.8, 0.1, 0.4, 0.6))).toDF("id", "v")
+      .write.parquet(corpusPath)
+    val corpus = s.read.parquet(corpusPath)
+    val cb0 = Seq((0, 5L, Seq(1.0, 0.5)), (0, 9L, Seq(0.2, 1.0)), (1, 5L, Seq(0.5, 1.0)), (1, 9L, Seq(0.25, 0.5)))
+      .toDF("sub_id", "cent_id", "__cbv__")
+      .withColumn("__cbn__", Similarity.norm(col("__cbv__")))
+    Seq("bigint", "decimal(10,0)", "string").foreach { t =>
+      val cb = cb0.withColumn("cent_id", col("cent_id").cast(t))
+      val routed = corpus.select(lit(0L).as("cent_id"), col("id").cast(t).as("row_id"),
+        col("v").as("__rowv__"))
+      val frames = Seq(
+        "pqEncode" -> Similarity.pqEncode(corpus.withColumn("id", col("id").cast(t)), cb, "id", "v",
+          dims = 4, m = 2),
+        "pqCellRows" -> IvfIndex.pqCellRows(Similarity.PqCodebook.collect(cb), routed, "id",
+          scoreDecimals = 4, tiny = true))
+      frames.foreach { case (name, df) =>
+        val plan = df.queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange"), s"$name over $t ids plans an exchange:\n$plan")
+        assert(plan.contains("graft_pq_argbest"), s"$name over $t ids is not the packed kernel:\n$plan")
+      }
+      assert(frames.head._2.count() == 4L && frames(1)._2.count() == 2L)
+    }
+  }
+
   test("IVF routing threshold: below TwoLevelMinNlist the route is FLAT (r15)") {
     // below 64 centroids the two-level machinery is pure fixed
     // overhead (see Similarity.TwoLevelMinNlist) — the switch must
