@@ -50,9 +50,8 @@ object TextAnalysis {
   }
 
   /** Language-ID marker words per language. Deliberately tiny and
-    * deterministic: the score for a language is the number of
-    * occurrences of its markers (space-padded substring matches);
-    * argmax wins, ties broken by the fixed language order.
+    * deterministic: see [[langId]] for the scoring. The table is the
+    * one source of the markers for the kernel and the oracle SQL.
     */
   val langMarkers: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq(" the ", " and ", " of ", " is "),
@@ -62,36 +61,29 @@ object TextAnalysis {
     "zh" -> Seq("的", "是", "了", "在")
   )
 
-  /** Count non-overlapping occurrences of a literal in `t` via the
-    * replace-length trick (portable to any SQL engine).
+  /** Non-overlapping occurrences of a literal in `t`, as a double:
+    * one byte scan of the row ([[graft.plans.CountOccurrencesExpr]]).
+    * Equal on every input, malformed UTF-8 included, to the portable
+    * replace-length form
+    * `(length(t) - length(replace(t, literal, ''))) / length(literal)`
+    * that the DuckDB oracle runs.
     */
   def countOccurrences(t: Column, literal: String): Column =
-    (length(t) - length(regexp_replace(t, java.util.regex.Pattern.quote(literal), ""))) / lit(literal.length)
+    graft.internal.exprColumn(graft.plans.CountOccurrencesExpr(graft.internal.columnExpr(t), literal))
 
-  /** Heuristic language-ID over the marker table; text is padded with
-    * spaces so edge words match.
+  /** Heuristic language ID over [[langMarkers]]. A language's score is
+    * the number of leftmost non-overlapping occurrences of its markers
+    * in `" " + lower(text) + " "` (the padding lets a marker match at
+    * either edge); the first language in table order with the highest
+    * score wins, so text with no marker is `"en"`. Null text is null.
     *
-    * Argmax is `array_position(scores, array_max(scores))` — first
-    * index achieving the max, i.e. first-wins tie-break in table
-    * order. The previous `when`-chain fold re-inlined every earlier
-    * score expression into each later branch; the generated code
-    * blew past janino's 64KB method limit and every task paid a
-    * failed-compile penalty before interpreted fallback. Here each
-    * score expression appears exactly once inside the array.
+    * One codegen'd byte scan per row over Spark's own `lower` output
+    * ([[graft.plans.LangIdExpr]]). It mirrors `OracleSql.langIdSql`,
+    * the replace-length scores and strict-`>` fold the DuckDB oracle
+    * runs, row for row.
     */
-  def langId(text: Column): Column = {
-    val padded = concat(lit(" "), lower(text), lit(" "))
-    val scoreArr = array(langMarkers.map { case (_, ws) =>
-      ws.map(w => countOccurrences(padded, w)).reduce(_ + _)
-    }: _*)
-    val langArr = array(langMarkers.map { case (l, _) => lit(l) }: _*)
-    // explicit null guard: with a null text the all-null score array
-    // reaches array_position(arr, null), which NPEs inside Spark's
-    // own constant-level evaluation (observed on 4.1.2) instead of
-    // returning null
-    when(text.isNotNull,
-      element_at(langArr, array_position(scoreArr, array_max(scoreArr)).cast("int")))
-  }
+  def langId(text: Column): Column =
+    graft.internal.exprColumn(graft.plans.LangIdExpr(graft.internal.columnExpr(lower(text))))
 
   // ---- corpus report ----------------------------------------------
 

@@ -111,6 +111,32 @@ class PlanSpec extends SparkSuite {
     }
   }
 
+  test("q_lang_id: no regex in the optimized plan; one codegen stage runs the projection over the scan") {
+    import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+    import org.apache.spark.sql.execution.{FileSourceScanExec, ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val qe = SparkEntry.queries("q_lang_id")(spark, dir).queryExecution
+    val exprs = qe.optimizedPlan.flatMap(_.expressions)
+    assert(!exprs.exists(_.exists(_.isInstanceOf[RegExpReplace])),
+      s"language id still runs regexp_replace:\n${qe.optimizedPlan}")
+    assert(exprs.exists(_.exists(_.isInstanceOf[graft.plans.LangIdExpr])),
+      s"no LangIdExpr in the optimized plan:\n${qe.optimizedPlan}")
+    val exec = qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p                        => p
+    }
+    val stages = exec.collect { case w: WholeStageCodegenExec => w }
+    assert(stages.size == 1, s"expected one WholeStageCodegen span, got ${stages.size}:\n$exec")
+    val inside = stages.head.child
+    assert(inside.collect { case p: ProjectExec => p }
+      .exists(_.projectList.exists(_.exists(_.isInstanceOf[graft.plans.LangIdExpr]))),
+      s"the language-id projection is not inside the codegen span:\n$exec")
+    assert(inside.collect { case f: FileSourceScanExec => f }.size == 1,
+      s"the codegen span does not sit over the scan:\n$exec")
+    assert(exec.collect { case p: ProjectExec => p }.size ==
+      inside.collect { case p: ProjectExec => p }.size, s"a projection runs outside codegen:\n$exec")
+  }
+
   test("two-level IVF routing: corpus rows cross ONE exchange, broadcast everywhere else (r14)") {
     // ivfAssignTwoLevel's rank-1 is a struct-max AGGREGATION, not a
     // window: map-side combine collapses the n x nsup scored rows

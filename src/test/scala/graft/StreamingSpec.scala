@@ -12,6 +12,26 @@ import graft.streaming.StreamOps.SessionEvent
   */
 class StreamingSpec extends SparkSuite {
 
+  /** Streams ids 200-202 while a managed root's background rebuild
+    * runs, waits for the maintenance thread to finish, then streams
+    * id 203: that batch publishes the finished rebuild on the trigger
+    * thread.
+    */
+  private def tickThroughRebuild(
+      input: MemoryStream[(Long, Array[Double], Long)],
+      q: org.apache.spark.sql.streaming.StreamingQuery,
+      root: String,
+      vec: Int => Array[Double],
+      all: scala.collection.mutable.Map[Long, Array[Double]]): Unit = {
+    def tick(id: Long): Unit = {
+      val v = vec(id.toInt); all(id) = v
+      input.addData((id, v, id)); q.processAllAvailable()
+    }
+    (200L to 202L).foreach { id => tick(id); Thread.sleep(200) }
+    assert(StreamOps.awaitMaintenance(root), "maintenance thread failed to drain")
+    tick(203L)
+  }
+
   test("windowedAverages tumbling event-time windows (batch parity)") {
     val s = spark; import s.implicits._
     val df = Seq(
@@ -211,16 +231,10 @@ class StreamingSpec extends SparkSuite {
       val hot = (100L to 139L).map { i =>
         val v = vec(7).map(_ + (i - 100L) * 1e-4); all(i) = v; (i, v, 1L) }
       input.addData(hot: _*); q.processAllAvailable()
-      // keep ticking until a later batch publishes the finished
-      // rebuild on the trigger thread (id stream continues meanwhile —
-      // the flip must lose none of them)
-      var tick = 200L
-      while (rebuilds.synchronized(rebuilds.isEmpty) && tick < 260L) {
-        val v = vec(tick.toInt); all(tick) = v
-        input.addData((tick, v, tick)); q.processAllAvailable()
-        Thread.sleep(200)
-        tick += 1
-      }
+      // the id stream continues while the rebuild runs, and a later
+      // batch publishes it on the trigger thread — the flip must lose
+      // none of them
+      tickThroughRebuild(input, q, root, vec, all)
     } finally {
       q.stop()
       // drain any in-flight rebuild: a daemon outliving the test would
@@ -269,13 +283,7 @@ class StreamingSpec extends SparkSuite {
       val hot = (100L to 139L).map { i =>
         val v = vec(7).map(_ + (i - 100L) * 1e-4); all(i) = v; (i, v, 1L) }
       input.addData(hot: _*); q.processAllAvailable()
-      var tick = 200L
-      while (rebuilds.synchronized(rebuilds.isEmpty) && tick < 260L) {
-        val v = vec(tick.toInt); all(tick) = v
-        input.addData((tick, v, tick)); q.processAllAvailable()
-        Thread.sleep(200)
-        tick += 1
-      }
+      tickThroughRebuild(input, q, root, vec, all)
     } finally {
       q.stop()
       assert(StreamOps.awaitMaintenance(root), "maintenance thread failed to drain")
@@ -328,13 +336,7 @@ class StreamingSpec extends SparkSuite {
       val hot = (100L to 139L).map { i =>
         val v = vec(7).map(_ + (i - 100L) * 1e-4); all(i) = v; (i, v, 1L) }
       input.addData(hot: _*); q.processAllAvailable()
-      var tick = 200L
-      while (rebuilds.synchronized(rebuilds.isEmpty) && tick < 260L) {
-        val v = vec(tick.toInt); all(tick) = v
-        input.addData((tick, v, tick)); q.processAllAvailable()
-        Thread.sleep(200)
-        tick += 1
-      }
+      tickThroughRebuild(input, q, root, vec, all)
     } finally {
       q.stop()
       assert(StreamOps.awaitMaintenance(root), "maintenance thread failed to drain")
