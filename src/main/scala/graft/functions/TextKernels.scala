@@ -5,124 +5,67 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Leftmost non-overlapping occurrence counts of a fixed set of
-  * literals, all counted in ONE scan of a byte range: each position is
-  * tried only against the literals that start with its byte, and each
-  * literal resumes its own search after its last match. That is
-  * exactly `str.replace(literal, "")`'s match set per literal, so the
-  * counts equal the replace-length trick's on well-formed UTF-8 (a
-  * literal that is itself valid UTF-8 can only match at a character
-  * boundary of valid UTF-8 text).
-  *
-  * Serializable so a per-literal instance can ride along as a codegen
-  * reference object ([[graft.plans.CountOccurrencesExpr]]).
-  */
-final class LiteralCounter(literals: Seq[String]) extends Serializable {
-  private val pats: Array[Array[Byte]] = literals.map(_.getBytes(UTF_8)).toArray
-  require(pats.nonEmpty && pats.forall(_.nonEmpty), s"literals must be non-empty: $literals")
-
-  /** Literal indices by first byte, in table order. */
-  private val byFirst: Array[Array[Int]] = {
-    val t = Array.fill(256)(Array.emptyIntArray)
-    pats.indices.foreach { k => val b = pats(k)(0) & 0xff; t(b) = t(b) :+ k }
-    t
-  }
-
-  /** `counts(k)` = occurrences of literal `k` in the `n` bytes at
-    * `base`/`offset` (Tungsten addressing, as `UTF8String` holds
-    * them). `next` is caller scratch, one slot per literal.
-    */
-  def countInto(base: AnyRef, offset: Long, n: Int, counts: Array[Int], next: Array[Int]): Unit = {
-    java.util.Arrays.fill(counts, 0)
-    java.util.Arrays.fill(next, 0)
-    var i = 0
-    while (i < n) {
-      val cands = byFirst(Platform.getByte(base, offset + i) & 0xff)
-      var c = 0
-      while (c < cands.length) {
-        val k = cands(c)
-        val p = pats(k)
-        if (i >= next(k) && i + p.length <= n) {
-          var j = 1
-          while (j < p.length && Platform.getByte(base, offset + i + j) == p(j)) j += 1
-          if (j == p.length) { counts(k) += 1; next(k) = i + p.length }
-        }
-        c += 1
-      }
-      i += 1
-    }
-  }
-
-  /** Occurrences of the single literal of a one-literal counter. */
-  def count(text: UTF8String): Int = {
-    val counts = new Array[Int](1)
-    countInto(text.getBaseObject, text.getBaseOffset, text.numBytes, counts, new Array[Int](1))
-    counts(0)
-  }
-}
-
-/** Kernel behind [[graft.plans.CountOccurrencesExpr]]: the value of
-  * the replace-length form
-  * `(length(t) - length(regexp_replace(t, quote(literal), ""))) / literal.length`
-  * from one byte scan, without decoding the row. On malformed UTF-8
-  * the replace-length form is not a count — `regexp_replace` decodes
-  * each bad sequence to U+FFFD and re-encodes it, which changes the
-  * character length by itself — so such a row takes that decode and
-  * the same arithmetic, keeping the result bit-identical on any input.
-  */
-object CountKernel {
-
-  def occurrences(text: UTF8String, literal: String, counter: LiteralCounter): Double =
-    if (text.isValid) {
-      val litChars = literal.codePointCount(0, literal.length)
-      (counter.count(text) * litChars).toDouble / literal.length
-    } else {
-      val replaced = UTF8String.fromString(text.toString.replace(literal, ""))
-      (text.numChars - replaced.numChars).toDouble / literal.length
-    }
-}
-
 /** Kernel behind [[graft.plans.LangIdExpr]]: marker-table language ID
   * over lowercased text in one byte scan. A language's score is the
-  * summed count of its markers ([[graft.pipeline.TextAnalysis.langMarkers]])
-  * in `" " + lowered + " "`; the first language in table order with
-  * the highest score wins, so text without markers is the first
-  * language. Mirrors `OracleSql`'s replace-length scores and strict
-  * `>` fold exactly: the input is `Lower`'s output, which is always
-  * valid UTF-8, and every marker is a BMP string.
+  * summed count of leftmost non-overlapping occurrences of its markers
+  * ([[graft.pipeline.TextAnalysis.langMarkers]]) in
+  * `" " + lowered + " "`; the first language in table order with the
+  * highest score wins, so text without markers is the first language.
+  *
+  * Mirrors `OracleSql`'s replace-length scores and strict `>` fold
+  * exactly: the input is `Lower`'s output, which is always valid UTF-8,
+  * and every marker is valid UTF-8, so a marker's bytes can only match
+  * at a character boundary and byte counts equal character counts.
   */
 object LangIdKernel {
 
   private val table = graft.pipeline.TextAnalysis.langMarkers
   private val langs: Array[UTF8String] = table.map { case (l, _) => UTF8String.fromString(l) }.toArray
-  /** Language index of each marker, in counter order. */
+  private val markers: Array[Array[Byte]] = table.flatMap(_._2).map(_.getBytes(UTF_8)).toArray
+  /** Language index of each marker. */
   private val markerLang: Array[Int] =
     table.zipWithIndex.flatMap { case ((_, ws), li) => ws.map(_ => li) }.toArray
-  private val counter = new LiteralCounter(table.flatMap(_._2))
-
-  private final class Scratch {
-    var padded = new Array[Byte](256)
-    val counts = new Array[Int](markerLang.length)
-    val next = new Array[Int](markerLang.length)
-    val scores = new Array[Int](langs.length)
+  /** Marker indices by first byte, in table order. */
+  private val byFirst: Array[Array[Int]] = {
+    val t = Array.fill(256)(Array.emptyIntArray)
+    markers.indices.foreach { k => val b = markers(k)(0) & 0xff; t(b) = t(b) :+ k }
+    t
   }
-  private val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch)
 
+  /** One pass over the padded text: each position is tried only
+    * against the markers that start with its byte, and each marker
+    * resumes its own search after its last match — `replace`'s match
+    * set per marker. The padding is virtual: positions 0 and `n - 1`
+    * read as a space, position `i` in between reads byte `i - 1` of
+    * `lowered`.
+    */
   def langId(lowered: UTF8String): UTF8String = {
-    val s = scratch.get()
+    val base = lowered.getBaseObject
+    val off = lowered.getBaseOffset - 1
     val n = lowered.numBytes + 2
-    if (s.padded.length < n) s.padded = new Array[Byte](math.max(n, s.padded.length * 2))
-    val buf = s.padded
-    buf(0) = ' '
-    lowered.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + 1)
-    buf(n - 1) = ' '
-    counter.countInto(buf, Platform.BYTE_ARRAY_OFFSET, n, s.counts, s.next)
-    java.util.Arrays.fill(s.scores, 0)
-    var k = 0
-    while (k < markerLang.length) { s.scores(markerLang(k)) += s.counts(k); k += 1 }
+    def at(i: Int): Byte = if (i == 0 || i == n - 1) ' ' else Platform.getByte(base, off + i)
+
+    val next = new Array[Int](markers.length)
+    val scores = new Array[Int](langs.length)
+    var i = 0
+    while (i < n) {
+      val cands = byFirst(at(i) & 0xff)
+      var c = 0
+      while (c < cands.length) {
+        val k = cands(c)
+        val p = markers(k)
+        if (i >= next(k) && i + p.length <= n) {
+          var j = 1
+          while (j < p.length && at(i + j) == p(j)) j += 1
+          if (j == p.length) { scores(markerLang(k)) += 1; next(k) = i + p.length }
+        }
+        c += 1
+      }
+      i += 1
+    }
     var best = 0
     var l = 1
-    while (l < langs.length) { if (s.scores(l) > s.scores(best)) best = l; l += 1 }
+    while (l < langs.length) { if (scores(l) > scores(best)) best = l; l += 1 }
     langs(best)
   }
 }

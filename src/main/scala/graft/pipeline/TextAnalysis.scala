@@ -61,15 +61,11 @@ object TextAnalysis {
     "zh" -> Seq("的", "是", "了", "在")
   )
 
-  /** Non-overlapping occurrences of a literal in `t`, as a double:
-    * one byte scan of the row ([[graft.plans.CountOccurrencesExpr]]).
-    * Equal on every input, malformed UTF-8 included, to the portable
-    * replace-length form
-    * `(length(t) - length(replace(t, literal, ''))) / length(literal)`
-    * that the DuckDB oracle runs.
+  /** Count non-overlapping occurrences of a literal in `t` via the
+    * replace-length trick (portable to any SQL engine).
     */
   def countOccurrences(t: Column, literal: String): Column =
-    graft.internal.exprColumn(graft.plans.CountOccurrencesExpr(graft.internal.columnExpr(t), literal))
+    (length(t) - length(regexp_replace(t, java.util.regex.Pattern.quote(literal), ""))) / lit(literal.length)
 
   /** Heuristic language ID over [[langMarkers]]. A language's score is
     * the number of leftmost non-overlapping occurrences of its markers

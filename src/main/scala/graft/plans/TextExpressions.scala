@@ -6,14 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-private object TextExpressions {
-  def requireString(name: String, child: Expression): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(s"$name needs string, got $other")
-    }
-}
-
 /** Codegen'd marker-table language ID over lowercased text — see
   * [[graft.functions.LangIdKernel.langId]]. One byte scan per row, no
   * decode to `String` and no regex, and the projection stays inside
@@ -23,7 +15,10 @@ private object TextExpressions {
 case class LangIdExpr(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    TextExpressions.requireString(prettyName, child)
+    child.dataType match {
+      case StringType => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(s"$prettyName needs string, got $other")
+    }
   override def dataType: DataType = StringType
   override def prettyName: String = "graft_lang_id"
 
@@ -34,33 +29,5 @@ case class LangIdExpr(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.functions.LangIdKernel.langId($c)")
 
   override protected def withNewChildInternal(newChild: Expression): LangIdExpr =
-    copy(child = newChild)
-}
-
-/** Codegen'd count of a literal's non-overlapping occurrences, as a
-  * double — the value of the replace-length form on every input (see
-  * [[graft.functions.CountKernel.occurrences]]). Used by
-  * [[graft.pipeline.TextAnalysis.countOccurrences]].
-  */
-case class CountOccurrencesExpr(child: Expression, literal: String) extends UnaryExpression {
-  require(literal.nonEmpty, "literal must be non-empty")
-
-  @transient private lazy val counter = new graft.functions.LiteralCounter(Seq(literal))
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    TextExpressions.requireString(prettyName, child)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_count_occurrences"
-
-  override protected def nullSafeEval(input: Any): Any =
-    graft.functions.CountKernel.occurrences(input.asInstanceOf[UTF8String], literal, counter)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lit = ctx.addReferenceObj("literal", literal)
-    val cnt = ctx.addReferenceObj("counter", counter)
-    defineCodeGen(ctx, ev, c => s"graft.functions.CountKernel.occurrences($c, $lit, $cnt)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CountOccurrencesExpr =
     copy(child = newChild)
 }

@@ -335,31 +335,28 @@ class PipelineSpec extends SparkSuite {
     assert(got == Map(1L -> "en", 2L -> "es", 3L -> "de"))
   }
 
-  /** The replace-length forms that `TextAnalysis.countOccurrences`
-    * and `TextAnalysis.langId` were before their byte-scan kernels: the
-    * references the kernels are pinned to, row for row.
+  /** The replace-length form that `TextAnalysis.langId` was before
+    * its byte-scan kernel: the reference the kernel is pinned to, row
+    * for row.
     */
-  private def refCountOccurrences(t: org.apache.spark.sql.Column, literal: String) =
-    (length(t) - length(regexp_replace(t, java.util.regex.Pattern.quote(literal), ""))) / lit(literal.length)
-
   private def refLangId(text: org.apache.spark.sql.Column) = {
     val padded = concat(lit(" "), lower(text), lit(" "))
     val scoreArr = array(TextAnalysis.langMarkers.map { case (_, ws) =>
-      ws.map(w => refCountOccurrences(padded, w)).reduce(_ + _)
+      ws.map(w => (length(padded) - length(regexp_replace(padded, java.util.regex.Pattern.quote(w), ""))) /
+        lit(w.length)).reduce(_ + _)
     }: _*)
     val langArr = array(TextAnalysis.langMarkers.map { case (l, _) => lit(l) }: _*)
     when(text.isNotNull,
       element_at(langArr, array_position(scoreArr, array_max(scoreArr)).cast("int")))
   }
 
-  /** ~2,000 seeded rows of marker words (any case), zh markers,
-    * symbols and filler, joined by one or two spaces.
+  /** ~2,000 seeded rows of marker words (any case), zh markers and
+    * filler, joined by one or two spaces.
     */
   private def generatedTexts: Seq[String] = {
     val rnd = new scala.util.Random(20261017)
     val words = TextAnalysis.langMarkers.flatMap(_._2).map(_.trim).distinct ++
-      Seq("cat", "Hund", "casa", "maison", "书", "这里", "THE", "Der", "LA", "Es", "İst", "ÉS",
-        "#", "...", "....", "…", "##", "a#b", "x")
+      Seq("cat", "Hund", "casa", "maison", "书", "这里", "THE", "Der", "LA", "Es", "İst", "ÉS", "x")
     (1 to 2000).map { _ =>
       Seq.fill(rnd.nextInt(12))(words(rnd.nextInt(words.length)))
         .mkString(if (rnd.nextInt(4) == 0) "  " else " ")
@@ -395,39 +392,6 @@ class PipelineSpec extends SparkSuite {
     assert(byText("le chat la") == "fr")
     assert(byText("我的书是在这里了") == "zh")
     assert(byText("DER Hund UND DIE Katze") == "de")
-  }
-
-  test("countOccurrences byte-scan kernel equals the replace-length reference, malformed UTF-8 included") {
-    val s = spark; import s.implicits._
-    def hex(t: String) = t.getBytes("UTF-8").map(b => f"${b & 0xff}%02X").mkString
-    val malformed = Seq(
-      "C3", "C323", "802E2E2E", "EDA08023", "C0AF23", "F09F982E2E2E2E", "F4908080",
-      "FF23", "23C32E2E2E", "E79A", "E79A84C3E79A84")
-    val valid = (Seq("", "#", "##", "...", "....", "......", "a#b...c", "#…...", "的的", "F09F9880")
-      .map(t => if (t.startsWith("F0")) t else hex(t))) ++ generatedTexts.map(hex)
-    val hexes = null +: (malformed ++ valid)
-    val local = hexes.zipWithIndex.map { case (h, i) => (i.toLong, h) }.toDF("id", "hex")
-      .withColumn("text", unhex(col("hex")).cast("string"))
-    val literals = Seq("#", "...", "…", "的")
-    Seq(local, local.repartition(3)).foreach { df =>
-      val cols = literals.flatMap(l =>
-        Seq(refCountOccurrences(col("text"), l), TextAnalysis.countOccurrences(col("text"), l)))
-      val out = df.select(col("id") +: col("hex") +: cols: _*)
-      literals.indices.foreach(k => assert(out.schema(3 + 2 * k).dataType == org.apache.spark.sql.types.DoubleType))
-      val got = out.collect()
-      assert(got.length == hexes.length)
-      got.foreach { r =>
-        literals.indices.foreach { k =>
-          val (ref, ker) = (r.get(2 + 2 * k), r.get(3 + 2 * k))
-          assert(ref == ker,
-            s"row ${r.getLong(0)} hex ${r.getString(1)} literal '${literals(k)}': reference $ref, kernel $ker")
-        }
-      }
-    }
-    // the malformed rows really exercise the non-count arithmetic
-    val weird = local.where(col("hex") === "C323")
-      .select(refCountOccurrences(col("text"), "#")).head().getDouble(0)
-    assert(weird != 1.0, s"expected the replace-length form to miscount a malformed row, got $weird")
   }
 
   test("rolling hash is deterministic, normalized, and mod-bounded") {
