@@ -774,7 +774,10 @@ UNION ALL SELECT CAST(i AS VARCHAR), CAST((i * 7 + 2) % 100 AS VARCHAR) FROM s)"
 
   /** [[pageRankSql]] generalized over a caller-supplied CTE block
     * that must define `e(src, dst)` — the same power iteration then
-    * replays over any fixture graph (page-level, host-level).
+    * replays over any fixture graph (page-level, host-level). Both
+    * routes of Graph.pageRankWithCleanup mirror it term for term: the
+    * distributed loop as Catalyst expressions, the driver route
+    * (at most Graph.DriverEdgeCap edges) as Scala arithmetic.
     */
   private def pageRankSqlOver(edgesCtes: String, iters: Int, damping: Double,
                               decimals: Int): String = {

@@ -52,23 +52,26 @@ package object internal {
   /** `df.localCheckpoint(eager)` plus a release handle for the
     * checkpoint's cached blocks. Spark has no public API to unpersist
     * a localCheckpoint (the Dataset's own `unpersist` targets the
-    * plan cache, not the checkpoint RDD), so the handle is captured
-    * by diffing `sc.getPersistentRDDs` around the checkpoint call —
-    * `RDD.localCheckpoint` registers its storage level synchronously
-    * inside the `Dataset.localCheckpoint` call, for both the eager
-    * and the lazy form. Callers must not checkpoint concurrently
-    * from another thread between the two snapshots (driver-side code
-    * here is single-threaded).
+    * plan cache, not the checkpoint RDD), so the handle releases the
+    * RDD the returned frame's `LogicalRDD` scans — the one
+    * `RDD.localCheckpoint` persisted inside the call, for both the
+    * eager and the lazy form. It names that one RDD, so a concurrent
+    * persist on another driver thread (a [[graft.Cleanup.concurrently]]
+    * task) is never released by this caller's handle.
     *
     * Without release, every localCheckpoint strands MEMORY_AND_DISK
     * blocks until context shutdown — measured in round 4 as a ~2x
     * slowdown on every subsequent query in the same session.
     */
   def localCheckpointTracked(df: DataFrame, eager: Boolean): (DataFrame, () => Unit) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     val cp = df.localCheckpoint(eager)
-    val newIds = sc.getPersistentRDDs.keySet -- before
-    (cp, () => newIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))))
+    val rdd = cp.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      case other => throw new IllegalStateException(
+        s"localCheckpoint returned a ${other.nodeName} plan, not a LogicalRDD scan")
+    }
+    if (!df.sparkSession.sparkContext.getPersistentRDDs.get(rdd.id).exists(_ eq rdd))
+      throw new IllegalStateException(s"localCheckpoint's scanned RDD ${rdd.id} is not persisted")
+    (cp, () => { rdd.unpersist(blocking = false); () })
   }
 }

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Link-graph analysis over an edge list — the web-graph quality
@@ -9,6 +10,18 @@ import org.apache.spark.storage.StorageLevel
   * with, fed by [[UrlOps.outlinks]] edges.
   */
 object Graph {
+
+  /** Largest edge list [[pageRankWithCleanup]] ranks on the driver.
+    * It bounds the driver heap the driver route holds for one call:
+    * the collected rows (a row and two strings an edge, on the order
+    * of 150 bytes for short ids), two int arrays over the edges, and
+    * the node table and rank arrays — tens of MB at 2^18 edges. It is
+    * a constant, not a conf: the route is decided from the collected
+    * row count, and below the cap one thread finishes the iteration
+    * in milliseconds while the distributed loop pays about eight Spark
+    * jobs a round.
+    */
+  private[graft] val DriverEdgeCap: Int = 1 << 18
 
   /** PageRank by power iteration, every step deterministic and
     * engine-portable (the kmeans recipe): ranks round to `decimals`
@@ -21,13 +34,24 @@ object Graph {
     *
     * with `dangling` the summed rank of zero-outdegree nodes.
     *
-    * Scale shape per iteration: edge contributions shuffle once keyed
-    * on dst with map-side combine (edges carry ids only, never
-    * payloads); N and the dangling mass are broadcast scalar aggs;
-    * the node frame (id, outdeg) is computed once and persisted. No
-    * driver collect; iteration count is the caller's convergence
-    * budget (fixed-iteration PageRank is the standard corpus-scoring
-    * form — convergence-tested loops belong offline).
+    * Scale shape: one bounded collect of at most [[DriverEdgeCap]] + 1
+    * edges picks the route from the rows it returns, never from a
+    * plan estimate (an inflated estimate cannot flip it).
+    *  - Driver route, at most [[DriverEdgeCap]] edges: the whole
+    *    iteration runs in Scala over the collected edges and the
+    *    result is a local relation — one Spark job in all, where the
+    *    distributed loop runs about eight per round.
+    *  - Distributed route, above the cap: per iteration the edge
+    *    contributions shuffle once keyed on dst with map-side combine
+    *    (edges carry ids only, never payloads); N and the dangling
+    *    mass are broadcast scalar aggs; the node frame (id, outdeg)
+    *    is computed once and persisted.
+    * Both routes replay the same expression tree term for term, so
+    * they return identical doubles. The cap is not a knob: the local
+    * route wins at every size below it, and above it the driver heap,
+    * not speed, is the limit. Iteration count is the caller's
+    * convergence budget (fixed-iteration PageRank is the standard
+    * corpus-scoring form — convergence-tested loops belong offline).
     */
   def pageRank(
       edges: DataFrame,
@@ -43,9 +67,10 @@ object Graph {
     out
   }
 
-  /** [[pageRank]] plus the cleanup thunk releasing the persisted
-    * edge + node frames (both are read every iteration; without the
-    * persist each round would re-derive them from the source plan).
+  /** [[pageRank]] plus the cleanup thunk releasing the distributed
+    * route's persisted edge + node frames (both are read every
+    * iteration; without the persist each round would re-derive them
+    * from the source plan). On the driver route the thunk is a no-op.
     */
   def pageRankWithCleanup(
       edges: DataFrame,
@@ -55,10 +80,84 @@ object Graph {
       damping: Double = 0.85,
       decimals: Int = 6
   ): (DataFrame, () => Unit) = {
+    // persisted BEFORE the probe, so the distributed route reads the
+    // partitions the probe already computed instead of recomputing them
+    val e = persistedEdges(edges, srcCol, dstCol, iters)
+    // coalesce(1): the limited collect is one job, not a scale-up
+    // series of partition scans
+    val probe = e.coalesce(1).limit(DriverEdgeCap + 1).collect()
+    if (probe.length > DriverEdgeCap) powerIterate(e, iters, damping, decimals)
+    else {
+      e.unpersist()
+      (driverPageRank(e, probe, iters, damping, decimals), () => ())
+    }
+  }
+
+  /** The distributed route of [[pageRankWithCleanup]] at any size. */
+  private[graft] def pageRankDistributed(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      iters: Int,
+      damping: Double = 0.85,
+      decimals: Int = 6
+  ): (DataFrame, () => Unit) =
+    powerIterate(persistedEdges(edges, srcCol, dstCol, iters), iters, damping, decimals)
+
+  /** The `(src, dst)` string edge list both routes read, persisted. */
+  private def persistedEdges(edges: DataFrame, srcCol: String, dstCol: String,
+                             iters: Int): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
+    edges.select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** The driver route over the collected `(src, dst)` rows of `e`.
+    * Every step mirrors the distributed plan: a null endpoint is a
+    * node (`distinct` keeps it) whose degree and contribution joins
+    * miss (a join drops null keys), so it dangles and receives no
+    * inbound mass, and the update keeps the Catalyst association.
+    */
+  private def driverPageRank(e: DataFrame, rows: Array[Row], iters: Int, damping: Double,
+                             decimals: Int): DataFrame = {
+    val index = new java.util.HashMap[String, Integer]() // admits the null key
+    val names = scala.collection.mutable.ArrayBuffer.empty[String]
+    def id(node: String): Int = {
+      val i = index.get(node)
+      if (i != null) i
+      else { index.put(node, names.length); names += node; names.length - 1 }
+    }
+    val src = rows.map(r => id(r.getString(0)))
+    val dst = rows.map(r => id(r.getString(1)))
+    val n = names.length
+    val deg = new Array[Long](n)
+    src.foreach(u => if (names(u) != null) deg(u) += 1)
+    def round(x: Double): Double =
+      if (x.isNaN || x.isInfinite) x // Spark's Round recipe for doubles
+      else java.math.BigDecimal.valueOf(x).setScale(decimals, java.math.RoundingMode.HALF_UP).doubleValue()
+    val nd = n.toDouble
+    var rank = Array.fill(n)(round(1.0 / nd))
+    for (_ <- 1 to iters) {
+      var dm = 0.0
+      for (v <- 0 until n if deg(v) == 0) dm += rank(v)
+      val in = new Array[Double](n)
+      for (k <- src.indices if deg(src(k)) > 0 && names(dst(k)) != null)
+        in(dst(k)) += rank(src(k)) / deg(src(k))
+      rank = Array.tabulate(n)(v => round((1.0 - damping) / nd + damping * (in(v) + dm / nd)))
+    }
+    val schema = StructType(Seq(
+      StructField("node", StringType, e.schema("src").nullable || e.schema("dst").nullable),
+      StructField("rank", DoubleType)))
+    e.sparkSession.createDataFrame(
+      java.util.Arrays.asList(Array.tabulate[Row](n)(v => Row(names(v), rank(v))): _*), schema)
+  }
+
+  /** The distributed power iteration over the persisted edges `e`;
+    * the returned thunk releases `e`, the node frame and the last
+    * round's checkpoint.
+    */
+  private def powerIterate(e: DataFrame, iters: Int, damping: Double,
+                           decimals: Int): (DataFrame, () => Unit) = {
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct()

@@ -107,4 +107,49 @@ class CleanupSpec extends SparkSuite {
       spark.sparkContext.getPersistentRDDs.size < persisted.size,
       "drainAll must actually release the parked checkpoint blocks")
   }
+
+  test("localCheckpointTracked releases only its own blocks under concurrent callers") {
+    val s = spark
+    val sc = s.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    CheckpointLatches.reset()
+    // A's eager checkpoint job waits until B has checkpointed, so B's
+    // persist lands while A's call is in flight — the interleaving
+    // that a before/after census of getPersistentRDDs misattributes
+    val slowA = udf { (v: Long) =>
+      CheckpointLatches.aRunning.countDown()
+      CheckpointLatches.bDone.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      v
+    }
+    val Seq((a, releaseA), (b, releaseB)) = Cleanup.concurrently(Seq("a", "b")) {
+      case "a" =>
+        graft.internal.localCheckpointTracked(
+          s.range(0, 100, 1, 1).select(slowA(col("id")).as("v")), eager = true)
+      case _ =>
+        CheckpointLatches.aRunning.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        try graft.internal.localCheckpointTracked(
+          s.range(0, 1000, 1, 2).select((col("id") * 2).as("v")), eager = true)
+        finally CheckpointLatches.bDone.countDown()
+    }
+    assert(a.count() == 100)
+    releaseA()
+    // B's lineage is truncated: a released checkpoint could only fail
+    assert(b.agg(sum("v")).head().getLong(0) == 999L * 1000L)
+    releaseB()
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "each handle must release its own checkpoint")
+  }
+}
+
+/** Latches the concurrent-checkpoint spec's task code reads from the
+  * executor threads of the local session (an object, so the closure
+  * references it instead of serializing a copy).
+  */
+private object CheckpointLatches {
+  @volatile var aRunning = new java.util.concurrent.CountDownLatch(1)
+  @volatile var bDone = new java.util.concurrent.CountDownLatch(1)
+  def reset(): Unit = {
+    aRunning = new java.util.concurrent.CountDownLatch(1)
+    bDone = new java.util.concurrent.CountDownLatch(1)
+  }
 }

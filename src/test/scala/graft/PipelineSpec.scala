@@ -2078,6 +2078,84 @@ class PipelineSpec extends SparkSuite {
     assert(math.abs(total - 1.0) < 1e-3, s"total rank drifted to $total")
   }
 
+  /** PageRank of `e` on the driver route and on the distributed loop;
+    * the rows must agree with exact double equality.
+    */
+  private def assertRoutesAgree(e: org.apache.spark.sql.DataFrame, iters: Int, what: String): Unit = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import graft.pipeline.Graph
+    val (local, noRelease) = Graph.pageRankWithCleanup(e, "src", "dst", iters)
+    noRelease()
+    assert(local.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      s"$what: expected the driver route")
+    val (dist, release) = Graph.pageRankDistributed(e, "src", "dst", iters)
+    try {
+      assert(local.schema == dist.schema, s"$what: schema")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (Option(r.getString(0)), r.getDouble(1))).sortBy(_._1)
+      val (got, want) = (rows(local), rows(dist))
+      assert(got.map { case (v, p) => (v, java.lang.Double.doubleToLongBits(p)) }
+        .sameElements(want.map { case (v, p) => (v, java.lang.Double.doubleToLongBits(p)) }),
+        s"$what at iters=$iters: driver ${got.mkString(", ")} vs distributed ${want.mkString(", ")}")
+    } finally release()
+  }
+
+  test("pageRank: the driver route replays the distributed loop exactly (fixtures)") {
+    val s = spark; import s.implicits._
+    val hand = Seq(("A", "B"), ("B", "A"), ("A", "C")).toDF("src", "dst")
+    Seq(1, 3).foreach(assertRoutesAgree(hand, _, "3-node hand graph"))
+    val src = s.range(0, 100).where(col("id") % 10 =!= 7)
+    val eg = src.select(col("id").as("src"), ((col("id") * 3 + 1) % 100).as("dst"))
+      .unionByName(src.select(col("id").as("src"), ((col("id") * 7 + 2) % 100).as("dst")))
+    Seq(0, 1, 3).foreach(assertRoutesAgree(eg, _, "100-node fixture"))
+  }
+
+  test("pageRank: the driver route replays the distributed loop exactly (edge shapes)") {
+    val s = spark; import s.implicits._
+    val cycle = (0 until 10).map(i => (s"n$i", s"n${(i + 1) % 10}")).toDF("src", "dst")
+    assertRoutesAgree(cycle, 3, "cycle, nothing dangles")
+    val star = (1 to 9).map(i => ("hub", s"leaf$i")).toDF("src", "dst")
+    assertRoutesAgree(star, 3, "star whose leaves all dangle")
+    assertRoutesAgree(Seq.empty[(String, String)].toDF("src", "dst"), 2, "empty edge list")
+    assertRoutesAgree(Seq(("A", "A"), ("A", "B"), ("B", "A")).toDF("src", "dst"), 3, "self-loop")
+    assertRoutesAgree(Seq(("A", "B"), ("A", "B"), ("A", "C"), ("B", "A"), ("C", "A"), ("C", "A"))
+      .toDF("src", "dst"), 3, "parallel duplicate edges")
+    // a null endpoint is a dangling node that no contribution reaches
+    assertRoutesAgree(Seq[(String, String)](("A", null), (null, "B"), ("A", "B"), ("B", "A"), ("B", "C"))
+      .toDF("src", "dst"), 3, "null src and null dst")
+    assertRoutesAgree(Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (4L, 1L)).toDF("src", "dst"), 3,
+      "bigint ids")
+  }
+
+  test("pageRank: DriverEdgeCap edges rank on the driver, one edge more runs distributed") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LogicalRDD
+    import graft.pipeline.Graph
+    val cap = Graph.DriverEdgeCap.toLong
+    def ring(m: Long) = spark.range(0, m).select(col("id").as("src"), ((col("id") + 1) % m).as("dst"))
+    val (atCap, noRelease) = Graph.pageRankWithCleanup(ring(cap), "src", "dst", iters = 0)
+    noRelease()
+    assert(atCap.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(atCap.count() == cap)
+    val (over, release) = Graph.pageRankWithCleanup(ring(cap + 1), "src", "dst", iters = 0)
+    try {
+      assert(over.queryExecution.optimizedPlan.collectFirst { case r: LogicalRDD => r }.nonEmpty,
+        "above the cap the ranks come from the distributed loop's checkpoint")
+      assert(over.count() == cap + 1)
+    } finally release()
+  }
+
+  test("pageRank: q_pagerank and q_pagerank_host take the driver route") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    // both queries build their graph from spark.range at every scale
+    // factor, so no input directory is read
+    for (q <- Seq("q_pagerank", "q_pagerank_host")) {
+      val out = SparkEntry.queries(q)(spark, "")
+      SparkEntry.runPendingCleanups()
+      assert(out.queryExecution.optimizedPlan.isInstanceOf[LocalRelation], s"$q: ${out.queryExecution.optimizedPlan}")
+    }
+  }
+
   test("pageRank: superseded rounds release their blocks (never O(iters) cached)") {
     val s = spark; import s.implicits._
     import graft.pipeline.Graph
@@ -2091,7 +2169,7 @@ class PipelineSpec extends SparkSuite {
     // round's checkpoint blocks — round N-1 is released as soon as
     // round N exists. The old per-round persist accumulation would
     // leave ~iters extra entries here.
-    val (pr, cleanup) = Graph.pageRankWithCleanup(eg, "src", "dst", iters = 8)
+    val (pr, cleanup) = Graph.pageRankDistributed(eg, "src", "dst", iters = 8)
     val afterCall = sc.getPersistentRDDs.keySet -- before
     assert(afterCall.size <= 3,
       s"expected <=3 live cached frames (edges, nodes, final round), got ${afterCall.size}")

@@ -189,7 +189,7 @@ class SkewStressSpec extends SparkSuite {
     // ONE iteration: after it the hub holds ~d/2 of all mass (at two
     // iterations the hub's mass legitimately sloshes down its single
     // chain edge to node 1 — rank oscillates on this graph)
-    val (pr, cleanup) = graft.pipeline.Graph.pageRankWithCleanup(e, "src", "dst", iters = 1)
+    val (pr, cleanup) = graft.pipeline.Graph.pageRankDistributed(e, "src", "dst", iters = 1)
     try {
       val rows = timed(120.0, "pageRank over a hub graph")(pr.collect())
       assert(rows.length == 20000)
