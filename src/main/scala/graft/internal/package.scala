@@ -49,6 +49,20 @@ package object internal {
   def columnExpr(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.GraftSqlBridge.expression(c)
 
+  /** The rows of `df` if it has at most `cap` of them, else `None`
+    * (the input is over the cap). One Spark job: `coalesce(1)` makes
+    * the limited collect one task that stops reading after `cap + 1`
+    * rows, not a scale-up series of partition scans. The driver loops
+    * ([[graft.pipeline.Graph.pageRankWithCleanup]],
+    * [[graft.pipeline.Similarity.kmeansCentroids]]) pick their route
+    * from the rows this returns, never from a plan estimate, so an
+    * inflated estimate cannot flip a route.
+    */
+  def collectAtMost(df: DataFrame, cap: Int): Option[Array[org.apache.spark.sql.Row]] = {
+    val rows = df.coalesce(1).limit(cap + 1).collect()
+    if (rows.length > cap) None else Some(rows)
+  }
+
   /** `df.localCheckpoint(eager)` plus a release handle for the
     * checkpoint's cached blocks. Spark has no public API to unpersist
     * a localCheckpoint (the Dataset's own `unpersist` targets the

@@ -83,13 +83,11 @@ object Graph {
     // persisted BEFORE the probe, so the distributed route reads the
     // partitions the probe already computed instead of recomputing them
     val e = persistedEdges(edges, srcCol, dstCol, iters)
-    // coalesce(1): the limited collect is one job, not a scale-up
-    // series of partition scans
-    val probe = e.coalesce(1).limit(DriverEdgeCap + 1).collect()
-    if (probe.length > DriverEdgeCap) powerIterate(e, iters, damping, decimals)
-    else {
-      e.unpersist()
-      (driverPageRank(e, probe, iters, damping, decimals), () => ())
+    graft.internal.collectAtMost(e, DriverEdgeCap) match {
+      case None => powerIterate(e, iters, damping, decimals)
+      case Some(rows) =>
+        e.unpersist()
+        (driverPageRank(e, rows, iters, damping, decimals), () => ())
     }
   }
 
@@ -132,9 +130,7 @@ object Graph {
     val n = names.length
     val deg = new Array[Long](n)
     src.foreach(u => if (names(u) != null) deg(u) += 1)
-    def round(x: Double): Double =
-      if (x.isNaN || x.isInfinite) x // Spark's Round recipe for doubles
-      else java.math.BigDecimal.valueOf(x).setScale(decimals, java.math.RoundingMode.HALF_UP).doubleValue()
+    def round(x: Double): Double = graft.plans.PqArgBestExpr.roundHalfUp(x, decimals)
     val nd = n.toDouble
     var rank = Array.fill(n)(round(1.0 / nd))
     for (_ <- 1 to iters) {

@@ -14,8 +14,11 @@ import org.apache.spark.sql.types._
   * granularity) and multi-probe is achieved by repeating with
   * different seeds and unioning.
   *
-  * All vector math is codegen'd zip_with/aggregate over Array columns
-  * — no UDF, no driver collect.
+  * Per-row vector math is codegen'd Catalyst expressions over Array
+  * columns — no UDF. Model frames that serving ships whole (centroid
+  * sets, PQ codebooks) are collected once to the driver and ride the
+  * plan as literals, and small k-means fits run on the driver
+  * ([[kmeansCentroids]]).
   */
 object Similarity {
 
@@ -498,28 +501,140 @@ object Similarity {
     *  - assignment = nearest centroid by (cosine rounded to
     *    `scoreDecimals` desc, centroid id asc) — [[ivfAssign]];
     *  - update = per-dimension mean rounded to `centroidDecimals`
-    *    (the ONE cross-engine-inexact step is the distributed sum
-    *    inside the mean; rounding absorbs its ulp-level order
-    *    sensitivity), dimensions reassembled in order via a struct
-    *    array_sort, norms re-derived from the rounded components so
+    *    (the ONE cross-engine-inexact step is the sum inside the
+    *    mean; rounding absorbs its ulp-level order sensitivity except
+    *    on a mean that lands on a rounding boundary), dimensions in
+    *    order, norms re-derived from the rounded components so
     *    downstream cosines are bit-identical given identical means.
     *
-    * Scale shape per iteration: one broadcast of the k-row centroid
-    * frame, one per-row top-1 window keyed on the row id, one
-    * (cent, dim)-keyed hash agg whose shuffle carries k x dims rows
-    * after map-side combine — no all-pairs stage, no driver collect.
-    * A centroid that attracts no rows drops out (standard Lloyd).
-    * Each iteration extends the lazy plan, so every
-    * [[CompactEveryIters]] rounds the k-row centroid frame is
-    * materialized and re-embedded as a literal relation — plan depth
-    * (and analyzer cost) stays bounded no matter how large `iters`
-    * is, instead of blowing up the analyzer on a caller's iters=50.
-    * Train offline and persist the result for reuse regardless.
+    * Scale shape: one bounded collect of at most [[DriverKmeansRowCap]]
+    * + 1 rows picks the route from the rows it returns, never from a
+    * plan estimate.
+    *  - Driver route, at most [[DriverKmeansRowCap]] rows: the whole
+    *    fit runs in Scala over the collected `(id, vec, norm, md5)`
+    *    rows — the draw sorts by (md5, id) in Spark's SQL order, the
+    *    assignment is [[graft.plans.PqArgBestExpr]]'s own loop, the
+    *    means sum in row order — and the result is a broadcast local
+    *    relation: one Spark job in all.
+    *  - Distributed route ([[kmeansCentroidsDistributed]]), above the
+    *    cap, for `iters = 0`, and for shapes the driver route does not
+    *    take (a null vector or vector element, empty or ragged
+    *    vectors, a decimal element type, `k < 0`): per iteration one collect of
+    *    the k-row centroid frame into the packed assignment kernel and
+    *    one (cent, dim)-keyed hash agg whose shuffle carries k x dims
+    *    rows after map-side combine — no all-pairs stage — about four
+    *    Spark jobs a round.
+    * The routes return identical rows wherever the distributed sums
+    * add in row order (one partition); across partitions the
+    * distributed mean is itself order-sensitive at a rounding
+    * boundary. The cap is not a knob: below it one thread finishes
+    * the fit in milliseconds where the distributed loop pays its jobs
+    * every round, and above it the driver heap, not speed, is the
+    * limit. A centroid that attracts no rows drops out (standard
+    * Lloyd). Train offline and persist the result for reuse.
     *
     * Returns the fitted (cent_id, __cv__, __cn__) broadcast frame —
     * feed it to [[kmeansAssign]] for cluster labels.
     */
   def kmeansCentroids(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      iters: Int,
+      scoreDecimals: Int = 4,
+      centroidDecimals: Int = 6
+  ): DataFrame = {
+    def distributed = kmeansCentroidsDistributed(df, idCol, vecCol, k, iters, scoreDecimals, centroidDecimals)
+    // a decimal vector averages in decimal arithmetic, not in doubles
+    val doubleMeans = df.schema(vecCol).dataType match {
+      case ArrayType(_: DecimalType, _) => false
+      case ArrayType(_: NumericType, _) => true
+      case _                            => false
+    }
+    if (iters < 1 || k < 0 || !doubleMeans) return distributed
+    val probe = df.select(col(idCol).as("cent_id"), col(vecCol).cast("array<double>").as("__cv__"),
+      norm(col(vecCol)).as("__cn__"), md5(col(idCol).cast("string")).as("__h__"))
+    graft.internal.collectAtMost(probe, DriverKmeansRowCap)
+      .flatMap(driverKmeans(probe, _, k, iters, scoreDecimals, centroidDecimals))
+      .getOrElse(distributed)
+  }
+
+  /** Largest input [[kmeansCentroids]] fits on the driver. It bounds
+    * the driver heap one call holds: the collected rows (at 64-dim
+    * vectors about 1.5 KB a row — boxed components, the md5 string)
+    * plus one primitive copy of each vector (0.5 KB), so about 64 MB
+    * at 2^15 rows. It is a constant, not a conf: the route is decided
+    * from the collected row count, and below the cap the driver fit
+    * (rows x k kernel evaluations a round) beats the distributed
+    * loop's four Spark jobs a round.
+    */
+  private[graft] val DriverKmeansRowCap: Int = 1 << 15
+
+  /** The driver route over the collected probe `rows` of
+    * [[kmeansCentroids]], or `None` for a shape it does not take: a
+    * null vector or element (its norm is null), ragged lengths, or
+    * empty vectors (the distributed update's `posexplode` filters
+    * them out before the assignment).
+    * Each step replays the distributed plan: centroids rank in id
+    * order, so [[graft.plans.PqArgBestExpr]]'s positional tiebreak is
+    * the (cosine desc, id asc) rule; equal drawn ids (duplicate ids)
+    * form one cluster, as `groupBy(cent_id)` does; and each mean is
+    * `avg`'s sum from 0.0 in row order, divided by the count, then
+    * Spark's Round.
+    */
+  private def driverKmeans(
+      probe: DataFrame,
+      rows: Array[Row],
+      k: Int,
+      iters: Int,
+      scoreDecimals: Int,
+      centroidDecimals: Int
+  ): Option[DataFrame] = {
+    import graft.plans.PqArgBestExpr
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    if (rows.exists(_.isNullAt(2))) return None
+    val vecs = rows.map(_.getSeq[Double](1).toArray)
+    val norms = rows.map(_.getDouble(2))
+    val dims = vecs.headOption.fold(0)(_.length)
+    if (vecs.exists(v => v.length != dims || v.isEmpty)) return None
+    val idType = probe.schema("cent_id").dataType
+    val byId = new SqlOrder(Seq(idType))
+    val draw = new SqlOrder(Seq(StringType, idType))
+      .sort(rows.indices)(i => Row(rows(i).get(3), rows(i).get(0))).take(k)
+    // (id, vector, norm), in id order
+    var cents = byId.sort(draw.map(i => (rows(i).get(0), vecs(i), norms(i))))(c => Row(c._1))
+    for (_ <- 1 to iters if cents.nonEmpty) {
+      val kernel = PqArgBestExpr(Literal.create(null, ArrayType(DoubleType)), Literal(0.0), Literal(0),
+        Array(cents.map(_._2).toArray), Array(cents.map(_._3).toArray), scoreDecimals, l2 = false)
+      val keys = cents.map(c => byId.key(Row(c._1)))
+      val cluster = new Array[Int](cents.length)
+      for (j <- 1 until cents.length)
+        cluster(j) = if (byId.ord.equiv(keys(j - 1), keys(j))) cluster(j - 1) else j
+      val sums = Array.fill(cents.length)(new Array[Double](dims))
+      val counts = new Array[Long](cents.length)
+      for (i <- rows.indices) {
+        val c = cluster(kernel.best(vecs(i), norms(i), 0))
+        val (sum, v) = (sums(c), vecs(i))
+        for (d <- 0 until dims) sum(d) += v(d)
+        counts(c) += 1
+      }
+      cents = cents.indices.filter(counts(_) > 0).map { c =>
+        val m = sums(c).map(x => PqArgBestExpr.roundHalfUp(x / counts(c).toDouble, centroidDecimals))
+        (cents(c)._1, m, math.sqrt(PqArgBestExpr.selfDot(m)))
+      }
+    }
+    val schema = StructType(Seq(
+      StructField("cent_id", idType),
+      StructField("__cv__", ArrayType(DoubleType), nullable = false),
+      StructField("__cn__", DoubleType)))
+    import scala.jdk.CollectionConverters._
+    Some(broadcast(probe.sparkSession.createDataFrame(
+      cents.map { case (id, v, n) => Row(id, v.toSeq, n) }.asJava, schema)))
+  }
+
+  /** The distributed route of [[kmeansCentroids]] at any size. */
+  private[graft] def kmeansCentroidsDistributed(
       df: DataFrame,
       idCol: String,
       vecCol: String,
@@ -828,9 +943,8 @@ object Similarity {
   }
 
   /** ONE collect of `(key, id, vector, norm)` rows, sorted on the
-    * driver by (key, id) in Spark's own SQL ascending order (Catalyst's
-    * natural ordering over the converted values, nulls first — the
-    * window default) and grouped by key in that order. Returns the id
+    * driver by (key, id) in Spark's own SQL ascending order
+    * ([[SqlOrder]]) and grouped by key in that order. Returns the id
     * type and the per-key codeword arrays. Adds no Spark job: the sort
     * runs over rows the collect already returns.
     */
@@ -841,23 +955,32 @@ object Similarity {
       v: Column,
       n: Column
   ): (DataType, Seq[(Any, Array[PqCw])]) = {
-    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-    import org.apache.spark.sql.catalyst.expressions.RowOrdering
     val sel = df.select(key.as("k"), id.as("id"), v.cast("array<double>").as("v"), n.as("n"))
-    val keySchema = StructType(sel.schema.fields.take(2))
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(keySchema)
-    val ord = RowOrdering.createNaturalAscendingOrdering(keySchema.map(_.dataType))
-    val sorted = sel.collect()
-      .map(r => toCatalyst(Row(r.get(0), r.get(1))).asInstanceOf[InternalRow] -> r)
-      .sortBy(_._1)(ord)
-      .map(_._2)
+    val sorted = new SqlOrder(sel.schema.fields.take(2).map(_.dataType).toSeq)
+      .sort(sel.collect().toSeq)(r => Row(r.get(0), r.get(1)))
     val groups = scala.collection.mutable.LinkedHashMap.empty[Any, Vector[PqCw]]
     sorted.foreach { r =>
       val cv = r.getSeq[Double](2).toArray
       val cw = PqCw(r.get(1), cv, r.getDouble(3), graft.plans.PqArgBestExpr.selfDot(cv))
       groups.update(r.get(0), groups.getOrElse(r.get(0), Vector.empty) :+ cw)
     }
-    (keySchema(1).dataType, groups.toSeq.map { case (k, cws) => k -> cws.toArray })
+    (sel.schema(1).dataType, groups.toSeq.map { case (k, cws) => k -> cws.toArray })
+  }
+
+  /** Spark's SQL ascending order over rows of `types`: Catalyst's
+    * natural ordering over the converted values, nulls first (the
+    * `orderBy` and window default).
+    */
+  private final class SqlOrder(types: Seq[DataType]) {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(
+      StructType(types.zipWithIndex.map { case (t, i) => StructField(s"_$i", t) }))
+    val ord: Ordering[InternalRow] =
+      org.apache.spark.sql.catalyst.expressions.RowOrdering.createNaturalAscendingOrdering(types)
+    def key(r: Row): InternalRow = toCatalyst(r).asInstanceOf[InternalRow]
+    /** `items` sorted by `f`; stable, so equal keys keep their input order. */
+    def sort[T](items: Seq[T])(f: T => Row): Seq[T] =
+      items.map(x => key(f(x)) -> x).sortBy(_._1)(ord).map(_._2)
   }
 
   /** Rank-1 codeword assignment for one exploded (row, sub_id, __sv__)

@@ -340,11 +340,6 @@ case class PqArgBestExpr(
   // `dot(cbv, cbv)` in SQL (IEEE doubles — deterministic)
   private lazy val n2s: Array[Array[Double]] = vs.map(_.map(PqArgBestExpr.selfDot))
 
-  private def roundHalfUp(x: Double): Double =
-    if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(dec, java.math.RoundingMode.HALF_UP).doubleValue()
-
   /** dot(sv, cw) with dotOrNull's null contract; null encoded as NaN
     * sentinel is NOT possible (NaN is a legal value), so the winner
     * loop carries an explicit null flag instead.
@@ -386,8 +381,8 @@ case class PqArgBestExpr(
           // all-zero subvector slice, or Lloyd means rounding to zero.
           val div = aux * nsS(j)
           if (div == 0.0d) metNull = true
-          else met = roundHalfUp(d / div)
-        } else met = roundHalfUp((aux - 2.0d * d) + n2sS(j))
+          else met = PqArgBestExpr.roundHalfUp(d / div, dec)
+        } else met = PqArgBestExpr.roundHalfUp((aux - 2.0d * d) + n2sS(j), dec)
       }
       val better =
         if (j == 0) true
@@ -406,6 +401,12 @@ case class PqArgBestExpr(
     bi
   }
 
+  /** [[best]] over a plain driver-side vector — the k-means driver
+    * route ranks its collected rows with the kernel's own loop.
+    */
+  def best(sv: Array[Double], aux: Double, s: Int): Int =
+    best(org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(sv), aux, s)
+
   override protected def nullSafeEval(a: Any, b: Any, c: Any): Any =
     best(a.asInstanceOf[ArrayData], b.asInstanceOf[Double], c.asInstanceOf[Int])
 
@@ -421,6 +422,15 @@ case class PqArgBestExpr(
 }
 
 object PqArgBestExpr {
+
+  /** Spark's own Round recipe for doubles at `dec` decimals:
+    * `BigDecimal.valueOf(x).setScale(dec, HALF_UP)`, NaN and the
+    * infinities passed through.
+    */
+  def roundHalfUp(x: Double, dec: Int): Double =
+    if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(dec, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** `dot(v, v)` by the same left-to-right accumulation as
     * [[graft.functions.VectorKernel.dotOrNull]] — the codeword squared

@@ -371,10 +371,13 @@ class PlanSpec extends SparkSuite {
       "q_tfidf"              -> 6, // tf agg + df agg + word join + top-3 window (N is broadcast)
       "q_minhash_candidates" -> 3, // banded persist barrier + bucket join + pair agg
       // r19 opt: assignment windows collapsed into the packed argbest
-      // projection (zero corpus exchanges). What remains: kmeans
-      // training's 2 tiny (cent,dim)-keyed aggs + cell-cap count
-      // window + co-partitioned pair join / distinct pair — none over
-      // full-corpus vector rows (was 14 pre-opt).
+      // projection (zero corpus exchanges). What remains: the cell-cap
+      // window's cent_id exchange inside the persisted cells frame
+      // (displayed once per pair-join side → 2 in text, 1 at runtime),
+      // the distinct-pair agg and the anti-join, both keyed on vec_id —
+      // none over full-corpus vector rows (was 14 pre-opt). k-means
+      // training plans no exchange here: its centroids reach the
+      // assignment as collected literals.
       "q_semdedup"           -> 4,
       // corpus-wide distinct + WindowGroupLimit rank build the slice
       // sketches; everything after runs over O(pairs x k) rows

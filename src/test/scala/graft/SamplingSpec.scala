@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.Sampling
+import graft.pipeline.{Sampling, Similarity}
 
 class SamplingSpec extends SparkSuite {
 
@@ -201,13 +202,8 @@ class SamplingSpec extends SparkSuite {
   }
 
   test("kmeans replays an independent local Lloyd loop exactly (draw, assignment, rounded means)") {
-    val s = spark; import s.implicits._
-    // two direction clusters in 3D with per-row perturbations
-    val rows: Seq[(Long, Seq[Double])] = (1L to 12L).map { i =>
-      val eps = i * 0.01
-      if (i % 2 == 0) (i, Seq(1.0, eps, 0.0)) else (i, Seq(0.0, eps, 1.0))
-    }
-    val df = rows.toDF("vec_id", "emb")
+    val rows = kmeansFixture
+    val df = kmeansDf(rows)
     val cents = graft.pipeline.Similarity.kmeansCentroids(df, "vec_id", "emb", k = 3, iters = 2)
     val got = graft.pipeline.Similarity.kmeansAssign(df, cents, "vec_id", "emb")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -238,10 +234,12 @@ class SamplingSpec extends SparkSuite {
     assert(even.intersect(odd).isEmpty, s"clusters merged: $got")
 
     // deep training (iters=9 crosses the every-4-rounds plan
-    // compaction twice): still matches the local replica round for
-    // round — the literal re-embedding must not perturb the
-    // trajectory — and completes in bounded time (VERDICT r5 #7)
-    val deepCents = graft.pipeline.Similarity.kmeansCentroids(df, "vec_id", "emb", k = 3, iters = 9)
+    // compaction twice): the distributed loop still matches the local
+    // replica round for round — the literal re-embedding must not
+    // perturb the trajectory — and completes in bounded time (VERDICT
+    // r5 #7). The loop runs only on the distributed route; a fixture
+    // this small takes the driver route through kmeansCentroids.
+    val deepCents = graft.pipeline.Similarity.kmeansCentroidsDistributed(df, "vec_id", "emb", k = 3, iters = 9)
     val deepGot = graft.pipeline.Similarity.kmeansAssign(df, deepCents, "vec_id", "emb")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     var cl9: Map[Long, Seq[Double]] = rows.sortBy { case (id, _) => (md5hex(id.toString), id) }
@@ -253,5 +251,124 @@ class SamplingSpec extends SparkSuite {
       }
     }
     assert(deepGot == assign(cl9), s"spark $deepGot vs local ${assign(cl9)}")
+  }
+
+  /** Two direction clusters in 3D with per-row perturbations. */
+  private def kmeansFixture: Seq[(Long, Seq[Double])] = (1L to 12L).map { i =>
+    val eps = i * 0.01
+    if (i % 2 == 0) (i, Seq(1.0, eps, 0.0)) else (i, Seq(0.0, eps, 1.0))
+  }
+
+  private def kmeansDf(rows: Seq[(Long, Seq[Double])]): DataFrame = {
+    val s = spark; import s.implicits._
+    rows.toDF("vec_id", "emb")
+  }
+
+  /** Centroid rows with every double as its bits, in a total order. */
+  private def centroidBits(cents: DataFrame): Seq[(String, Seq[Long], Long)] =
+    cents.collect().toSeq.map { r =>
+      (String.valueOf(r.get(0)), r.getSeq[Double](1).map(java.lang.Double.doubleToLongBits),
+        java.lang.Double.doubleToLongBits(r.getDouble(2)))
+    }.sortBy(c => (c._1, c._2.mkString(",")))
+
+  /** k-means of `df` on the driver route and on the distributed loop
+    * (over `distInput`, by default `df` itself): identical schema and
+    * bit-identical rows.
+    */
+  private def assertKmeansRoutesAgree(df: DataFrame, k: Int, iters: Int, what: String,
+                                      distInput: Option[DataFrame] = None,
+                                      driverRoute: Boolean = true): Seq[(String, Seq[Long], Long)] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val local = Similarity.kmeansCentroids(df, "vec_id", "emb", k, iters)
+    assert(local.queryExecution.optimizedPlan.isInstanceOf[LocalRelation] == (driverRoute && iters > 0),
+      s"$what: expected the ${if (driverRoute) "driver" else "distributed"} route, got " +
+        local.queryExecution.optimizedPlan)
+    val dist = Similarity.kmeansCentroidsDistributed(distInput.getOrElse(df), "vec_id", "emb", k, iters)
+    assert(local.schema == dist.schema, s"$what: schema ${local.schema} vs ${dist.schema}")
+    val (got, want) = (centroidBits(local), centroidBits(dist))
+    assert(got == want, s"$what at k=$k iters=$iters: driver $got vs distributed $want")
+    got
+  }
+
+  test("kmeans: the driver route replays the distributed loop exactly (fixtures)") {
+    val df = kmeansDf(kmeansFixture)
+    Seq(0, 1, 2, 9).foreach(i => assertKmeansRoutesAgree(df, 3, i, "12-row fixture"))
+    val e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+    Seq(8, 16).foreach(k => assertKmeansRoutesAgree(e, k, 2, "sf0.01 embeddings"))
+  }
+
+  test("kmeans: the driver route replays the distributed loop exactly (shapes)") {
+    val s = spark; import s.implicits._
+    val fx = kmeansFixture
+    assert(assertKmeansRoutesAgree(kmeansDf(fx), 20, 2, "k above the row count").nonEmpty)
+    assert(assertKmeansRoutesAgree(kmeansDf(Nil), 3, 2, "empty input").isEmpty)
+    // one direction throughout: every row ties at cosine 1 and the
+    // lowest drawn id wins, so the other drawn centroids empty and drop
+    val line = (1L to 8L).map(i => (i, Seq(i.toDouble, 2.0 * i)))
+    assert(assertKmeansRoutesAgree(kmeansDf(line), 3, 1, "clusters that empty").length == 1)
+    // k = rows draws both copies of each duplicated id; round one merges
+    // them into one centroid per id, as groupBy(cent_id) does
+    val dup = fx.take(6) ++ fx.take(6).map { case (i, v) => (i, v.map(_ * 2.0 + 0.5)) }
+    Seq(0, 1, 2).foreach(i => assertKmeansRoutesAgree(kmeansDf(dup), 12, i, "duplicate ids"))
+    val str = fx.map { case (i, v) => (s"v$i", v) }.toDF("vec_id", "emb")
+    Seq(1, 2).foreach(i => assertKmeansRoutesAgree(str, 3, i, "string ids"))
+    val int = fx.map { case (i, v) => (i.toInt, v.map(_.toFloat)) }.toDF("vec_id", "emb")
+    assertKmeansRoutesAgree(int, 3, 2, "int ids, float vectors")
+    val zero = kmeansDf(fx :+ (13L -> Seq(0.0, 0.0, 0.0)))
+    Seq(1, 2).foreach(i => assertKmeansRoutesAgree(zero, 4, i, "a zero vector"))
+    Seq(1, 2).foreach(i => assertKmeansRoutesAgree(kmeansDf((0L, Seq(0.0, 0.0, 0.0)) +: fx), 3, i,
+      "a zero vector in the draw"))
+    // shapes the driver route leaves to the distributed loop
+    val empty = spark.range(1, 6).select(col("id").as("vec_id"), array().cast("array<double>").as("emb"))
+    assert(assertKmeansRoutesAgree(empty, 2, 1, "empty vectors", driverRoute = false).isEmpty)
+    val ragged = kmeansDf(fx :+ (13L -> Seq(1.0, 0.5)))
+    assertKmeansRoutesAgree(ragged, 3, 2, "ragged vectors", driverRoute = false)
+  }
+
+  test("kmeans: a null vector has the same outcome on both routes, a failure once drawn") {
+    val df = spark.range(1, 14).select(col("id").as("vec_id"),
+      when(col("id") === 13, lit(null)).otherwise(array((col("id") % 2).cast("double"), col("id") * 0.01,
+        (lit(1) - col("id") % 2).cast("double"))).as("emb"))
+    def outcome(cents: => DataFrame): String = scala.util.Try(centroidBits(cents)) match {
+      case scala.util.Success(rows) => s"rows $rows"
+      case scala.util.Failure(e) =>
+        val root = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq.last
+        s"failed: ${root.getClass.getName}"
+    }
+    // k = 3 leaves the null row out of the draw: the assignment gives
+    // it no cell and the means skip it; k = 13 draws it as a centroid
+    for (k <- Seq(3, 13); iters <- Seq(1, 2)) {
+      val local = outcome(Similarity.kmeansCentroids(df, "vec_id", "emb", k, iters))
+      val dist = outcome(Similarity.kmeansCentroidsDistributed(df, "vec_id", "emb", k, iters))
+      assert(local == dist, s"k=$k iters=$iters: driver $local vs distributed $dist")
+      assert(local.startsWith("failed") == (k == 13), s"k=$k iters=$iters: $local")
+    }
+  }
+
+  test("kmeans: a mean on a 6-dp HALF_UP boundary rounds as the one-partition distributed sum") {
+    // one cluster (k = 1) whose first component has the exact decimal
+    // mean 0.2408915; its double sum rounds up or down with the order
+    // of addition, so only the same order gives the same centroid
+    val xs = Seq(0.2408937, 0.2408962, 0.2408873, 0.2408888)
+    def mean(v: Seq[Double]) =
+      graft.plans.PqArgBestExpr.roundHalfUp(v.foldLeft(0.0)(_ + _) / v.length, 6)
+    assert(xs.permutations.map(mean).toSet.size == 2, "the fixture must sit on an order-sensitive boundary")
+    val df = kmeansDf(xs.zipWithIndex.map { case (x, i) => (i.toLong, Seq(x, 1.0)) })
+    val got = assertKmeansRoutesAgree(df, 1, 1, "rounding boundary", Some(df.coalesce(1)))
+    assert(got.head._2.head == java.lang.Double.doubleToLongBits(mean(xs)))
+  }
+
+  test("kmeans: DriverKmeansRowCap rows fit on the driver, one row more runs distributed") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val cap = Similarity.DriverKmeansRowCap.toLong
+    def rows(n: Long) = spark.range(0, n)
+      .select(col("id").as("vec_id"), array((col("id") % 7).cast("double"), lit(1.0)).as("emb"))
+    val atCap = Similarity.kmeansCentroids(rows(cap), "vec_id", "emb", k = 2, iters = 1)
+    assert(atCap.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    val over = Similarity.kmeansCentroids(rows(cap + 1), "vec_id", "emb", k = 2, iters = 1)
+    assert(!over.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      "above the cap the centroids come from the distributed loop")
+    assert(atCap.count() > 0 && over.count() > 0)
   }
 }
