@@ -30,22 +30,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ContextCleaner only releases broadcast blocks / shuffle state
-      // after their driver-side references are GC'd; the default
-      // periodic-GC interval (30min) is longer than this whole run,
-      // so without this a broadcast-heavy query's blocks linger and
-      // tax every LATER query's memory — measured ~9s of phantom cost
-      // on q_simhash_candidates in-suite vs fresh-JVM
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.testing.Sessions.local(cpus)
     val errors = scala.collection.mutable.ListBuffer.empty[String]
     // One warm-up run of the first query absorbs JVM/codegen start-up
     // cost so per-query numbers reflect execution, not class loading.

@@ -846,7 +846,7 @@ FROM f CROSS JOIN s$steps w"""
     * trajectory.
     */
   private def kmeansSql(k: Int, iters: Int, dims: Int): String =
-    s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+    s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings WHERE embedding IS NOT NULL),
 ${kmeansTrainCtes(k, iters, dims)},
 ${kmeansAssignCte("afin", s"cents$iters")}
 SELECT vec_id, cent_id FROM afin"""

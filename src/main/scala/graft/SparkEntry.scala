@@ -63,29 +63,23 @@ object SparkEntry {
   // the runner (driver / Bench / Verify / specs) executes the action
   // afterwards — so operator-internal caches that must outlive
   // construction (LSH signature persists, CC label checkpoints) are
-  // registered here at build time and released by the runner AFTER the
-  // action via runPendingCleanups(). Round 4 measured the cost of NOT
-  // doing this: stranded blocks roughly doubled the whole bench.
+  // parked at build time in graft.Cleanup's fragile tier, which only
+  // drainAll runs: a streaming tick's anytime drain() must not release
+  // a checkpoint under a built-but-unconsumed query. The runner
+  // releases them AFTER the action via runPendingCleanups(). Round 4
+  // measured the cost of NOT doing this: stranded blocks roughly
+  // doubled the whole bench.
   // -----------------------------------------------------------------
-  private val pendingCleanups = scala.collection.mutable.Buffer.empty[() => Unit]
 
-  private def deferCleanup(f: () => Unit): Unit = synchronized { pendingCleanups += f }
-
-  /** Release caches staged by the most recently built quer(ies).
-    * Runners call this after each query's action has completed.
-    * Also drains the library-level [[graft.Cleanup]] registry, where
-    * the no-cleanup operator conveniences park their handles — a
-    * query written against the convenience API gets the same
-    * after-action hygiene as one using the WithCleanup forms.
+  /** Release caches staged by the most recently built quer(ies):
+    * the query sites' handles and every handle the no-cleanup
+    * operator conveniences parked in [[graft.Cleanup]], so a query
+    * written against the convenience API gets the same after-action
+    * hygiene as one using the WithCleanup forms. Runners call this
+    * after each query's action has completed, which is exactly when
+    * the checkpoint-releasing tier is safe to run too.
     */
-  def runPendingCleanups(): Unit = synchronized {
-    pendingCleanups.foreach(f => f())
-    pendingCleanups.clear()
-    // drainAll, not drain: runners call this AFTER the query's action
-    // has fully materialized its frame, which is exactly when the
-    // fragile (checkpoint-releasing) tier is safe to run too
-    graft.Cleanup.drainAll()
-  }
+  def runPendingCleanups(): Unit = graft.Cleanup.drainAll()
 
   // Some expensive pipelines feed TWO driver queries (near-dup
   // clusters -> q_neardup_groups + q_neardup_keep; contamination ids
@@ -264,7 +258,7 @@ object SparkEntry {
       val li = t(s, dir, "lineitem").select("l_orderkey", "l_linenumber", "l_returnflag", "l_extendedprice")
       val (w, cleanup) =
         Winsorize.winsorizeWithCleanup(li, (0.05, 0.05), Seq("l_extendedprice"), Seq("l_returnflag"))
-      deferCleanup(cleanup)
+      Cleanup.deferFragile(cleanup)
       w.select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
         round(col("l_extendedprice"), 4).as("price_w"))
     }),
@@ -272,7 +266,7 @@ object SparkEntry {
       val li = t(s, dir, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
       val (w, cleanup) =
         Winsorize.winsorizeWithCleanup(li, (0.01, 0.01), Seq("l_quantity", "l_extendedprice"), Nil)
-      deferCleanup(cleanup)
+      Cleanup.deferFragile(cleanup)
       w.select(col("l_orderkey"), col("l_linenumber"),
         round(col("l_quantity"), 6).as("qty_w"),
         round(col("l_extendedprice"), 4).as("price_w"))
@@ -292,7 +286,7 @@ object SparkEntry {
       val li = t(s, dir, "lineitem").select("l_orderkey", "l_linenumber", "l_returnflag", "l_extendedprice")
       val (p, cleanup) =
         Portfolio.portfolioWithCleanup(li, "l_extendedprice", ngroups = 5, byvars = Seq("l_returnflag"))
-      deferCleanup(cleanup)
+      Cleanup.deferFragile(cleanup)
       p.select("l_orderkey", "l_linenumber", "l_returnflag", "portfolio")
     }),
     "q_portfolio_hard" -> ((s, dir) => {
@@ -492,7 +486,7 @@ object SparkEntry {
       // determinism + pruning quality are spec'd in ZOrderSpec)
       val e = eventsTable(s, dir).select(col("event_id"), col("value"), col("user_id"))
       val (out, cleanup) = ZOrder.withZBucket(e, Seq("value", "user_id"), bits = 4, nBuckets = 8)
-      deferCleanup(cleanup)
+      Cleanup.deferFragile(cleanup)
       out.select(col("event_id"), col("zvalue"), col("zbucket"))
     }),
     "q_range_join" -> ((s, dir) => {
@@ -591,7 +585,7 @@ object SparkEntry {
       // all-pairs stage anywhere
       val (out, cleanup) = graft.pipeline.Dedup.winnowVerifiedWithCleanup(
         t(s, dir, "documents"), "doc_id", "text")
-      deferCleanup(cleanup)
+      Cleanup.deferFragile(cleanup)
       out.select(col("id_a"), col("id_b"), col("n_shared"), round(col("jac"), 6).as("jac"))
     }),
     "q_winnow_candidates" -> ((s, dir) => {
@@ -602,7 +596,7 @@ object SparkEntry {
       val (pairs, cleanup) = graft.pipeline.Dedup.winnowCandidatesWithCleanup(
         t(s, dir, "documents"), "doc_id", "text", k = 20, w = 16,
         minShared = 2L, maxHashDocs = 100)
-      deferCleanup(cleanup)
+      Cleanup.deferFragile(cleanup)
       pairs
     }),
     "q_rolling_hash" -> ((s, dir) => {
@@ -764,7 +758,7 @@ object SparkEntry {
       val d = t(s, dir, "documents")
       val (out, cleanup) =
         Dedup.minhashCandidatesWithCleanup(d, "doc_id", "text", shingleWords = 3, numHashes = 8, bands = 4)
-      deferCleanup(cleanup)
+      Cleanup.deferFragile(cleanup)
       out
     }),
     "q_cross_neardup" -> ((s, dir) => {
@@ -779,7 +773,7 @@ object SparkEntry {
       val (out, cleanup) = Dedup.crossCorpusCandidatesWithCleanup(
         d.where(col("doc_id") % 37 === 0), d.where(col("doc_id") % 37 =!= 0),
         "doc_id", "text", shingleWords = 3, numHashes = 8, bands = 8)
-      deferCleanup(cleanup)
+      Cleanup.deferFragile(cleanup)
       out
     }),
     "q_cross_neardup_verified" -> ((s, dir) => {
@@ -794,7 +788,7 @@ object SparkEntry {
         d.where(col("doc_id") % 37 === 0), d.where(col("doc_id") % 37 =!= 0),
         "doc_id", "text", shingleWords = 3, numHashes = 8, bands = 8,
         dropThreshold = 0.5)
-      deferCleanup(cleanup)
+      Cleanup.deferFragile(cleanup)
       out.select(col("id_a"), col("id_b"), col("n_band_matches"),
         round(col("jac"), 6).as("jac"), col("dropped").cast("int").as("dropped"))
     }),
@@ -817,7 +811,7 @@ object SparkEntry {
       val store = graft.pipeline.IncrementalDedup.readStore(s, path, "doc_id")
       val (out, cleanup) = graft.pipeline.IncrementalDedup.candidatesWithStoreCleanup(
         store, batchB, "doc_id", "text", newPairsOnly = false)
-      deferCleanup(cleanup)
+      Cleanup.deferFragile(cleanup)
       out
     }),
     "q_simhash" -> ((s, dir) => {
@@ -833,7 +827,7 @@ object SparkEntry {
       // each document tokenized/shingled exactly once
       val d = t(s, dir, "documents")
       val (out, cleanup) = Dedup.jaccardCandidatesWithCleanup(d, "doc_id", "text")
-      deferCleanup(cleanup)
+      Cleanup.deferFragile(cleanup)
       out.select(col("id_a"), col("id_b"), round(col("jac"), 6).as("jac"))
     }),
     "q_neardup_groups" -> ((s, dir) => nearDupClusters(s, dir)),
@@ -852,7 +846,7 @@ object SparkEntry {
       // dense; real corpora keep the 1000 default
       val (out, cleanup) =
         Dedup.simhashCandidatesWithCleanup(d, "doc_id", "text", bits = 32, bands = 4, maxHamming = 3, maxBucketSize = 100)
-      deferCleanup(cleanup)
+      Cleanup.deferFragile(cleanup)
       out
     }),
     "q_embed_neardups" -> ((s, dir) => {
@@ -871,7 +865,7 @@ object SparkEntry {
       val cents = Similarity.kmeansCentroids(e, "vec_id", "emb", k = 16, iters = 1)
       val (out, cleanup) = Dedup.semDedupWithCleanup(e, "vec_id", "emb", threshold = 0.25,
         centroids = Some(cents), maxCellSize = 1000)
-      deferCleanup(cleanup)
+      Cleanup.deferFragile(cleanup)
       out.select(col("vec_id"), col("label"))
     }),
     // ---- pipeline: similarity ------------------------------------
@@ -1249,7 +1243,7 @@ object SparkEntry {
       val (out, cleanup) = Sampling.dsirLogWeightsWithCleanup(
         d.where(col("doc_id") % 37 =!= 0), d.where(col("doc_id") % 37 === 0),
         "doc_id", "text", buckets = 256)
-      deferCleanup(cleanup)
+      Cleanup.deferFragile(cleanup)
       out.select(col("doc_id"), round(col("logw"), 6).as("logw"))
     }),
     // ---- pipeline: sampling --------------------------------------
@@ -1521,7 +1515,7 @@ object SparkEntry {
       val d = t(s, dir, "documents")
       val (out, cleanup) = graft.pipeline.Dedup
         .repeatedSubstringSpansWithCleanup(d, "doc_id", "text", window = 40)
-      deferCleanup(cleanup)
+      Cleanup.deferFragile(cleanup)
       out
     }),
     "q_bloom" -> ((s, dir) => {
@@ -1584,7 +1578,7 @@ object SparkEntry {
       val e = src.select(col("id").as("src"), ((col("id") * 3 + 1) % 100).as("dst"))
         .unionByName(src.select(col("id").as("src"), ((col("id") * 7 + 2) % 100).as("dst")))
       val (out, cleanup) = Graph.pageRankWithCleanup(e, "src", "dst", iters = 3)
-      deferCleanup(cleanup)
+      Cleanup.deferFragile(cleanup)
       out
     }),
     "q_pagerank_host" -> ((s, dir) => {
@@ -1600,7 +1594,7 @@ object SparkEntry {
         .unionByName(src.select(url(col("id")).as("src_url"), url((col("id") * 7 + 2) % 100).as("dst_url")))
       val (out, cleanup) = Graph.pageRankWithCleanup(
         Graph.hostEdges(e, "src_url", "dst_url"), "host_src", "host_dst", iters = 3)
-      deferCleanup(cleanup)
+      Cleanup.deferFragile(cleanup)
       out
     }),
     "q_outlinks" -> ((s, dir) => {

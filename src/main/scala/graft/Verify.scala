@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,23 +12,11 @@ object Verify {
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => only(n) }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the events table ships nanosecond timestamps, which the
-      // vectorized parquet reader rejects; read them as raw longs and
-      // convert in SparkEntry.eventsTable
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // correctness must gate the SCALE path: force the distributed
-      // exact-percentile plan (size-adaptive default would route the
-      // small correctness SFs to the builtin aggregate, leaving the
-      // 100TB-shaped plan oracle-untested)
-      .config("graft.percentiles.distributedThresholdBytes", "0")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // correctness must gate the SCALE path: force the distributed
+    // exact-percentile plan (size-adaptive default would route the
+    // small correctness SFs to the builtin aggregate, leaving the
+    // 100TB-shaped plan oracle-untested)
+    val spark = graft.testing.Sessions.local(cpus, "graft.percentiles.distributedThresholdBytes" -> "0")
     new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -55,25 +55,6 @@ object IvfIndex {
   // stays small, few enough that the sidecar doesn't fragment
   private val KeymapBuckets = 64
 
-  /** Optimization-round debug hook: when the session conf
-    * `graft.debug.dumpBuildPlans` names a directory, every store build
-    * writes the FORMATTED physical plan of its assigned cell-row frame
-    * there (file `<dirTag>_<basename(path)>.txt`) — the receipt for
-    * build-side plan-shape claims (plans/r19). Off by default; never
-    * changes what a build computes.
-    */
-  private def dumpBuildPlan(df: DataFrame, path: String): Unit = {
-    val dir = df.sparkSession.conf.get("graft.debug.dumpBuildPlans", "")
-    if (dir.nonEmpty) {
-      val base = new java.io.File(path).getName
-      val sf = new java.io.File(path).getParentFile.getName
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(dir, s"build_${sf}_$base.txt"),
-        df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
-    }
-  }
-
   /** Collect a model-sized frame (centroids — rows the driver
     * already holds whole whenever the frame is broadcast) and re-embed
     * it as a depth-1 literal relation, broadcast-tagged.
@@ -295,7 +276,6 @@ object IvfIndex {
       idCol, vecCol, int8, payloadCols)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      dumpBuildPlan(assigned, path)
       // phase 1 — the cell write (which materializes the persist) runs
       // CONCURRENTLY with the driver-literal sidecars; phase 2 — the
       // sinks that re-read `assigned` run once the persist is
@@ -445,7 +425,6 @@ object IvfIndex {
       refine = refineInt8, payload = payloadCols)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      dumpBuildPlan(assigned, path)
       // phase 1 — cells (materializing the persist) overlapped with the
       // four driver-literal sidecars; phase 2 — the assigned re-readers
       // (r20 opt, guide §2.6)
@@ -537,7 +516,6 @@ object IvfIndex {
         scoreDecimals, tiny, refine = refineInt8, payload = payloadCols)
         .persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        dumpBuildPlan(assigned, path)
         // overlapped sink phases, as in the raw build (r20 opt, §2.6)
         graft.Cleanup.concurrently(Seq(
           () => graft.sources.Sink.writePartitioned(

@@ -518,8 +518,8 @@ object Similarity {
     *    relation: one Spark job in all.
     *  - Distributed route ([[kmeansCentroidsDistributed]]), above the
     *    cap, for `iters = 0`, and for shapes the driver route does not
-    *    take (a null vector or vector element, empty or ragged
-    *    vectors, a decimal element type, `k < 0`): per iteration one collect of
+    *    take (a null vector element, empty or ragged vectors, a
+    *    decimal element type, `k < 0`): per iteration one collect of
     *    the k-row centroid frame into the packed assignment kernel and
     *    one (cent, dim)-keyed hash agg whose shuffle carries k x dims
     *    rows after map-side combine — no all-pairs stage — about four
@@ -530,8 +530,10 @@ object Similarity {
     * boundary. The cap is not a knob: below it one thread finishes
     * the fit in milliseconds where the distributed loop pays its jobs
     * every round, and above it the driver heap, not speed, is the
-    * limit. A centroid that attracts no rows drops out (standard
-    * Lloyd). Train offline and persist the result for reuse.
+    * limit. Both routes drop null-vector rows before the draw, so a
+    * null vector is never drawn and never assigned. A centroid that
+    * attracts no rows drops out (standard Lloyd). Train offline and
+    * persist the result for reuse.
     *
     * Returns the fitted (cent_id, __cv__, __cn__) broadcast frame —
     * feed it to [[kmeansAssign]] for cluster labels.
@@ -553,7 +555,8 @@ object Similarity {
       case _                            => false
     }
     if (iters < 1 || k < 0 || !doubleMeans) return distributed
-    val probe = df.select(col(idCol).as("cent_id"), col(vecCol).cast("array<double>").as("__cv__"),
+    val probe = df.where(col(vecCol).isNotNull)
+      .select(col(idCol).as("cent_id"), col(vecCol).cast("array<double>").as("__cv__"),
       norm(col(vecCol)).as("__cn__"), md5(col(idCol).cast("string")).as("__h__"))
     graft.internal.collectAtMost(probe, DriverKmeansRowCap)
       .flatMap(driverKmeans(probe, _, k, iters, scoreDecimals, centroidDecimals))
@@ -573,7 +576,7 @@ object Similarity {
 
   /** The driver route over the collected probe `rows` of
     * [[kmeansCentroids]], or `None` for a shape it does not take: a
-    * null vector or element (its norm is null), ragged lengths, or
+    * null vector element (its norm is null), ragged lengths, or
     * empty vectors (the distributed update's `posexplode` filters
     * them out before the assignment).
     * Each step replays the distributed plan: centroids rank in id
@@ -643,9 +646,10 @@ object Similarity {
       scoreDecimals: Int = 4,
       centroidDecimals: Int = 6
   ): DataFrame = {
-    var cents = ivfCentroids(df, idCol, vecCol, k)
+    val src = df.where(col(vecCol).isNotNull)
+    var cents = ivfCentroids(src, idCol, vecCol, k)
     for (i <- 1 to iters) {
-      val assigned = ivfAssign(df, cents, idCol, vecCol, "row", keep = 1, scoreDecimals)
+      val assigned = ivfAssign(src, cents, idCol, vecCol, "row", keep = 1, scoreDecimals)
       cents = broadcast(
         assigned
           .select(col("cent_id"), posexplode(col("__rowv__")).as(Seq("__dim__", "__v__")))
@@ -680,7 +684,8 @@ object Similarity {
 
   /** Cluster labels under a fitted [[kmeansCentroids]] model:
     * (idCol, cent_id), assignment by the same deterministic
-    * (rounded cosine desc, cent_id asc) rule training used.
+    * (rounded cosine desc, cent_id asc) rule training used. A
+    * null-vector row gets no label, as training skips it.
     */
   def kmeansAssign(
       df: DataFrame,
@@ -689,7 +694,7 @@ object Similarity {
       vecCol: String,
       scoreDecimals: Int = 4
   ): DataFrame =
-    ivfAssign(df, cents, idCol, vecCol, "row", keep = 1, scoreDecimals)
+    ivfAssign(df.where(col(vecCol).isNotNull), cents, idCol, vecCol, "row", keep = 1, scoreDecimals)
       .select(col("row_id").as(idCol), col("cent_id"))
 
   // ---- product quantization (IVF-PQ: the compressed-domain path) --

@@ -29,4 +29,24 @@ class CacheHygieneSpec extends SparkSuite {
     assert((spark.sparkContext.getPersistentRDDs.keySet -- baseline).isEmpty,
       "shared frames still resident after releaseShared()")
   }
+
+  test("a built query's release handles survive Cleanup.drain() until runPendingCleanups") {
+    // a streaming tick's anytime drain() may run between a query's
+    // build and its action; the query sites' handles must stay parked
+    // (the fragile tier) until the runner's after-action cleanup
+    SparkEntry.runPendingCleanups()
+    val baseline = spark.sparkContext.getPersistentRDDs.keySet
+    Seq("q_minhash_candidates", "q_winsorize_by", "q_pagerank").foreach { name =>
+      val df = SparkEntry.queries(name)(spark, dir)
+      val parked = Cleanup.fragileCount
+      assert(parked >= 1, s"$name must park its release handle in the fragile tier")
+      Cleanup.drain()
+      assert(Cleanup.fragileCount == parked, s"drain() ran $name's handles before its action")
+      assert(df.count() >= 0)
+      SparkEntry.runPendingCleanups()
+      assert(Cleanup.fragileCount == 0 && Cleanup.pendingCount == 0)
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- baseline).isEmpty,
+        s"$name left persistent RDDs resident")
+    }
+  }
 }

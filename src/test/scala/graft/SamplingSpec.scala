@@ -326,23 +326,24 @@ class SamplingSpec extends SparkSuite {
     assertKmeansRoutesAgree(ragged, 3, 2, "ragged vectors", driverRoute = false)
   }
 
-  test("kmeans: a null vector has the same outcome on both routes, a failure once drawn") {
+  test("kmeans: both routes and the assignment drop null-vector rows") {
     val df = spark.range(1, 14).select(col("id").as("vec_id"),
       when(col("id") === 13, lit(null)).otherwise(array((col("id") % 2).cast("double"), col("id") * 0.01,
         (lit(1) - col("id") % 2).cast("double"))).as("emb"))
-    def outcome(cents: => DataFrame): String = scala.util.Try(centroidBits(cents)) match {
-      case scala.util.Success(rows) => s"rows $rows"
-      case scala.util.Failure(e) =>
-        val root = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq.last
-        s"failed: ${root.getClass.getName}"
-    }
-    // k = 3 leaves the null row out of the draw: the assignment gives
-    // it no cell and the means skip it; k = 13 draws it as a centroid
+    val clean = df.where(col("vec_id") =!= 13)
+    def labels(cents: DataFrame, in: DataFrame) =
+      Similarity.kmeansAssign(in, cents, "vec_id", "emb").collect().map(r => (r.getLong(0), r.get(1))).toSeq.sortBy(_._1)
+    // k = 3 leaves the null row out of the md5 draw; k = 13 would draw it
     for (k <- Seq(3, 13); iters <- Seq(1, 2)) {
-      val local = outcome(Similarity.kmeansCentroids(df, "vec_id", "emb", k, iters))
-      val dist = outcome(Similarity.kmeansCentroidsDistributed(df, "vec_id", "emb", k, iters))
-      assert(local == dist, s"k=$k iters=$iters: driver $local vs distributed $dist")
-      assert(local.startsWith("failed") == (k == 13), s"k=$k iters=$iters: $local")
+      val got = assertKmeansRoutesAgree(df, k, iters, "a null vector")
+      assert(got == assertKmeansRoutesAgree(clean, k, iters, "the same rows without it"),
+        s"k=$k iters=$iters: the null row changed the fit")
+      for (cents <- Seq(Similarity.kmeansCentroids(df, "vec_id", "emb", k, iters),
+                        Similarity.kmeansCentroidsDistributed(df, "vec_id", "emb", k, iters))) {
+        val got = labels(cents, df)
+        assert(got.map(_._1) == (1L to 12L), s"k=$k iters=$iters: $got")
+        assert(got == labels(cents, clean), s"k=$k iters=$iters")
+      }
     }
   }
 

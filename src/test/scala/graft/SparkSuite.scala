@@ -147,22 +147,9 @@ trait SparkSuite extends AnyFunSuite {
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // bucketed-table specs write through saveAsTable; keep the
-      // warehouse out of the repo working tree
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // bucketed-table specs write through saveAsTable; keep the
+  // warehouse out of the repo working tree
+  lazy val session: SparkSession = graft.testing.Sessions.local("4",
+    "spark.app.name" -> "graft-tests",
+    "spark.sql.warehouse.dir" -> java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
 }
