@@ -100,18 +100,15 @@ object Percentiles {
     // cuts (PercentilesSpec), so the switch can never change results
     // — it is purely a physical-plan choice, like AQE picking a join
     // strategy. Catalyst's sizeInBytes estimate is available at
-    // composition time (no job). Tunable / forceable via conf for
-    // tests and unusual deployments.
-    val threshold = spark.conf
-      .get("graft.percentiles.distributedThresholdBytes", (16L << 20).toString).toLong
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    // composition time (no job). [[distributedPath]] holds the rule
+    // and its conf, forceable for tests and unusual deployments.
     // `routeDistributed` (r20 opt): as in [[boundsMulti]] — a caller
     // whose input is a 1:1 derivation of a frame it already routed
     // (ZOrder's file-bucket cuts over the zvalue projection, whose
     // crossJoin-inflated ESTIMATE would always read as huge) passes
     // the base frame's routing so the physical path tracks the real
     // data size. Both paths are bit-identical (PercentilesSpec).
-    if (routeDistributed.map(!_).getOrElse(est < threshold)) {
+    if (!routeDistributed.getOrElse(distributedPath(df))) {
       val agg = exactPercentiles(col("__v__"), ps).as(cutsCol)
       val out =
         (if (byvars.isEmpty) vals.agg(agg) else vals.groupBy(keys: _*).agg(agg))
@@ -218,11 +215,7 @@ object Percentiles {
     require(ps.nonEmpty, "ps must be non-empty")
     require(ps.forall(p => p >= 0 && p <= 1), s"percentiles must be in [0,1], got $ps")
     val keys = byvars.map(col)
-    val spark = df.sparkSession
-    val threshold = spark.conf
-      .get("graft.percentiles.distributedThresholdBytes", (16L << 20).toString).toLong
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (routeDistributed.map(!_).getOrElse(est < threshold)) {
+    if (!routeDistributed.getOrElse(distributedPath(df))) {
       // one pass, N percentile expressions; NaN pre-nulled per column
       // exactly like the single-column path's vals filter
       val aggs = values.map { case (out, v) =>
@@ -293,10 +286,6 @@ object Percentiles {
   ): (DataFrame, () => Unit) = {
     require(bounds.nonEmpty, "bounds must be non-empty")
     val keys = byvars.map(col)
-    val spark = df.sparkSession
-    val threshold = spark.conf
-      .get("graft.percentiles.distributedThresholdBytes", (16L << 20).toString).toLong
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     // `routeDistributed` (r20 opt): a caller computing several DEPENDENT
     // passes over the same underlying data routes them all by the BASE
     // frame's size — a later pass's input carries the earlier bounds
@@ -305,7 +294,7 @@ object Percentiles {
     // (q_winsorize_by at sf0.1 ran builtin hi + distributed lo). Both
     // physical paths are bit-identical by contract (PercentilesSpec),
     // so routing never changes results.
-    if (routeDistributed.map(!_).getOrElse(est < threshold)) {
+    if (!routeDistributed.getOrElse(distributedPath(df))) {
       // one pass: clean per-column inside the aggregate (percentile
       // ignores nulls; NaN pre-nulled to match the distributed path)
       val aggs = bounds.map { case (out, v, p) =>

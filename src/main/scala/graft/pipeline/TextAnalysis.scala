@@ -594,8 +594,8 @@ object TextAnalysis {
     * actually use, where [[tokenCount]] / [[regexTokenCount]] are
     * estimates. `merges` is the ordered merge list (position =
     * priority, lower merges first — the artifact BPE training
-    * produces); each whitespace word starts as its character
-    * sequence and the lowest-rank adjacent pair merges repeatedly
+    * produces); each whitespace word starts as its code points and
+    * the lowest-rank adjacent pair merges repeatedly
     * until none applies (greedy BPE, Sennrich et al. 2016; leftmost
     * wins rank ties, the reference-implementation rule). The rank
     * table travels in the UDF closure (broadcast with the task
@@ -610,7 +610,7 @@ object TextAnalysis {
     udf { (text: String) =>
       if (text == null) null
       else text.split("\\s+").filter(_.nonEmpty).flatMap { w =>
-        val toks = scala.collection.mutable.ArrayBuffer[String](w.map(_.toString): _*)
+        val toks = scala.collection.mutable.ArrayBuffer[String](codePoints(w): _*)
         var done = toks.length < 2
         while (!done) {
           var best = -1
@@ -641,74 +641,68 @@ object TextAnalysis {
     df.withColumn("n_bpe",
       coalesce(size(bpeTokensUdf(merges)(col(textCol))), lit(0)).cast("long"))
 
+  /** Largest vocabulary (distinct whitespace words) [[bpeTrainMerges]]
+    * trains. Training runs on the driver, so the cap bounds the driver
+    * heap one call holds: one token array a word (a string a
+    * character, about 400 bytes for a 6-letter word) and the
+    * pair-count map — about 100 MB at 2^18 words of 5 to 8 letters.
+    * It is a constant, not a conf: a distributed loop measured 5x to
+    * 200x slower than the driver loop at every size up to the cap (on
+    * 4 vCPUs, 500 s against 36 s for 512 merges at 2^18 words), and
+    * above the cap the driver heap, not speed, is the limit.
+    */
+  private[graft] val DriverVocabCap: Int = 1 << 18
+
   /** TRAIN the BPE merge table in-engine (Sennrich et al. 2016,
     * arXiv:1508.07909) — the fit side of [[bpeTokensUdf]], closing
     * the tokenize loop the way `q_quality_fit` closes the
     * classifier's: corpus → merges → model-true token counts.
     *
-    * Classic formulation: training iterates over the WORD-FREQUENCY
-    * table, not the corpus — one groupBy collapses the text to
-    * (distinct word, count), so training cost depends on |vocab|
-    * however large the corpus is. Two physical paths, BIT-IDENTICAL
-    * merges from both (BpeTrainSpec pins them against an independent
-    * local reference), chosen by the vocabulary row count against
-    * `graft.bpe.driverVocabLimit` (default 262144 — tens of MB):
+    * Training iterates over the WORD-FREQUENCY table, not the corpus:
+    * one groupBy collapses the text to (distinct word, count), so
+    * training cost depends on |vocab| however large the corpus is.
+    * One route: a bounded collect of that table (at most
+    * [[DriverVocabCap]] rows, else an `IllegalArgumentException` that
+    * names the cap), then the classic sequential loop on the driver
+    * with incremental pair counts. That is two Spark jobs, the word
+    * count's shuffle stage and the collect; `numMerges == 0` runs
+    * none.
     *
-    *  - SMALL vocab: collect the (word, count) table once and run
-    *    the classic sequential loop on the driver — 64 merges cost
-    *    TWO jobs total (materialize + collect) instead of one per
-    *    merge. Tie-breaks compare UTF-8 bytes unsigned, exactly like
-    *    Spark's string ordering, so the paths cannot diverge on
-    *    non-ASCII tokens.
-    *  - LARGE vocab: the distributed loop with INCREMENTAL pair-
-    *    count maintenance. The pair-count frame is built once, then
-    *    per merge (a, b): only words whose token array actually
-    *    changed contribute a delta (negative pairs from the old
-    *    array, positive from the merged one) — the full-vocab pair
-    *    explode+recount happens once, not `numMerges` times. Per
-    *    iteration: one tiny-delta union-agg checkpointed eagerly
-    *    (the pairs frame is DISTINCT pairs — vocab-bounded, never
-    *    corpus-sized) and one limit-1 argmax collect (deterministic
-    *    tie-break: count desc, then pair lexicographic).
-    *
-    * Merge application stays leftmost-greedy non-overlapping (the
-    * [[bpeTokensUdf]] rule). The word table localCheckpoints every
-    * `compactEvery` rounds (the kmeansCentroids depth-bounding
-    * pattern). Stops early when no pair repeats (count >= 2, the
-    * reference trainer's min_frequency default). Train offline and
-    * persist the merges; serving ships them in the task closure like
-    * any model artifact.
+    * Each word starts as its code points (an emoji is one token, as
+    * in [[bpeTokensUdf]]). The argmax takes the highest pair count,
+    * then the smaller pair by unsigned UTF-8 bytes (Spark's string
+    * order). Merge application is leftmost-greedy non-overlapping
+    * (the [[bpeTokensUdf]] rule). Training stops early when no pair
+    * repeats (count >= 2, the reference trainer's min_frequency
+    * default). Train offline and persist the merges; serving ships
+    * them in the task closure like any model artifact.
     */
-  def bpeTrainMerges(
-      df: DataFrame,
-      textCol: String,
-      numMerges: Int,
-      compactEvery: Int = 8
-  ): Seq[(String, String)] = {
+  def bpeTrainMerges(df: DataFrame, textCol: String, numMerges: Int): Seq[(String, String)] = {
     require(numMerges >= 0, s"numMerges must be >= 0, got $numMerges")
-    val spark = df.sparkSession
-    val charsOf = udf((w: String) => w.map(_.toString).toArray)
-    val (words0, release0) = graft.internal.localCheckpointTracked(
-      df.select(explode(split(col(textCol), "\\s+")).as("__w__"))
-        .where(col("__w__") =!= "")
-        .groupBy(col("__w__")).agg(count(lit(1)).as("__c__"))
-        .select(charsOf(col("__w__")).as("__toks__"), col("__c__")),
-      eager = true)
-    val driverLimit = spark.conf
-      .get("graft.bpe.driverVocabLimit", (1 << 18).toString).toLong
-    val vocabRows = words0.count()
-    if (numMerges == 0) { release0(); return Seq.empty }
-    if (vocabRows <= driverLimit) {
-      val vocab = words0.collect()
-        .map(r => (r.getSeq[String](0).toArray, r.getLong(1)))
-      release0()
-      trainMergesLocal(vocab, numMerges)
-    } else trainMergesDistributed(words0, release0, numMerges, compactEvery)
+    if (numMerges == 0) return Seq.empty
+    val wordCounts = df.select(explode(split(col(textCol), "\\s+")).as("__w__"))
+      .where(col("__w__") =!= "")
+      .groupBy(col("__w__")).agg(count(lit(1)).as("__c__"))
+    // the collected rows are not kept: the loop holds only the token arrays
+    val vocab = graft.internal.collectAtMost(wordCounts, DriverVocabCap)
+      .getOrElse(throw new IllegalArgumentException(
+        s"BPE training collects the vocabulary to the driver, and this one has more " +
+          s"distinct words than TextAnalysis.DriverVocabCap ($DriverVocabCap)"))
+      .map(r => (codePoints(r.getString(0)), r.getLong(1)))
+    trainMergesLocal(vocab, numMerges)
   }
 
+  /** `w` split into one string per code point — the initial tokens
+    * of BPE training and serving. Splitting UTF-16 units instead
+    * would cut a character outside the BMP (an emoji) into two lone
+    * surrogates, which Spark's UTF-8 encoding turns into `?`.
+    */
+  private def codePoints(w: String): Array[String] =
+    w.codePoints().toArray.map(cp => new String(Character.toChars(cp)))
+
   /** Unsigned UTF-8 byte order — Spark's binary string comparison,
-    * replicated so the driver path tie-breaks exactly like the
-    * distributed `orderBy`.
+    * so the trainer tie-breaks pairs the way an `orderBy` over them
+    * would.
     */
   private def utf8Less(x: String, y: String): Boolean = {
     val a = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -724,9 +718,8 @@ object TextAnalysis {
   }
 
   /** Leftmost-greedy non-overlapping merge of (a, b) in `toks` —
-    * the [[bpeTokensUdf]] rule, shared by both training paths.
-    * Returns `toks` itself when nothing merges (cheap no-change
-    * detection for the incremental delta).
+    * the [[bpeTokensUdf]] rule. Returns `toks` itself when nothing
+    * merges (cheap no-change detection for the incremental counts).
     */
   private def mergeOnce(toks: Array[String], a: String, b: String): Array[String] = {
     var has = false
@@ -747,9 +740,9 @@ object TextAnalysis {
   }
 
   /** The classic sequential trainer over a collected (word, count)
-    * table — the small-vocab physical path of [[bpeTrainMerges]].
-    * Pair counts are maintained INCREMENTALLY: only words containing
-    * the merged pair are recounted each round.
+    * table — the loop of [[bpeTrainMerges]]. Pair counts are
+    * maintained INCREMENTALLY: only words containing the merged pair
+    * are recounted each round.
     */
   private def trainMergesLocal(
       vocab: Array[(Array[String], Long)],
@@ -795,288 +788,6 @@ object TextAnalysis {
         }
       }
     }
-    merges.toSeq
-  }
-
-  /** Per-word, per-step pair-count deltas of applying the
-    * speculative merge window `spec` in order — the payload of the
-    * verification job. Each element is (step, a, b, ±1·occurrences)
-    * for this word; multiplied by the word's corpus count downstream.
-    */
-  private def stepDeltasLocal(
-      toks0: Array[String],
-      spec: Array[(String, String)]
-  ): Seq[(Int, String, String, Long)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var cur = toks0
-    var j = 0
-    while (j < spec.length) {
-      val (a, b) = spec(j)
-      val merged = mergeOnce(cur, a, b)
-      if (!(merged eq cur)) {
-        val d = scala.collection.mutable.HashMap.empty[(String, String), Long]
-        var i = 0
-        while (i < cur.length - 1) {
-          val k = (cur(i), cur(i + 1)); d(k) = d.getOrElse(k, 0L) - 1; i += 1
-        }
-        i = 0
-        while (i < merged.length - 1) {
-          val k = (merged(i), merged(i + 1)); d(k) = d.getOrElse(k, 0L) + 1; i += 1
-        }
-        d.foreach { case ((x, y), v) => if (v != 0L) out += ((j, x, y, v)) }
-        cur = merged
-      }
-      j += 1
-    }
-    out.toSeq
-  }
-
-  /** The job group id tagging the per-round candidate (argmax)
-    * collects of the distributed trainer — BpeTrainSpec counts jobs
-    * in this group to pin the amortization.
-    */
-  val BpeArgmaxJobGroup = "graft-bpe-argmax"
-
-  /** The large-vocab physical path of [[bpeTrainMerges]]:
-    * SPECULATE-THEN-VERIFY batched training, bit-identical to the
-    * sequential trainer.
-    *
-    * The classic loop is inherently serial — each argmax depends on
-    * the previous merge's recount — so one-merge-at-a-time costs ~2
-    * jobs per merge and a 32k-vocab train is ~64k jobs. This path
-    * amortizes it:
-    *
-    *  1. ONCE: collect the top-`speculationSample` words by count —
-    *     a bounded, Zipf-heavy sample the driver keeps in sync by
-    *     applying committed merges locally.
-    *  2. Per round: ONE exact top-`candidatePairs` collect of the
-    *     distributed pair frame (the argmax job; count of the M-th
-    *     row = certification threshold T), then train
-    *     `speculationWindow` merges LOCALLY on the sample — the
-    *     speculative sequence (its head is forced to the exact
-    *     global argmax, so every round commits >= 1 merge).
-    *  3. ONE distributed pass computes per-(step, pair) count deltas
-    *     of applying the window in order; the driver then verifies
-    *     step-by-step, with exact counts, how long the speculative
-    *     sequence equals what the sequential trainer would pick, and
-    *     commits exactly that prefix. Certification uses three facts:
-    *     existing pair counts only ever DECREASE under merges (so
-    *     nothing below the collected top-M can overtake an argmax
-    *     that stays > T); new pairs' exact counts arrive in the
-    *     deltas (any new pair whose positive-delta total is <= T can
-    *     never reach the argmax and may be dropped); and the step-0
-    *     argmax is the true global argmax by construction.
-    *
-    * Two guards keep step 3 sound and bounded:
-    *
-    *  - HOMOGRAPH COLLISIONS: the decrease-only fact holds ONLY while
-    *    every window step creates a genuinely new token string. When
-    *    step j's concatenation a+b equals a token string that already
-    *    existed (necessarily the string of an EARLIER merge — initial
-    *    tokens are single chars, so a 2+-char concatenation can only
-    *    collide with a prior merge's product, e.g. 'ab'+'c' after
-    *    'a'+'bc' both make 'abc'), pre-existing untracked pairs
-    *    involving that token can GAIN count and a hot pair's 0-seed
-    *    is no longer its true prior. The driver detects this exactly
-    *    (merge strings are known driver-side) and certifies nothing
-    *    PAST the collision step — the step itself is still decided on
-    *    pre-collision state, and the next round re-collects exact
-    *    counts, so collisions cost window length, never correctness.
-    *  - BOUNDED COLLECT: hot new pairs are collected by descending
-    *    positive-delta total, capped at `graft.bpe.hotPairsLimit`
-    *    (default 4096). If the cap truncates, the largest DROPPED
-    *    total raises the certification threshold (a dropped new pair
-    *    can never exceed its positive-delta total), so the committed
-    *    prefix just shortens — the collect is O(candidates + cap)
-    *    rows on ANY corpus, adversarial or not.
-    *
-    * A perfect speculation commits the whole window (the common case
-    * — the sample IS the vocab until corpora get 100 TB large);
-    * a mis-speculation just commits a shorter prefix and re-rounds.
-    * Either way the committed sequence is EXACTLY the sequential
-    * trainer's (BpeTrainSpec pins merge-for-merge equality, and a
-    * stressed-parameter case forces the partial-commit path).
-    * Takes ownership of `words0`/`release0`.
-    */
-  private def trainMergesDistributed(
-      words0: DataFrame,
-      release0: () => Unit,
-      numMerges: Int,
-      compactEvery: Int
-  ): Seq[(String, String)] = {
-    val spark = words0.sparkSession
-    import spark.implicits._
-    val window = spark.conf.get("graft.bpe.speculationWindow", "16").toInt
-    val sampleSize = spark.conf.get("graft.bpe.speculationSample", (1 << 16).toString).toInt
-    val candM = spark.conf.get("graft.bpe.candidatePairs", "512").toInt
-    val hotLimit = spark.conf.get("graft.bpe.hotPairsLimit", "4096").toInt
-    def pairsOf(wordsF: DataFrame): DataFrame = {
-      val n = size(col("__toks__"))
-      wordsF
-        .where(n >= 2)
-        .select(col("__c__"), explode(arrays_zip(
-          slice(col("__toks__"), lit(1), n - 1).as("a"),
-          slice(col("__toks__"), lit(2), n - 1).as("b"))).as("__p__"))
-        .groupBy(col("__p__.a").as("a"), col("__p__.b").as("b"))
-        .agg(sum(col("__c__")).as("cnt"))
-    }
-    // the speculation sample: top-S words by count (deterministic
-    // tiebreak); bounded driver memory at ANY corpus size
-    var sample: Array[(Array[String], Long)] = words0
-      .orderBy(col("__c__").desc, concat_ws(" ", col("__toks__")))
-      .limit(sampleSize)
-      .collect()
-      .map(r => (r.getSeq[String](0).toArray, r.getLong(1)))
-    var words = words0
-    var releaseWords = release0
-    var (pairs, releasePairs) =
-      graft.internal.localCheckpointTracked(pairsOf(words), eager = true)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    // every token string ever producible: initial tokens are single
-    // chars (can't equal a 2+-char concatenation), so this set of
-    // committed merge products is an exact collision oracle
-    val committedStrings = scala.collection.mutable.HashSet.empty[String]
-    var done = false
-    var round = 0
-    while (merges.size < numMerges && !done) {
-      // the per-round argmax job: exact top-M candidates
-      spark.sparkContext.setJobGroup(BpeArgmaxJobGroup, "BPE candidate top-M", false)
-      val cand =
-        try pairs
-          .where(col("cnt") >= 2)
-          .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-          .limit(candM)
-          .collect()
-        finally spark.sparkContext.clearJobGroup()
-      if (cand.isEmpty) done = true
-      else {
-        round += 1
-        val certT = if (cand.length == candM) cand.last.getLong(2) else 0L
-        val known = scala.collection.mutable.HashMap.empty[(String, String), Long]
-        cand.foreach(r => known((r.getString(0), r.getString(1))) = r.getLong(2))
-        val globalArgmax = (cand(0).getString(0), cand(0).getString(1))
-        val specTry = trainMergesLocal(sample, math.min(window, numMerges - merges.size))
-        val spec: Array[(String, String)] =
-          if (specTry.isEmpty || specTry.head != globalArgmax) Array(globalArgmax)
-          else specTry.toArray
-        // first window step whose product string collides with an
-        // earlier token string (committed merges or earlier steps):
-        // certification must not look past it (see scaladoc)
-        val collisionAt: Int = {
-          val seen = scala.collection.mutable.HashSet.empty[String]
-          var ci = 0
-          var at = Int.MaxValue
-          while (ci < spec.length && at == Int.MaxValue) {
-            val sstr = spec(ci)._1 + spec(ci)._2
-            if (committedStrings.contains(sstr) || seen.contains(sstr)) at = ci
-            seen += sstr
-            ci += 1
-          }
-          at
-        }
-        // ONE distributed pass: per-(step, pair) deltas of the window
-        val deltasUdf = udf((toks: Seq[String]) => stepDeltasLocal(toks.toArray, spec))
-        val (deltaAgg, releaseDelta) = graft.internal.localCheckpointTracked(
-          words
-            .select(col("__c__"), explode(deltasUdf(col("__toks__"))).as("__d__"))
-            .groupBy(col("__d__._1").as("step"), col("__d__._2").as("a"), col("__d__._3").as("b"))
-            .agg(sum(col("__d__._4") * col("__c__")).as("cnt"))
-            .where(col("cnt") =!= 0),
-          eager = true)
-        // collect only the deltas verification can act on: candidate
-        // pairs, plus new pairs whose positive-delta total clears T
-        // (anything below T can never reach the argmax)
-        val knownDf = broadcast(
-          known.keys.toSeq.map { case (a, b) => (a, b) }.toDF("a", "b"))
-        // top-(hotLimit+1) by positive-delta total: the +1 row, when
-        // present, bounds everything dropped — a dropped NEW pair's
-        // count never exceeds its positive-delta total, so raising
-        // the certification threshold to it keeps the commit sound
-        val hotRows = deltaAgg.groupBy(col("a"), col("b"))
-          .agg(sum(greatest(col("cnt"), lit(0L))).as("__ps__"))
-          .where(col("__ps__") > certT)
-          .orderBy(col("__ps__").desc, col("a").asc, col("b").asc)
-          .limit(hotLimit + 1)
-          .collect()
-        val dropCeil = if (hotRows.length > hotLimit) hotRows(hotLimit).getLong(2) else 0L
-        val effCertT = math.max(certT, dropCeil)
-        val hot = broadcast(
-          hotRows.take(hotLimit).map(r => (r.getString(0), r.getString(1))).toSeq.toDF("a", "b"))
-        val trackedRows = deltaAgg.join(knownDf, Seq("a", "b"), "left_semi")
-          .unionByName(deltaAgg.join(hot, Seq("a", "b"), "left_semi"))
-          .dropDuplicates("step", "a", "b")
-          .select(col("step"), col("a"), col("b"), col("cnt"))
-          .collect()
-        val byStep: Map[Int, Array[(String, String, Long)]] = trackedRows
-          .map(r => (r.getInt(0), (r.getString(1), r.getString(2), r.getLong(3))))
-          .groupBy(_._1).map { case (s, rs) => s -> rs.map(_._2) }
-        // driver verification: longest prefix of `spec` that IS the
-        // sequential trainer's choice sequence
-        var valid = 0
-        var stop = false
-        while (valid < spec.length && !stop) {
-          var bestP: (String, String) = null
-          var bestC = 1L
-          known.foreach { case (p, c) =>
-            if (c >= 2 && (bestP == null || c > bestC || (c == bestC &&
-                (utf8Less(p._1, bestP._1) ||
-                  (p._1 == bestP._1 && utf8Less(p._2, bestP._2)))))) {
-              bestP = p; bestC = c
-            }
-          }
-          if (bestP == null) stop = true                 // no pair >= 2 among tracked
-          else if (bestP != spec(valid)) stop = true     // speculation diverged
-          else if (valid > 0 && bestC <= effCertT) stop = true // can't certify vs uncollected/dropped
-          else {
-            byStep.getOrElse(valid, Array.empty).foreach { case (a, b, d) =>
-              val k = (a, b)
-              val n = known.getOrElse(k, 0L) + d
-              if (n == 0L) known.remove(k) else known(k) = n
-            }
-            valid += 1
-            // a collision step may be committed (it was decided on
-            // pre-collision state) but its deltas poison `known` for
-            // untracked/0-seeded pairs — nothing past it certifies
-            if (valid > collisionAt) stop = true
-          }
-        }
-        if (valid == 0) { releaseDelta(); done = true } // unreachable (head is exact); guard
-        else {
-          val commit = spec.take(valid)
-          merges ++= commit
-          commit.foreach { case (a, b) => committedStrings += (a + b) }
-          // pairs' = pairs + the committed steps' deltas (the pass
-          // above already computed them — no recount)
-          val (p2, r2) = graft.internal.localCheckpointTracked(
-            pairs.unionByName(
-                deltaAgg.where(col("step") < valid)
-                  .select(col("a"), col("b"), col("cnt")))
-              .groupBy(col("a"), col("b")).agg(sum(col("cnt")).as("cnt"))
-              .where(col("cnt") > 0),
-            eager = true)
-          releasePairs(); pairs = p2; releasePairs = r2
-          releaseDelta()
-          val applyCommitUdf = udf { (toks: Seq[String]) =>
-            var cur = toks.toArray
-            commit.foreach { case (a, b) => cur = mergeOnce(cur, a, b) }
-            cur.toSeq
-          }
-          words = words.select(applyCommitUdf(col("__toks__")).as("__toks__"), col("__c__"))
-          if (round % compactEvery == 0 || merges.size >= numMerges) {
-            val (cp, rel) = graft.internal.localCheckpointTracked(words, eager = true)
-            releaseWords(); words = cp; releaseWords = rel
-          }
-          // keep the sample in sync (committed merges only)
-          sample = sample.map { case (t, c) =>
-            var cur = t
-            commit.foreach { case (a, b) => cur = mergeOnce(cur, a, b) }
-            (cur, c)
-          }
-        }
-      }
-    }
-    releaseWords()
-    releasePairs()
     merges.toSeq
   }
 

@@ -5,18 +5,22 @@ import org.apache.spark.sql.functions._
 import graft.pipeline.TextAnalysis
 
 /** In-engine BPE training vs an independent local trainer: the
-  * distributed pair-count/merge loop must reproduce the classic
-  * single-machine algorithm exactly (same pair counting over
+  * driver merge loop over the collected vocabulary must reproduce the
+  * classic single-machine algorithm exactly (same pair counting over
   * overlapping positions, same count-desc/lexicographic tie-break,
   * same leftmost non-overlapping merge application).
   */
 class BpeTrainSpec extends SparkSuite {
 
-  /** Reference trainer: the Sennrich pseudocode, verbatim. */
+  /** Reference trainer: the Sennrich pseudocode, verbatim, over code
+    * points.
+    */
   private def localTrain(texts: Seq[String], numMerges: Int): Seq[(String, String)] = {
     var vocab: Map[Vector[String], Long] = texts
       .flatMap(_.split("\\s+").filter(_.nonEmpty))
-      .groupBy(identity).map { case (w, ws) => w.map(_.toString).toVector -> ws.size.toLong }
+      .groupBy(identity).map { case (w, ws) =>
+        w.codePoints().toArray.toVector.map(cp => new String(Character.toChars(cp))) -> ws.size.toLong
+      }
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var done = false
     while (merges.size < numMerges && !done) {
@@ -55,122 +59,48 @@ class BpeTrainSpec extends SparkSuite {
     "the the the them then there",
     "running runner run runs running")
 
-  /** Run `body` once per physical path: the vocab-size switch routes
-    * small vocabularies to the collected driver trainer, so the
-    * distributed incremental-delta loop must be FORCED (limit 0).
-    */
-  private def bothPaths(body: => Unit): Unit = {
-    val key = "graft.bpe.driverVocabLimit"
-    body // default: driver path at test vocab sizes
-    spark.conf.set(key, "0")
-    try body // forced: distributed incremental path
-    finally spark.conf.unset(key)
+  test("training reproduces the local reference merge for merge, both paths") {
+    val inputs: Seq[(Seq[String], Int)] =
+      Seq(corpus -> 12, corpus -> 20, corpus -> 24) ++
+        collisionCorpora.map(_ -> 16) ++
+        abcCorpora(4).map(_ -> 8)
+    inputs.foreach { case (docs, numMerges) =>
+      val got = TextAnalysis.bpeTrainMerges(textFrame(docs), "text", numMerges)
+      val want = localTrain(docs, numMerges)
+      assert(got == want, s"corpus=$docs merges=$numMerges:\n got: $got\nwant: $want")
+    }
+    assert(localTrain(corpus, 20).nonEmpty)
   }
-
-  test("training reproduces the local reference merge for merge, both paths") { bothPaths {
-    val s = spark; import s.implicits._
-    val df = corpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-    val got = TextAnalysis.bpeTrainMerges(df, "text", numMerges = 20)
-    val want = localTrain(corpus, 20)
-    assert(got == want, s"\n got: $got\nwant: $want")
-    assert(got.nonEmpty)
-  } }
 
   test("small-vocab training is job-bounded: 64 merges in a handful of jobs") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val merges =
-      try TextAnalysis.bpeTrainMerges(docs, "text", numMerges = 64)
-      finally {
-        // the listener bus is async — wait for the count to stabilize
-        var last = -1
-        var spins = 0
-        while (jobs.get() != last && spins < 50) {
-          last = jobs.get(); Thread.sleep(100); spins += 1
-        }
-        spark.sparkContext.removeSparkListener(listener)
-      }
+    val texts = docs.select("text").collect().map(_.getString(0)).toSeq
+    val (merges, jobs) = withJobCount(TextAnalysis.bpeTrainMerges(docs, "text", numMerges = 64))
     assert(merges.size == 64, s"corpus should support 64 merges, got ${merges.size}")
-    // the legacy loop ran >= one pair-count job per merge (>= 64 + the
-    // vocab build); the collected driver path needs only the vocab
-    // materialize + count + collect — pin >= 5x fewer than one-per-merge
-    assert(jobs.get() * 5 <= 64,
-      s"expected a job-bounded driver path, saw ${jobs.get()} jobs for 64 merges")
+    // one bounded collect of the vocabulary, then the loop on the
+    // driver: 2 jobs, because adaptive execution runs the word count's
+    // shuffle map stage as a job of its own before the collect's
+    assert(jobs == 2, s"expected 2 Spark jobs for 64 merges, saw $jobs")
+    assert(merges == localTrain(texts, 64))
   }
 
-  test("distributed path amortizes merges: 64 merges in <= 16 argmax jobs (VERDICT r12 #2)") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text")
-    val argmaxJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (js.properties != null &&
-            TextAnalysis.BpeArgmaxJobGroup == js.properties.getProperty("spark.jobGroup.id"))
-          argmaxJobs.incrementAndGet()
-        ()
-      }
-    }
-    spark.conf.set("graft.bpe.driverVocabLimit", "0") // force the distributed path
-    spark.sparkContext.addSparkListener(listener)
-    val merges =
-      try TextAnalysis.bpeTrainMerges(docs, "text", numMerges = 64)
-      finally {
-        var last = -1
-        var spins = 0
-        while (argmaxJobs.get() != last && spins < 50) {
-          last = argmaxJobs.get(); Thread.sleep(100); spins += 1
-        }
-        spark.sparkContext.removeSparkListener(listener)
-        spark.conf.unset("graft.bpe.driverVocabLimit")
-      }
-    assert(merges.size == 64)
-    // the one-merge-at-a-time loop paid one argmax per merge (64);
-    // speculate-then-verify must amortize at least 4x
-    assert(argmaxJobs.get() * 4 <= 64,
-      s"expected <= 16 argmax rounds for 64 merges, saw ${argmaxJobs.get()}")
-    // and the batched output is still the sequential trainer's
-    val texts = docs.select("text").collect().map(_.getString(0))
-    assert(merges == localTrain(texts.toSeq, 64))
-  }
+  /** Collision-dense corpora: pure-'a' run-length words and mixed
+    * a/b words repeatedly merge into strings equal to an earlier
+    * merge's product ('aa'+'a' after 'a'+'aa'), the case where the
+    * incremental pair counts must re-credit pairs that already exist.
+    */
+  private val collisionCorpora = Seq(
+    Seq("aaaaaaa aaa aa aaaa", "aaaaa aa aaaaaa", "a aaa aaaaaaaa"),
+    Seq("abab ab abab abab ab", "ababab abab ab", "ba bab abab"),
+    Seq("aaa aaa aaa aaa", "aa aa aa", "aaaa aaaa aaaa aaaa aaaa"),
+    Seq("aabaa aab aabaab aab", "baab aabaa baab", "ab aab aabaab aabaab"))
 
-  test("stressed speculation (tiny sample/window/candidates) still matches the reference") {
-    // a 3-word sample that CANNOT predict the corpus and a candidate
-    // list small enough that the certification threshold T trips:
-    // forces mis-speculation, partial commits, and re-rounds — the
-    // paths a perfect speculation never takes
-    val s = spark; import s.implicits._
-    val df = corpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-    Seq(
-      ("0", "3", "4", "4"),
-      ("0", "1", "2", "8"), // window 8 with a 1-word sample: head-forced rounds
-      ("0", "6", "16", "3")
-    ).foreach { case (dvl, sample, cand, win) =>
-      spark.conf.set("graft.bpe.driverVocabLimit", dvl)
-      spark.conf.set("graft.bpe.speculationSample", sample)
-      spark.conf.set("graft.bpe.candidatePairs", cand)
-      spark.conf.set("graft.bpe.speculationWindow", win)
-      try {
-        val got = TextAnalysis.bpeTrainMerges(df, "text", numMerges = 20)
-        val want = localTrain(corpus, 20)
-        assert(got == want, s"sample=$sample cand=$cand win=$win:\n got $got\nwant $want")
-      } finally Seq("graft.bpe.driverVocabLimit", "graft.bpe.speculationSample",
-        "graft.bpe.candidatePairs", "graft.bpe.speculationWindow")
-        .foreach(spark.conf.unset)
-    }
-  }
-
-  test("random corpora under starved speculation configs still match the reference") {
-    // random tiny-alphabet corpora (heavy ties, deep merge chains)
-    // run with a sample too small to predict and a candidate list
-    // small enough that the certification threshold binds — partial
-    // commits and forced-head rounds on adversarial data
+  /** Random tiny-alphabet corpora: deep merge chains and heavy pair
+    * ties, the regime where a tie-break or count-maintenance slip
+    * shows.
+    */
+  private def abcCorpora(n: Int): Seq[Seq[String]] = {
     val gen = for {
       nDocs <- org.scalacheck.Gen.choose(1, 5)
       docs <- org.scalacheck.Gen.listOfN(nDocs, for {
@@ -181,82 +111,73 @@ class BpeTrainSpec extends SparkSuite {
         } yield cs.mkString)
       } yield words.mkString(" "))
     } yield docs
-    val s = spark; import s.implicits._
-    val keys = Map(
-      "graft.bpe.driverVocabLimit" -> "0",
-      "graft.bpe.speculationSample" -> "2",
-      "graft.bpe.candidatePairs" -> "4",
-      "graft.bpe.speculationWindow" -> "6")
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try Iterator.continually(gen.sample).flatten.take(4).foreach { docs =>
-      val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-      val got = TextAnalysis.bpeTrainMerges(df, "text", numMerges = 8)
-      val want = localTrain(docs, 8)
-      assert(got == want, s"corpus=$docs:\n got $got\nwant $want")
-    } finally keys.keys.foreach(spark.conf.unset)
+    Iterator.continually(gen.sample).flatten.take(n).toSeq
   }
 
-  test("homograph-merge collisions cannot poison certification (ADVICE r13)") {
-    // pure-'a' run-length words are collision-dense: 'aa'+'a', 'a'+'aa',
-    // 'aa'+'aa', 'aaa'+'a'... repeatedly produce strings equal to
-    // earlier merges' products, exactly the case where "existing pair
-    // counts only decrease" fails. A large candidate list makes
-    // certT=0 (nothing uncollected), so WITHOUT the collision stop the
-    // driver would certify the whole window from 0-seeded counts that
-    // undercount collided pre-existing pairs. Mixed a/b words add
-    // cross-run homographs.
+  private def textFrame(docs: Seq[String]) = {
     val s = spark; import s.implicits._
-    val corpora = Seq(
-      Seq("aaaaaaa aaa aa aaaa", "aaaaa aa aaaaaa", "a aaa aaaaaaaa"),
-      Seq("abab ab abab abab ab", "ababab abab ab", "ba bab abab"),
-      Seq("aaa aaa aaa aaa", "aa aa aa", "aaaa aaaa aaaa aaaa aaaa"),
-      Seq("aabaa aab aabaab aab", "baab aabaa baab", "ab aab aabaab aabaab"))
-    val keys = Map(
-      "graft.bpe.driverVocabLimit" -> "0",
-      "graft.bpe.speculationSample" -> (1 << 16).toString, // sample == vocab: speculation is perfect
-      "graft.bpe.candidatePairs" -> "512",                 // certT = 0: cert otherwise unconstrained
-      "graft.bpe.speculationWindow" -> "12")
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try corpora.foreach { docs =>
-      val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-      val got = TextAnalysis.bpeTrainMerges(df, "text", numMerges = 16)
-      val want = localTrain(docs, 16)
-      assert(got == want, s"corpus=$docs:\n got $got\nwant $want")
-    } finally keys.keys.foreach(spark.conf.unset)
+    docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
   }
 
-  test("hot-pair collect cap: forced-low limit shortens commits, never diverges (VERDICT r13 #5)") {
-    // hotPairsLimit=1 drops all but one new pair per round from the
-    // tracked set; the largest dropped positive-delta total raises
-    // the certification threshold, so the trainer must fall back to
-    // shorter commits while staying bit-identical
-    val s = spark; import s.implicits._
-    val docs = corpus
-    val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-    val keys = Map(
-      "graft.bpe.driverVocabLimit" -> "0",
-      "graft.bpe.speculationSample" -> (1 << 16).toString,
-      "graft.bpe.candidatePairs" -> "8",
-      "graft.bpe.speculationWindow" -> "10",
-      "graft.bpe.hotPairsLimit" -> "1")
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
     try {
-      val got = TextAnalysis.bpeTrainMerges(df, "text", numMerges = 24)
-      val want = localTrain(docs, 24)
-      assert(got == want, s"\n got $got\nwant $want")
-    } finally keys.keys.foreach(spark.conf.unset)
+      val out = body
+      // the listener bus is async — wait for the count to stabilize
+      var last = -1
+      var spins = 0
+      while (jobs.get() != last && spins < 50) {
+        last = jobs.get(); Thread.sleep(100); spins += 1
+      }
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("early stop: no pair with count >= 2 ends training before numMerges") { bothPaths {
-    val s = spark; import s.implicits._
-    val df = Seq((1L, "ab cd ef")).toDF("id", "text")
+  test("vocabulary at DriverVocabCap trains on the driver; one word more fails naming the cap") {
+    // distinct 5-letter base-26 words, id 0 -> "aaaaa"
+    def words(n: Long) = spark.range(n).select(concat((4 to 0 by -1).map(k =>
+      char(lit(97) + (col("id") / math.pow(26, k).toLong) % 26)): _*).as("text"))
+    val cap = TextAnalysis.DriverVocabCap.toLong
+    val (merges, jobs) = withJobCount(TextAnalysis.bpeTrainMerges(words(cap), "text", numMerges = 2))
+    assert(jobs == 2, s"expected 2 Spark jobs at the cap, saw $jobs")
+    val texts = words(cap).collect().map(_.getString(0)).toSeq
+    assert(merges.size == 2 && merges == localTrain(texts, 2), s"got $merges")
+    val err = intercept[IllegalArgumentException](
+      TextAnalysis.bpeTrainMerges(words(cap + 1), "text", numMerges = 2))
+    assert(err.getMessage.contains("DriverVocabCap"), err.getMessage)
+    val (none, zeroJobs) = withJobCount(TextAnalysis.bpeTrainMerges(words(cap + 1), "text", 0))
+    assert(none.isEmpty && zeroJobs == 0, s"numMerges = 0 must run no job, saw $zeroJobs")
+  }
+
+  test("early stop: no pair with count >= 2 ends training before numMerges") {
     // every adjacent pair occurs once -> zero merges
-    assert(TextAnalysis.bpeTrainMerges(df, "text", numMerges = 5).isEmpty)
-  } }
+    assert(TextAnalysis.bpeTrainMerges(textFrame(Seq("ab cd ef")), "text", numMerges = 5).isEmpty)
+  }
+
+  test("characters outside the BMP train and serve as one token each") {
+    // 😀 and 🙂 share a UTF-16 high surrogate: split by UTF-16 unit,
+    // both emoji would become the same two `?` tokens
+    val docs = Seq("😀😀😀 🙂🙂 😀😀😀", "🙂🙂 🙂🙂")
+    val df = textFrame(docs)
+    val merges = TextAnalysis.bpeTrainMerges(df, "text", numMerges = 5)
+    assert(merges == Seq(("😀", "😀"), ("🙂", "🙂"), ("😀😀", "😀")), s"got $merges")
+    assert(merges == localTrain(docs, 5))
+    val nBpe = TextAnalysis.withBpeTokenCount(df, "text", merges)
+      .agg(sum("n_bpe")).head().getLong(0)
+    val untrained = TextAnalysis.withBpeTokenCount(df, "text", Nil)
+      .agg(sum("n_bpe")).head().getLong(0)
+    assert(untrained == 12 && nBpe == 5, s"untrained $untrained, trained $nBpe")
+  }
 
   test("trained merges close the loop: serving counts drop as merges learn the corpus") {
-    val s = spark; import s.implicits._
-    val df = corpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+    val df = textFrame(corpus)
     val merges = TextAnalysis.bpeTrainMerges(df, "text", numMerges = 30)
     val untrained = TextAnalysis.withBpeTokenCount(df, "text", Nil)
       .agg(sum("n_bpe")).head().getLong(0)
@@ -272,43 +193,10 @@ class BpeTrainSpec extends SparkSuite {
   }
 
   test("random small-alphabet corpora: both paths reproduce the reference, merge for merge") {
-    // tiny alphabets force deep merge chains and heavy pair ties —
-    // the regime where a tie-break or delta-maintenance slip shows
-    val gen = for {
-      nDocs <- org.scalacheck.Gen.choose(1, 5)
-      docs <- org.scalacheck.Gen.listOfN(nDocs, for {
-        nWords <- org.scalacheck.Gen.choose(1, 8)
-        words <- org.scalacheck.Gen.listOfN(nWords, for {
-          len <- org.scalacheck.Gen.choose(1, 6)
-          cs <- org.scalacheck.Gen.listOfN(len, org.scalacheck.Gen.oneOf("a", "b", "c"))
-        } yield cs.mkString)
-      } yield words.mkString(" "))
-    } yield docs
-    val s = spark; import s.implicits._
-    val key = "graft.bpe.driverVocabLimit"
-    Iterator.continually(gen.sample).flatten.take(5).foreach { docs =>
-      val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+    abcCorpora(5).foreach { docs =>
+      val got = TextAnalysis.bpeTrainMerges(textFrame(docs), "text", numMerges = 8)
       val want = localTrain(docs, 8)
-      Seq(null, "0").foreach { forced =>
-        if (forced == null) spark.conf.unset(key) else spark.conf.set(key, forced)
-        try {
-          val got = TextAnalysis.bpeTrainMerges(df, "text", numMerges = 8)
-          assert(got == want, s"path=$forced corpus=$docs: got $got want $want")
-        } finally spark.conf.unset(key)
-      }
+      assert(got == want, s"corpus=$docs: got $got want $want")
     }
-  }
-
-  test("compaction keeps the distributed plan bounded across many iterations") {
-    val s = spark; import s.implicits._
-    val df = corpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-    spark.conf.set("graft.bpe.driverVocabLimit", "0") // compactEvery only exists distributed
-    try {
-      // compactEvery=2 forces several checkpoint hops; result unchanged
-      val a = TextAnalysis.bpeTrainMerges(df, "text", numMerges = 12, compactEvery = 2)
-      val b = TextAnalysis.bpeTrainMerges(df, "text", numMerges = 12, compactEvery = 100)
-      assert(a == b)
-      assert(a == localTrain(corpus, 12))
-    } finally spark.conf.unset("graft.bpe.driverVocabLimit")
   }
 }
