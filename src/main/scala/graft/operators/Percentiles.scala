@@ -6,46 +6,55 @@ import org.apache.spark.sql.functions._
 
 import graft.internal._
 
-/** Distributed exact percentiles (NumPy/pandas linear interpolation —
-  * the reference's quantile semantics, pd_utils/port.py:263-268 /
-  * transform.py:221-232).
+/** Exact percentiles (NumPy/pandas linear interpolation — the
+  * reference's quantile semantics, pd_utils/port.py:263-268 /
+  * transform.py:221-232; type 7 of Hyndman & Fan 1996), on one of two
+  * routes chosen by input size ([[distributedPath]]). Every entry
+  * point ([[cutsWithCleanup]], [[cutsMultiWithCleanup]],
+  * [[boundsMulti]], [[winsorBounds]]) runs the same pipeline per
+  * route, and both routes give BIT-IDENTICAL cuts (PercentilesSpec).
   *
-  * Spark's builtin exact `percentile` aggregate buffers the whole
-  * value multiset of each group as a boxed `OpenHashMap[AnyRef, Long]`
-  * inside ONE aggregation buffer — measured 12-18 s and multi-GB GC
-  * churn on a 6M-row column at sf1, and a guaranteed OOM cliff once a
-  * single group's distinct values outgrow one task's heap. This
-  * operator computes the same cut values (bit-identical: the
-  * interpolation expression mirrors the builtin's scalar arithmetic
-  * term for term) as a distributed plan instead:
+  * Builtin route (small inputs): one [[graft.plans.ExactPercentiles]]
+  * array aggregate per value column in a single aggregation pass. Like
+  * Spark's builtin exact `percentile`, it buffers the whole value
+  * multiset of each group in ONE aggregation buffer, which is harmless
+  * below the threshold and an OOM cliff above it (the builtin measured
+  * 12-18 s and multi-GB GC churn on a 6M-row column at sf1).
   *
-  *  1. count per (byvars, value) — one map-side-combined hash-agg
-  *     shuffle; everything after runs on DISTINCT values only;
-  *  2. range-repartition the counts on (byvars, value) so each
+  * Distributed route (the rank pipeline, [[stackedComponents]]):
+  *
+  *  1. every value column is stacked into one long frame keyed by its
+  *     entry index `__b__`, and counted per (byvars, entry, value) —
+  *     one map-side-combined hash-agg shuffle; everything after runs
+  *     on DISTINCT values only;
+  *  2. range-repartition the counts on (byvars, entry, value) so each
   *     partition holds a contiguous slice of each group's value
   *     order; per-partition cumulative counts are a partitioned
   *     window (parallel, spillable);
-  *  3. per-(partition, group) subtotals — a tiny
-  *     (numPartitions x |groups|)-row frame — prefix-sum into
-  *     partition offsets and broadcast back: every distinct value now
-  *     knows the exact global rank range [start, end) it covers, and
-  *     the group's non-null total N, with no single-task funnel over
-  *     data-sized input (the packSequences/shuffleRank recipe,
-  *     [[graft.pipeline.Sampling]]);
+  *  3. per-(partition, group, entry) subtotals — a tiny
+  *     (numPartitions x |groups| x |entries|)-row frame — prefix-sum
+  *     into partition offsets (windows partitioned by byvars and the
+  *     entry index, never global) and broadcast back: every distinct
+  *     value now knows the exact global rank range [start, end) it
+  *     covers, and its group's non-null total N, with no single-task
+  *     funnel over data-sized input (the packSequences/shuffleRank
+  *     recipe, [[graft.pipeline.Sampling]]);
   *  4. the rows covering floor/ceil of each target position
-  *     p*(N-1) — at most 2|ps| per group — are filtered out and
-  *     one tiny agg interpolates the cuts.
+  *     p*(N-1) — at most 2|ps| per group and entry — are filtered
+  *     out, and ONE aggregation by byvars picks each (entry,
+  *     position)'s rank values; [[interpolate]] finishes the cuts.
   *
-  * Partition boundaries chosen by repartitionByRange's sampling do
+  * Partition boundaries chosen by the range repartition's sampling do
   * not affect the result — ranks are exact under ANY contiguous
   * split — so the output is deterministic even though the sampling
   * is not.
   *
   * NULL and NaN values are excluded from ranks (callers pre-clean
-  * infinities per their own contract). A group with zero clean values
-  * produces no output row with `byvars` (join back as left -> null
-  * cuts, like the builtin's null), and a single all-null row without
-  * `byvars` (global aggregates always emit one row).
+  * infinities per their own contract). On both routes, a group with
+  * no clean value in any value column produces no output row with
+  * `byvars` (join back as left -> null cuts), and without `byvars`
+  * the single global row carries a NULL cuts array (NULL scalar
+  * bound) for a column with no clean value.
   */
 object Percentiles {
 
@@ -66,13 +75,19 @@ object Percentiles {
     out
   }
 
-  /** [[cuts]] plus a cleanup thunk for the internal ranked-counts
-    * persist: the counts/range-shuffle stage feeds BOTH the offsets
-    * broadcast and the rank refine, and without the (lazy) persist
-    * the whole scan + count-aggregation pipeline computes once per
-    * side (measured 3 source scans at sf1). The cleanup follows the
-    * minhashCandidatesWithCleanup convention (Dedup.scala): call it
-    * after the consuming action.
+  /** [[cuts]] plus a release handle for the pipeline's persists (the
+    * cuts frame, and on the distributed route the ranked counts,
+    * which feed both the offsets broadcast and the rank refine). The
+    * cleanup follows the minhashCandidatesWithCleanup convention
+    * (Dedup.scala): call it after the consuming action.
+    *
+    * `routeDistributed` overrides the size rule for a caller whose
+    * input is a 1:1 derivation of a frame it already routed (ZOrder's
+    * file-bucket cuts over the zvalue projection, whose
+    * crossJoin-inflated ESTIMATE would always read as huge): it
+    * passes the base frame's routing so the physical route tracks the
+    * real data size. Routes are bit-identical, so this changes plans,
+    * never values.
     */
   def cutsWithCleanup(
       df: DataFrame,
@@ -81,128 +96,15 @@ object Percentiles {
       ps: Seq[Double],
       cutsCol: String = "__cuts__",
       routeDistributed: Option[Boolean] = None
-  ): (DataFrame, () => Unit) = {
-    require(ps.nonEmpty, "ps must be non-empty")
-    require(ps.forall(p => p >= 0 && p <= 1), s"percentiles must be in [0,1], got $ps")
-    val keys = byvars.map(col)
-    val spark = df.sparkSession
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-
-    val vals = df
-      .select((keys :+ value.cast("double").as("__v__")): _*)
-      .where(col("__v__").isNotNull && !isnan(col("__v__")))
-
-    // Size-adaptive: below the threshold the builtin aggregate's
-    // whole-multiset buffer is harmless and its single pass beats the
-    // multi-stage distributed plan's fixed overhead (~1 s of extra
-    // stages); above it the buffer is the 12-18 s / OOM problem this
-    // operator exists to remove. Both paths produce BIT-IDENTICAL
-    // cuts (PercentilesSpec), so the switch can never change results
-    // — it is purely a physical-plan choice, like AQE picking a join
-    // strategy. Catalyst's sizeInBytes estimate is available at
-    // composition time (no job). [[distributedPath]] holds the rule
-    // and its conf, forceable for tests and unusual deployments.
-    // `routeDistributed` (r20 opt): as in [[boundsMulti]] — a caller
-    // whose input is a 1:1 derivation of a frame it already routed
-    // (ZOrder's file-bucket cuts over the zvalue projection, whose
-    // crossJoin-inflated ESTIMATE would always read as huge) passes
-    // the base frame's routing so the physical path tracks the real
-    // data size. Both paths are bit-identical (PercentilesSpec).
-    if (!routeDistributed.getOrElse(distributedPath(df))) {
-      val agg = exactPercentiles(col("__v__"), ps).as(cutsCol)
-      val out =
-        (if (byvars.isEmpty) vals.agg(agg) else vals.groupBy(keys: _*).agg(agg))
-          // the cuts frame is 1 row per group but referenced from
-          // several plan sites (winsorize's bottom pass embeds the top
-          // pass; the clamp joins read it again) — the lazy persist
-          // makes the aggregation compute once per action, not once
-          // per reference
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      return (out, () => { out.unpersist(); () })
-    }
-    val cnt = vals.groupBy((keys :+ col("__v__")): _*).agg(count(lit(1)).as("__c__"))
-    val parts = cnt
-      .repartitionByRange(nParts, (keys :+ col("__v__")).map(_.asc): _*)
-      .withColumn("__pid__", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // (numPartitions x |groups|)-row offsets frame. The windows below
-    // run over THIS tiny frame only (contract: one row per partition
-    // per group); with empty byvars they are unpartitioned by
-    // construction — a known, guarded global-window site (PlanSpec
-    // census).
-    val wOff = Window
-      .partitionBy(keys: _*)
-      .orderBy(col("__pid__"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wTot = Window.partitionBy(keys: _*)
-    val offs = parts
-      .groupBy((col("__pid__") +: keys): _*)
-      .agg(sum(col("__c__")).as("__pc__"))
-      .withColumn("__off__", sum(col("__pc__")).over(wOff) - col("__pc__"))
-      .withColumn("__n__", sum(col("__pc__")).over(wTot))
-      .select((col("__pid__") +: keys) :+ col("__off__") :+ col("__n__"): _*)
-
-    val wIn = Window
-      .partitionBy((col("__pid__") +: keys): _*)
-      .orderBy(col("__v__"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = nullSafeBroadcastJoin(
-      parts.withColumn("__cum__", sum(col("__c__")).over(wIn)),
-      offs, Seq("__pid__"), byvars)
-      // this value occupies global ranks [__start__, __end__)
-      .withColumn("__end__", col("__off__") + col("__cum__"))
-      .withColumn("__start__", col("__end__") - col("__c__"))
-
-    // builtin Percentile parity: position = p * (N - 1), computed and
-    // interpolated with the same arithmetic shape so results are
-    // IEEE-identical (PercentilesSpec pins bitwise equality).
-    def pos(i: Int): Column = lit(ps(i)) * (col("__n__") - lit(1L)).cast("double")
-    def covers(rank: Column): Column = col("__start__") <= rank && rank < col("__end__")
-
-    val needed = ps.indices
-      .flatMap(i => Seq(covers(floor(pos(i))), covers(ceil(pos(i)))))
-      .reduce(_ || _)
-    val aggExprs = ps.indices.flatMap { i =>
-      Seq(
-        max(when(covers(floor(pos(i))), col("__v__"))).as(s"__lo${i}__"),
-        max(when(covers(ceil(pos(i))), col("__v__"))).as(s"__hi${i}__"))
-    } :+ max(col("__n__")).as("__nn__")
-    val cands = ranked.where(needed)
-    val agged =
-      if (byvars.isEmpty) cands.agg(aggExprs.head, aggExprs.tail: _*)
-      else cands.groupBy(keys: _*).agg(aggExprs.head, aggExprs.tail: _*)
-
-    val cutExprs = ps.indices.map { i =>
-      val p = lit(ps(i)) * (col("__nn__") - lit(1L)).cast("double")
-      val lo = floor(p).cast("double")
-      val hi = ceil(p).cast("double")
-      when(col(s"__lo${i}__").isNull, lit(null).cast("double"))
-        .when(lo === hi, col(s"__lo${i}__"))
-        // builtin parity: equal boundary keys skip interpolation (the
-        // ulp-lossy (1-f)*v + f*v round-trip must NOT happen)
-        .when(col(s"__lo${i}__") === col(s"__hi${i}__"), col(s"__lo${i}__"))
-        .otherwise((hi - p) * col(s"__lo${i}__") + (p - lo) * col(s"__hi${i}__"))
-    }
-    // the cuts frame is tiny (one row per group) but may be read from
-    // several plan sites — cache it so the rank pipeline runs once
-    // per action
-    val out = agged.select((keys :+ array(cutExprs: _*).as(cutsCol)): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (out, () => { out.unpersist(); parts.unpersist(); () })
-  }
+  ): (DataFrame, () => Unit) =
+    cutsMultiWithCleanup(df, Seq(cutsCol -> value), byvars, ps, routeDistributed)
 
   /** [[cutsWithCleanup]] for SEVERAL value columns over the same frame
-    * (r20 opt — the ZOrder shape: every clustered column needs its
-    * full cuts array at the same `ps`). One physical pass serves all
-    * columns: the builtin route aggregates N `percentile` expressions
-    * in a single scan; the distributed route stacks the columns
-    * through the one shared rank pipeline ([[stackedComponents]],
-    * the winsorBounds shape) and assembles each column's array with
-    * [[interpolate]] — the same arithmetic as [[cutsWithCleanup]], so
-    * cuts are bit-identical to N separate calls. Returns ONE wide
-    * frame carrying byvars plus every cuts array (callers broadcast
-    * it back once instead of once per column).
+    * (the ZOrder shape: every clustered column needs its full cuts
+    * array at the same `ps`). One pass serves all columns on either
+    * route; cuts are bit-identical to N separate calls. Returns ONE
+    * wide frame carrying byvars plus every cuts array (callers
+    * broadcast it back once instead of once per column).
     */
   def cutsMultiWithCleanup(
       df: DataFrame,
@@ -212,71 +114,20 @@ object Percentiles {
       routeDistributed: Option[Boolean] = None
   ): (DataFrame, () => Unit) = {
     require(values.nonEmpty, "values must be non-empty")
-    require(ps.nonEmpty, "ps must be non-empty")
-    require(ps.forall(p => p >= 0 && p <= 1), s"percentiles must be in [0,1], got $ps")
-    val keys = byvars.map(col)
-    if (!routeDistributed.getOrElse(distributedPath(df))) {
-      // one pass, N percentile expressions; NaN pre-nulled per column
-      // exactly like the single-column path's vals filter
-      val aggs = values.map { case (out, v) =>
-        val clean = when(isnan(v.cast("double")), lit(null)).otherwise(v.cast("double"))
-        exactPercentiles(clean, ps).as(out)
-      }
-      val out =
-        (if (byvars.isEmpty) df.agg(aggs.head, aggs.tail: _*)
-         else df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (out, () => { out.unpersist(); () })
-    } else {
-      val (wide, cleanup) =
-        stackedComponents(df, values.map(v => (v._2.cast("double"), ps)), byvars)
-      val out = wide.select(byvars.map(col) ++ values.zipWithIndex.map {
-        case ((outCol, _), i) =>
-          array(ps.indices.map(j => interpolate(i, j, ps(j))): _*).as(outCol)
-      }: _*).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (out, () => { out.unpersist(); cleanup() })
-    }
+    exactCuts(df, values.map { case (out, v) => (out, v, ps) }, byvars, routeDistributed)
   }
 
-  /** [[cuts]] for a single percentile, unwrapped to a scalar column
-    * `outCol` (the winsorize bound shape).
-    */
-  def cut(
-      df: DataFrame,
-      value: Column,
-      byvars: Seq[String],
-      p: Double,
-      outCol: String
-  ): DataFrame = {
-    val (out, release) = cutWithCleanup(df, value, byvars, p, outCol)
-    graft.Cleanup.defer(release)
-    out
-  }
-
-  /** [[cut]] with the [[cutsWithCleanup]] release handle. */
-  def cutWithCleanup(
-      df: DataFrame,
-      value: Column,
-      byvars: Seq[String],
-      p: Double,
-      outCol: String
-  ): (DataFrame, () => Unit) = {
-    val (c, cleanup) = cutsWithCleanup(df, value, byvars, Seq(p), "__cuts1__")
-    (c.select((byvars.map(col) :+ element_at(col("__cuts1__"), 1).as(outCol)): _*),
-      cleanup)
-  }
-
-  /** Several scalar bounds over the SAME frame in as few jobs as the
-    * physical path allows: on the builtin (small-input) path every
-    * requested (outCol, value, p) is one expression of a SINGLE
-    * aggregation pass — N bounds cost one scan, not N (the winsorize
-    * shape: one bound per column per tail); on the distributed path
-    * the bounds STACK through one shared rank pipeline
-    * ([[boundsStacked]]) — still one scan, one count shuffle over
-    * N× distinct values instead of N separate pipelines. Returns one
-    * tiny frame carrying byvars plus every outCol, and the combined
-    * release handle. Bit-identical to N separate [[cutWithCleanup]]
-    * calls (PercentilesSpec pins both paths).
+  /** Several scalar bounds over the SAME frame, each (outCol, value,
+    * p), in one pass on either route (the winsorize shape: one bound
+    * per column per tail): the [[cutsMultiWithCleanup]] pipeline with
+    * one position per entry, unwrapped to scalars. Returns one tiny
+    * frame carrying byvars plus every outCol, and the release handle.
+    *
+    * `routeDistributed`: a caller computing several DEPENDENT passes
+    * over the same underlying data routes them all by the BASE
+    * frame's size — a later pass's input carries the earlier bounds
+    * join, whose multiplied size ESTIMATE otherwise flips that pass to
+    * the distributed route even when the data is builtin-small.
     */
   def boundsMulti(
       df: DataFrame,
@@ -285,56 +136,73 @@ object Percentiles {
       routeDistributed: Option[Boolean] = None
   ): (DataFrame, () => Unit) = {
     require(bounds.nonEmpty, "bounds must be non-empty")
-    val keys = byvars.map(col)
-    // `routeDistributed` (r20 opt): a caller computing several DEPENDENT
-    // passes over the same underlying data routes them all by the BASE
-    // frame's size — a later pass's input carries the earlier bounds
-    // join, whose multiplied size ESTIMATE otherwise flips that pass to
-    // the distributed pipeline even when the data is builtin-small
-    // (q_winsorize_by at sf0.1 ran builtin hi + distributed lo). Both
-    // physical paths are bit-identical by contract (PercentilesSpec),
-    // so routing never changes results.
-    if (!routeDistributed.getOrElse(distributedPath(df))) {
-      // one pass: clean per-column inside the aggregate (percentile
-      // ignores nulls; NaN pre-nulled to match the distributed path)
-      val aggs = bounds.map { case (out, v, p) =>
-        val clean = when(isnan(v.cast("double")), lit(null)).otherwise(v.cast("double"))
-        exactPercentile(clean, p).as(out)
-      }
-      val out =
-        (if (byvars.isEmpty) df.agg(aggs.head, aggs.tail: _*)
-         else df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (out, () => { out.unpersist(); () })
-    } else boundsStacked(df, bounds, byvars)
+    val (arrs, cleanup) = exactCuts(
+      df, bounds.map { case (out, v, p) => (out, v, Seq(p)) }, byvars, routeDistributed)
+    (arrs.select(byvars.map(col) ++ bounds.map(b => element_at(col(b._1), 1).as(b._1)): _*),
+      cleanup)
   }
 
-  /** Distributed multi-bound pipeline: posexplode stacks every
-    * requested (value, p) into one long frame and ONE
-    * count/rank/interpolate pipeline — the [[cutsWithCleanup]] plan
-    * with the bound index joined into the grouping keys — computes
-    * all cuts, pivoted back to one wide row per byvars combo. N
-    * bounds over the same frame cost one scan and one rank pipeline
-    * instead of N; for a bound over a derived frame (a join, a
-    * projection) that also collapses N re-scans into one.
-    * Interpolation arithmetic is term-for-term the
-    * [[cutsWithCleanup]] expression, so cuts stay bit-identical to
-    * the builtin aggregate. A group whose bound has no clean values
-    * pivots to a null cut (the per-bound full-join absence); with
-    * empty byvars the global aggregate emits its always-one row,
-    * nulls included.
+  /** The one core of [[cutsMultiWithCleanup]] and [[boundsMulti]]:
+    * for each entry (outCol, value, ps), an `outCol` array of the
+    * value's exact ps-percentiles, on the route `routeDistributed`
+    * names or [[distributedPath]] picks. The cuts frame is tiny (one
+    * row per group) but read from several plan sites (winsorize's
+    * bottom pass embeds the top pass; the clamp joins read it again),
+    * so the lazy persist makes the pipeline run once per action.
     */
-  private def boundsStacked(
+  private def exactCuts(
       df: DataFrame,
-      bounds: Seq[(String, Column, Double)],
-      byvars: Seq[String]
+      entries: Seq[(String, Column, Seq[Double])],
+      byvars: Seq[String],
+      routeDistributed: Option[Boolean]
   ): (DataFrame, () => Unit) = {
-    val (wide, cleanup) =
-      stackedComponents(df, bounds.map(b => (b._2, Seq(b._3))), byvars)
-    val out = wide.select(byvars.map(col) ++ bounds.zipWithIndex.map {
-      case ((outCol, _, p), i) => interpolate(i, 0, p).as(outCol)
-    }: _*).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (out, () => { out.unpersist(); cleanup() })
+    entries.foreach { case (_, _, ps) =>
+      require(ps.nonEmpty, "ps must be non-empty")
+      require(ps.forall(p => p >= 0 && p <= 1), s"percentiles must be in [0,1], got $ps")
+    }
+    val (cutsFrame, release) =
+      if (!routeDistributed.getOrElse(distributedPath(df))) (builtinCuts(df, entries, byvars), () => ())
+      else {
+        val (wide, cleanup) = stackedComponents(df, entries.map(e => (e._2, e._3)), byvars)
+        // no clean value -> no rank rows -> null count: a NULL array,
+        // as the builtin aggregate's empty buffer evaluates
+        (wide.select(byvars.map(col) ++ entries.zipWithIndex.map { case ((out, _, ps), i) =>
+          when(col(s"__n${i}__").isNotNull,
+            array(ps.indices.map(j => interpolate(i, j, ps(j))): _*)).as(out)
+        }: _*), cleanup)
+      }
+    val out = cutsFrame.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (out, () => { out.unpersist(); release() })
+  }
+
+  /** The builtin route of [[exactCuts]]: NaN reads as null, rows where
+    * every entry is null are dropped (so a group with no clean value
+    * emits no row, as on the rank pipeline), then one
+    * [[graft.plans.ExactPercentiles]] array aggregate per entry in a
+    * single pass. The kernel is the builtin `percentile`'s exact
+    * semantics over a primitive buffer (the builtin boxes every double
+    * into an OpenHashMap and re-sorts boxed key-count pairs at the
+    * single-threaded final merge); the buffer is bounded by the
+    * routing threshold.
+    */
+  private def builtinCuts(
+      df: DataFrame,
+      entries: Seq[(String, Column, Seq[Double])],
+      byvars: Seq[String]
+  ): DataFrame = {
+    val keys = byvars.map(col)
+    val vs = entries.indices.map(i => col(s"__v${i}__"))
+    val clean = df
+      .select(keys ++ entries.zipWithIndex.map { case ((_, v, _), i) =>
+        val d = v.cast("double")
+        when(!isnan(d), d).as(s"__v${i}__")
+      }: _*)
+      .where(vs.map(_.isNotNull).reduce(_ || _))
+    val aggs = entries.zip(vs).map { case ((out, _, ps), v) =>
+      exprColumn(graft.plans.ExactPercentiles(columnExpr(v), ps).toAggregateExpression()).as(out)
+    }
+    if (byvars.isEmpty) clean.agg(aggs.head, aggs.tail: _*)
+    else clean.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Winsorize bounds for BOTH tails of every column from ONE stacked
@@ -386,28 +254,6 @@ object Percentiles {
     (out, () => { out.unpersist(); cleanup() })
   }
 
-  /** The builtin `percentile` aggregate's exact semantics as the
-    * native primitive-buffer kernel
-    * ([[graft.plans.ExactPercentiles]], r20 opt): the builtin boxes
-    * every double into an OpenHashMap and re-sorts boxed key-count
-    * pairs at the single-threaded final merge, which dominated the
-    * small-input winsorize/portfolio passes. Bit-identical by
-    * construction (same sort order, same position arithmetic, same
-    * bitwise key-equality interpolation skip — pinned against the
-    * builtin in PercentilesSpec); only the builtin small-input route
-    * uses it, so buffer size is bounded by the documented threshold.
-    */
-  private def exactPercentiles(value: Column, ps: Seq[Double]): Column =
-    graft.internal.exprColumn(graft.plans.ExactPercentiles(
-      graft.internal.columnExpr(value.cast("double")), ps, scalarOut = false)
-      .toAggregateExpression())
-
-  /** Single-percentile scalar form of [[exactPercentiles]]. */
-  private def exactPercentile(value: Column, p: Double): Column =
-    graft.internal.exprColumn(graft.plans.ExactPercentiles(
-      graft.internal.columnExpr(value.cast("double")), Seq(p), scalarOut = true)
-      .toAggregateExpression())
-
   /** Approximate quantiles as ONE mergeable aggregation — the scale
     * escape hatch for where even the distributed exact plan is too
     * heavy (its count shuffle carries every DISTINCT value; a
@@ -445,9 +291,13 @@ object Percentiles {
     if (byvars.isEmpty) df.agg(agg) else df.groupBy(byvars.map(col): _*).agg(agg)
   }
 
-  /** Whether [[boundsMulti]]/[[winsorBounds]] route `df` to the
-    * distributed rank pipeline (vs the builtin small-input
-    * aggregate) — callers that fuse differently per path ask first.
+  /** Whether `df` takes the distributed rank pipeline (vs the
+    * builtin small-input aggregate): Catalyst's size estimate, read at
+    * composition time with no job, at or above
+    * `graft.percentiles.distributedThresholdBytes` (16 MiB; Verify
+    * forces 0). Below it the whole-multiset buffer is harmless and the
+    * single pass beats the rank pipeline's fixed cost of extra stages.
+    * Callers that fuse differently per route (Winsorize) ask first.
     */
   def distributedPath(df: DataFrame): Boolean = {
     val threshold = df.sparkSession.conf
@@ -482,7 +332,8 @@ object Percentiles {
   /** The builtin-parity interpolation over entry `i`'s `j`-th target
     * position (pivoted components `__loI_J__`/`__hiI_J__`/`__nI__`),
     * with an optional monotone transform applied to the rank values
-    * first ([[winsorBounds]]' clamp).
+    * first ([[winsorBounds]]' clamp). Null when the entry has no
+    * clean value in the group (every term reads a null component).
     */
   private def interpolate(
       i: Int, j: Int, p: Double, f: Column => Column = identity): Column = {
@@ -491,26 +342,28 @@ object Percentiles {
     val pp = lit(p) * (col(s"__n${i}__") - lit(1L)).cast("double")
     val lo = floor(pp).cast("double")
     val hi = ceil(pp).cast("double")
-    when(loV.isNull, lit(null).cast("double"))
-      .when(lo === hi, loV)
+    when(lo === hi, loV)
       // builtin parity: equal boundary keys skip interpolation (the
       // ulp-lossy (1-f)*v + f*v round-trip must NOT happen)
       .when(loV === hiV, loV)
       .otherwise((hi - pp) * loV + (pp - lo) * hiV)
   }
 
-  /** The shared stacked rank pipeline: one wide row per byvars combo
+  /** The rank pipeline, the distributed route of every entry point:
+    * one wide row per byvars combo with at least one clean value,
     * carrying, for every stacked entry i (a value column with K
     * target percentiles — K identical across entries) and each of
     * its positions j, the raw floor/ceil rank values and the entry's
-    * group count (`__loI_J__`, `__hiI_J__`, `__nI__`) —
-    * [[interpolate]] finishes them into cuts. One scan, one count
-    * shuffle over the stacked distinct values, windows partitioned
-    * by (byvars, entry index) — never fully global even with empty
-    * byvars. Multiple percentiles of the SAME entry share its single
-    * count/rank pass (the winsorBounds both-tails shape): the rank
-    * ranges are computed once and each position only adds a
-    * covers-filter term and two agg expressions.
+    * group count (`__loI_J__`, `__hiI_J__`, `__nI__`; null when the
+    * entry has no clean value there) — [[interpolate]] finishes them
+    * into cuts. One scan, one count shuffle over the stacked distinct
+    * values, windows partitioned by (byvars, entry index) — never
+    * global, even with empty byvars — and ONE candidate aggregation by
+    * byvars that picks every (entry, position) component directly.
+    * Multiple percentiles of the SAME entry share its single
+    * count/rank pass (the winsorBounds both-tails shape): each
+    * position only adds a covers-filter term and two agg expressions
+    * per entry.
     */
   private def stackedComponents(
       df: DataFrame,
@@ -535,8 +388,7 @@ object Percentiles {
       .repartitionByRange(nParts, (gk :+ col("__v__")).map(_.asc): _*)
       .withColumn("__pid__", spark_partition_id())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // per-(partition, group, entry) offsets — tiny frame, broadcast
-    // back (the cutsWithCleanup prefix-sum recipe)
+    // per-(partition, group, entry) offsets — tiny frame, broadcast back
     val wOff = Window
       .partitionBy(gk: _*)
       .orderBy(col("__pid__"))
@@ -557,34 +409,28 @@ object Percentiles {
       offs, Seq("__pid__", "__b__"), byvars)
       .withColumn("__end__", col("__off__") + col("__cum__"))
       .withColumn("__start__", col("__end__") - col("__c__"))
-    // builtin Percentile parity: position = p * (N - 1); p arrives
-    // from the literal array by entry index — the identical double,
-    // so the arithmetic matches cutsWithCleanup bit for bit
+    // builtin Percentile parity: position = p * (N - 1), computed with
+    // the kernel's arithmetic shape so cuts are IEEE-identical; p
+    // arrives from the literal array by entry index, the identical
+    // double (and one expression per j across entries)
     def pos(j: Int) =
       element_at(psArrs(j), col("__b__") + 1) * (col("__n__") - lit(1L)).cast("double")
     def covers(rank: Column): Column = col("__start__") <= rank && rank < col("__end__")
     val needed = (0 until k)
       .flatMap(j => Seq(covers(floor(pos(j))), covers(ceil(pos(j)))))
       .reduce(_ || _)
-    val posAggs = (0 until k).flatMap { j =>
-      Seq(
-        max(when(covers(floor(pos(j))), col("__v__"))).as(s"__lo_${j}__"),
-        max(when(covers(ceil(pos(j))), col("__v__"))).as(s"__hi_${j}__"))
-    } :+ max(col("__n__")).as("__nn__")
-    val agged = ranked
-      .where(needed)
-      .groupBy(gk: _*)
-      .agg(posAggs.head, posAggs.tail: _*)
-    val pivots = entries.indices.flatMap { i =>
+    val aggs = entries.indices.flatMap { i =>
+      val isEntry = col("__b__") === i
       (0 until k).flatMap { j =>
         Seq(
-          max(when(col("__b__") === i, col(s"__lo_${j}__"))).as(s"__lo${i}_${j}__"),
-          max(when(col("__b__") === i, col(s"__hi_${j}__"))).as(s"__hi${i}_${j}__"))
-      } :+ max(when(col("__b__") === i, col("__nn__"))).as(s"__n${i}__")
+          max(when(isEntry && covers(floor(pos(j))), col("__v__"))).as(s"__lo${i}_${j}__"),
+          max(when(isEntry && covers(ceil(pos(j))), col("__v__"))).as(s"__hi${i}_${j}__"))
+      } :+ max(when(isEntry, col("__n__"))).as(s"__n${i}__")
     }
+    val cands = ranked.where(needed)
     val wide =
-      if (byvars.isEmpty) agged.agg(pivots.head, pivots.tail: _*)
-      else agged.groupBy(keys: _*).agg(pivots.head, pivots.tail: _*)
+      if (byvars.isEmpty) cands.agg(aggs.head, aggs.tail: _*)
+      else cands.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
     (wide, () => { parts.unpersist(); () })
   }
 }

@@ -44,7 +44,8 @@ object Winsorize {
   }
 
   /** [[winsorize]] plus the release handle for the per-column
-    * exact-percentile persists ([[Percentiles.cutWithCleanup]]) —
+    * exact-percentile persists ([[Percentiles.boundsMulti]] /
+    * [[Percentiles.winsorBounds]]) —
     * call after the consuming action.
     */
   def winsorizeWithCleanup(

@@ -650,18 +650,36 @@ object Similarity {
     var cents = ivfCentroids(src, idCol, vecCol, k)
     for (i <- 1 to iters) {
       val assigned = ivfAssign(src, cents, idCol, vecCol, "row", keep = 1, scoreDecimals)
-      cents = broadcast(
-        assigned
-          .select(col("cent_id"), posexplode(col("__rowv__")).as(Seq("__dim__", "__v__")))
-          .groupBy(col("cent_id"), col("__dim__"))
-          .agg(round(avg(col("__v__")), centroidDecimals).as("__m__"))
-          .groupBy(col("cent_id"))
-          .agg(array_sort(collect_list(struct(col("__dim__"), col("__m__")))).as("__dm__"))
-          .select(col("cent_id"), transform(col("__dm__"), x => x.getField("__m__")).as("__cv__"))
-          .withColumn("__cn__", norm(col("__cv__"))))
+      cents = broadcast(lloydMeans(
+        assigned, Seq("cent_id"), "__rowv__", "__cv__", "__cn__", centroidDecimals))
       if (i % CompactEveryIters == 0 && i < iters) cents = compactCentroids(cents)
     }
     cents
+  }
+
+  /** One distributed Lloyd update, shared by [[kmeansCentroidsDistributed]]
+    * (keyed by `cent_id`) and [[pqCodebooks]] (keyed by `(sub_id,
+    * cent_id)`): per key, the mean of the assigned `vecCol` vectors,
+    * each dimension `round(avg, centroidDecimals)`, reassembled in
+    * dimension order as `outVec`, with its L2 norm as `outNorm`.
+    */
+  private def lloydMeans(
+      assigned: DataFrame,
+      keys: Seq[String],
+      vecCol: String,
+      outVec: String,
+      outNorm: String,
+      centroidDecimals: Int
+  ): DataFrame = {
+    val ks = keys.map(col)
+    assigned
+      .select(ks :+ posexplode(col(vecCol)).as(Seq("__dim__", "__v__")): _*)
+      .groupBy(ks :+ col("__dim__"): _*)
+      .agg(round(avg(col("__v__")), centroidDecimals).as("__m__"))
+      .groupBy(ks: _*)
+      .agg(array_sort(collect_list(struct(col("__dim__"), col("__m__")))).as("__dm__"))
+      .select(ks :+ transform(col("__dm__"), x => x.getField("__m__")).as(outVec): _*)
+      .withColumn(outNorm, norm(col(outVec)))
   }
 
   /** Plan-depth relief interval for [[kmeansCentroids]] — every this
@@ -802,14 +820,8 @@ object Similarity {
       }
     for (i <- 1 to iters) {
       val assigned = pqRank1(ex, PqCodebook.collect(cents), scoreDecimals, l2)
-      cents = broadcast(assigned
-        .select(col("sub_id"), col("cent_id"), posexplode(col("__sv__")).as(Seq("__dim__", "__v__")))
-        .groupBy(col("sub_id"), col("cent_id"), col("__dim__"))
-        .agg(round(avg(col("__v__")), centroidDecimals).as("__m__"))
-        .groupBy(col("sub_id"), col("cent_id"))
-        .agg(array_sort(collect_list(struct(col("__dim__"), col("__m__")))).as("__dm__"))
-        .select(col("sub_id"), col("cent_id"), transform(col("__dm__"), x => x.getField("__m__")).as("__cbv__"))
-        .withColumn("__cbn__", norm(col("__cbv__"))))
+      cents = broadcast(lloydMeans(
+        assigned, Seq("sub_id", "cent_id"), "__sv__", "__cbv__", "__cbn__", centroidDecimals))
       if (i % CompactEveryIters == 0 && i < iters) cents = compactCentroids(cents)
     }
     broadcast(cents.withColumn("__cbn2__", dot(col("__cbv__"), col("__cbv__"))))
@@ -1517,25 +1529,31 @@ object Similarity {
   /** Routing thresholds for [[ivfAssignTwoLevel]]: the flat
     * [[ivfAssign]] route is taken only when the centroid set has
     * fewer than [[TwoLevelMinNlist]] rows AND the vector side has
-    * fewer than [[TwoLevelMinRows]] rows. Two distinct costs are
-    * being balanced:
+    * fewer than [[TwoLevelMinRows]] rows. Since r19 both routes are
+    * one exchange-free projection over the vector side (per-row
+    * [[graft.plans.PqArgBestExpr]] argbests against driver-collected
+    * centroid arrays), so two costs are balanced:
     *
-    *  - the two-level route pays FIXED overhead (two extra
-    *    aggregation stages, a membership broadcast, the eager
-    *    materialization) that dominates at small inputs — measured
-    *    at sf0.1 (n = 2k, nlist = 45) it cost ~2× the flat route;
-    *  - the flat route ships n·nlist SCORED ROWS (vector payload
-    *    included) through its rank exchange, while the two-level
-    *    form map-side-combines to n grouped rows — at sf10 with a
-    *    FIXED nlist = 16 quantizer the flat window moves 3.2M
-    *    vector rows and measured ~10 s slower than the two-level
-    *    route on the same query (q_ann_ivf_fitted), even though
-    *    nlist is tiny.
+    *  - the two-level route pays a FIXED cost that does not grow
+    *    with n: the membership aggregation over the (nlist ×
+    *    ⌈√nlist⌉) centroid cross join, its persist, and the driver
+    *    collects of the live supers and of the member groups — a few
+    *    small jobs that dominate at small inputs (measured before
+    *    r19 at sf0.1, n = 2k, nlist = 45: ~2× the flat route);
+    *  - the flat route pays nlist dot products per vector, against
+    *    the two-level route's ~2·√nlist, so n·nlist in all. Before
+    *    r19 the flat route also shipped those n·nlist scored rows,
+    *    vectors included, through a rank window's exchange: at sf10
+    *    with a FIXED nlist = 16 quantizer it measured ~10 s slower
+    *    than the two-level route on q_ann_ivf_fitted. That is a
+    *    pre-r19 figure; the exchange is gone, and the crossover has
+    *    not been re-measured since.
     *
     * So: small nlist alone does not justify flat — only small
-    * nlist × small n does. The bounds cap the flat candidate stream
-    * at 64 × 100k rows; auto-sized callers ([[autoNlist]]) cross
-    * the nlist bound at n ≈ 4k and never come near the corner.
+    * nlist × small n does. The bounds cap the flat route's dot
+    * products at 64 × 100k a call; auto-sized callers
+    * ([[autoNlist]]) cross the nlist bound at n ≈ 4k and never come
+    * near the corner.
     *
     * The route is part of the RESULT contract (the two routes may
     * pick different cells for a vector near a group boundary), so
@@ -1603,15 +1621,13 @@ object Similarity {
     *  - vectors rank only LIVE super-cells (those that won at least
     *    one member in the membership rank), so every vector lands in
     *    a non-empty group even under rounded-cosine ties;
-    *  - rank-1 is an ORDERED-STRUCT MAX AGGREGATION, not a window:
-    *    map-side combine collapses each partition's candidate rows
-    *    before the exchange, so the shuffle carries n rows (the
-    *    grouped vectors) instead of the window form's n·nlist scored
-    *    rows — and the level-2 agg reuses level-1's partitioning, so
-    *    the whole route is ONE exchange. The (sim desc, id asc) rule
-    *    becomes max over struct(sim, -id): the negation flips the
-    *    tiebreak without touching the similarity component (no -0.0
-    *    artifacts), which is exactly why the guard below requires
+    *  - both vector-side ranks are per-row argbests in ONE
+    *    projection, so no exchange carries the vectors. The
+    *    centroid-to-super membership rank is an ORDERED-STRUCT MAX
+    *    AGGREGATION over the centroid rows: the (sim desc, id asc)
+    *    rule becomes max over struct(sim, -id). The negation flips
+    *    the tiebreak without touching the similarity component (no
+    *    -0.0 artifacts), which is exactly why the guard below requires
     *    integral NON-NEGATIVE centroid ids on this route — a negative
     *    id would invert the documented asc tiebreak silently.
     */

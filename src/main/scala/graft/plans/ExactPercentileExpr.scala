@@ -55,7 +55,6 @@ final class DoubleBufferState(var arr: Array[Double], var n: Int) {
 case class ExactPercentiles(
     child: Expression,
     ps: Seq[Double],
-    scalarOut: Boolean,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[DoubleBufferState]
@@ -63,10 +62,8 @@ case class ExactPercentiles(
 
   require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1),
     s"percentiles must be in [0,1], got $ps")
-  require(!scalarOut || ps.length == 1, "scalar output requires exactly one percentile")
 
-  override def dataType: DataType =
-    if (scalarOut) DoubleType else ArrayType(DoubleType, containsNull = false)
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_percentile_exact"
 
@@ -100,8 +97,7 @@ case class ExactPercentiles(
       if (lo == hi) return lo
       (higher - position) * lo + (position - lower) * hi
     }
-    if (scalarOut) at(ps.head)
-    else new GenericArrayData(ps.map(at).toArray)
+    new GenericArrayData(ps.map(at).toArray)
   }
 
   override def serialize(buffer: DoubleBufferState): Array[Byte] = {

@@ -79,13 +79,35 @@ class PercentilesSpec extends SparkSuite {
       .collect().map(r => r.getString(0) -> r.getSeq[java.lang.Double](1)).toMap
     assert(ours("a") == Seq(2.0)) // median of {1,2,3}
     assert(!ours.contains("b"))   // no clean values -> no cuts row (left joins read null)
-    // global form over an all-null frame still emits ONE row whose
-    // cuts read null (builtin path: NULL array; distributed path:
-    // array of nulls — element_at yields null from both)
+    // global form over an all-null frame still emits ONE row, whose
+    // cuts are a NULL array on both paths
     val g = Percentiles.cuts(df.where(col("g") === "b"), col("v"), Nil, Seq(0.5, 0.9))
       .collect()
-    assert(g.length == 1 &&
-      (g(0).isNullAt(0) || g(0).getSeq[java.lang.Double](0).forall(_ == null)))
+    assert(g.length == 1 && g(0).isNullAt(0), s"expected one NULL cuts row, got ${g.toSeq}")
+  } }
+
+  test("cutsMultiWithCleanup and boundsMulti: a group with no clean value has no row, both paths") { bothPaths {
+    val s = spark; import s.implicits._
+    // b: every value null or NaN -> no row; c: x clean, y all NaN ->
+    // a row whose y cuts are NULL (array and scalar alike)
+    val df = Seq[(String, Option[Double], Option[Double])](
+      ("a", Some(1.0), Some(4.0)), ("a", Some(3.0), Some(Double.NaN)),
+      ("b", Some(Double.NaN), None), ("b", None, Some(Double.NaN)),
+      ("c", Some(5.0), Some(Double.NaN))).toDF("g", "x", "y")
+    val (cm, releaseCm) = Percentiles.cutsMultiWithCleanup(
+      df, Seq("cx" -> col("x"), "cy" -> col("y")), Seq("g"), Seq(0.5, 1.0))
+    val (bm, releaseBm) = Percentiles.boundsMulti(
+      df, Seq(("bx", col("x"), 0.5), ("by", col("y"), 0.5)), Seq("g"))
+    try {
+      val cuts = cm.collect().map(r => r.getString(0) -> r).toMap
+      assert(cuts.keySet == Set("a", "c"), s"cutsMultiWithCleanup groups: ${cuts.keySet}")
+      assert(cuts("a").getSeq[Double](1) == Seq(2.0, 3.0) && cuts("a").getSeq[Double](2) == Seq(4.0, 4.0))
+      assert(cuts("c").getSeq[Double](1) == Seq(5.0, 5.0) && cuts("c").isNullAt(2))
+      val bounds = bm.collect().map(r => r.getString(0) -> r).toMap
+      assert(bounds.keySet == Set("a", "c"), s"boundsMulti groups: ${bounds.keySet}")
+      assert(bounds("a").getDouble(1) == 2.0 && bounds("a").getDouble(2) == 4.0)
+      assert(bounds("c").getDouble(1) == 5.0 && bounds("c").isNullAt(2))
+    } finally { releaseCm(); releaseBm() }
   } }
 
   test("exact interpolation on a tiny known multiset (NumPy parity)") { bothPaths {

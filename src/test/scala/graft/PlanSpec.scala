@@ -466,17 +466,16 @@ class PlanSpec extends SparkSuite {
     //   - Sampling's 256-row bucket-offset prefix-sum frames
     //     (packSequences / shuffleRank, Sampling.scala:179,223) ->
     //     q_pack, q_shuffle_rank
-    //   - Percentiles' partition-offset prefix sum with EMPTY byvars
-    //     (input: one row per range partition, <= numPartitions rows
-    //     by construction; Percentiles.scala wOff/wTot) ->
-    //     q_winsorize_all
+    // (Percentiles' offset windows partition by the entry index, so
+    // no percentile site plans one on either route; the census below
+    // covers the distributed route.)
     // (r15: ivfAssignTwoLevel's r14 in-plan super draw — the one IVF
     // global window — moved to a driver-side selection over the
     // already-collected centroid rows, so the ANN queries left this
     // allowlist.)
     // Anything new failing this census is either a bug or needs its
     // own documented contract + allowlist entry.
-    val allowed = Set("q_long_short", "q_shuffle_rank", "q_pack", "q_winsorize_all")
+    val allowed = Set("q_long_short", "q_shuffle_rank", "q_pack")
     val offenders = allPlans.collect {
       case (name, Right(plan)) if unpartitionedWindowCount(plan) > 0 => name
     }.toSet
@@ -498,6 +497,47 @@ class PlanSpec extends SparkSuite {
       .queryExecution.executedPlan.toString
     assert(unpartitionedWindowCount(part) == 0,
       s"census false-positives on a partitioned window:\n$part")
+  }
+
+  test("unpartitioned-window census, distributed percentile route: only q_long_short runs a global window") {
+    // The census above plans at the default threshold, so at sf0.001
+    // every percentile site takes the builtin route. Here they plan
+    // as Verify runs them (threshold 0): the rank pipeline's offset
+    // windows partition by the entry index, so even empty byvars
+    // (q_winsorize_all, q_zorder's file-bucket cuts) plans no global
+    // window. The shared portfolio-averages frame is rebuilt under the
+    // forced route (its plan is a checkpoint scan), so its pipeline is
+    // planned directly as well.
+    val key = "graft.percentiles.distributedThresholdBytes"
+    val names = SparkEntry.queries.keys.filter(n =>
+      n.startsWith("q_winsorize_") || n.startsWith("q_portfolio_") ||
+        n == "q_long_short" || n == "q_zorder").toSeq.sorted
+    assert(names.size == 7, s"census names drifted: $names")
+    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    SparkEntry.releaseShared()
+    spark.conf.set(key, "0")
+    val plans = try {
+      names.map(n => n -> SparkEntry.queries(n)(spark, dir).queryExecution.executedPlan.toString) :+
+        ("Portfolio.portfolioAverages" -> graft.operators.Portfolio
+          .portfolioAverages(li, "l_extendedprice", Seq("l_quantity"), ngroups = 5,
+            byvars = Seq("l_returnflag"))
+          .queryExecution.executedPlan.toString)
+    } finally {
+      spark.conf.unset(key)
+      SparkEntry.runPendingCleanups()
+      SparkEntry.releaseShared()
+    }
+    val offenders = plans.collect { case (n, p) if unpartitionedWindowCount(p) > 0 => n }
+    assert(offenders == Seq("q_long_short"),
+      s"global windows on the distributed percentile route: ${offenders.mkString(", ")}")
+    // the rank pipeline picks every (entry, position) component in
+    // one candidate aggregation
+    val shuffleRe = "Exchange (hash|range|Single|rebalance)".r
+    val byPlan = plans.toMap
+    Seq("q_winsorize_by" -> 8, "q_winsorize_all" -> 8).foreach { case (n, want) =>
+      val got = shuffleRe.findAllIn(byPlan(n)).size
+      assert(got == want, s"$n plans $got shuffles on the distributed route, expected $want:\n${byPlan(n)}")
+    }
   }
 
   test("long_short's single-partition window sees only the post-aggregation frame") {
