@@ -1,7 +1,11 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Partitioned parquet sink — the output half of a 100 TB pipeline.
   * (Reference analog: the parquet side-cache in
@@ -28,7 +32,28 @@ import org.apache.spark.sql.functions._
   * directory set, same per-directory file count, same row content
   * per file (task assignment is content-hashed and in-file order is
   * `sortCols`-stabilized), so re-runs are safe to point downstream
-  * consumers at.
+  * consumers at. Each file is sorted by `partitionCols ++ sortCols`:
+  * Spark's planned write sorts every task by the partition columns and
+  * would drop a sort by `sortCols` alone.
+  *
+  * Schema: every read of a layout ([[readPartitioned]],
+  * [[readSnapshot]], and the reads inside [[compactPartitions]],
+  * [[upsertPartitioned]], [[upsertRelocating]] and [[deleteKeys]])
+  * takes the data schema from the Catalyst schema Spark's writer
+  * stores in the footer of one file, read on the driver, and the
+  * partition columns from the directory names; none runs a
+  * schema-inference job. [[readPartitionedEvolved]] merges every
+  * footer instead.
+  *
+  * Jobs per op on an existing layout, when the keys or batch are small
+  * enough to broadcast and need no shuffle of their own:
+  *   - [[writePartitioned]]: 2 (the placement shuffle, the write);
+  *   - [[compactPartitions]]: the same 2;
+  *   - [[deleteKeys]], [[upsertPartitioned]], [[upsertRelocating]]: 4 —
+  *     one for the touched partition set (each task dedups its own
+  *     tuples, the driver dedups the rest; no shuffle), then the
+  *     broadcast of the keys into the left-anti join, the placement
+  *     shuffle and the write.
   *
   * Bucketed (catalog) output for shuffle-free same-key joins lives in
   * [[Bucketing]]; this sink is the path-based side.
@@ -69,8 +94,12 @@ object Sink {
         .withColumn("__file__", pmod(xxhash64(dataCols.map(col): _*), lit(filesPerPartition)))
         .repartition(n, (partitionCols :+ "__file__").map(col): _*)
         .drop("__file__")
+    // the planned write sorts each task by partitionCols itself and
+    // drops any inner sort it replaces; leading with partitionCols
+    // makes its required ordering a prefix of ours, so it adds none
     val ordered =
-      if (sortCols.nonEmpty) placed.sortWithinPartitions(sortCols.map(col): _*) else placed
+      if (sortCols.nonEmpty) placed.sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
+      else placed
     val w = ordered.write
       .mode(SaveMode.Overwrite)
       // replace only the partitions present in df; everything else on
@@ -87,7 +116,7 @@ object Sink {
     * on them prune to a directory walk).
     */
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    readLayout(spark, path, Seq(path))
 
   /** [[readPartitioned]] with schema evolution: union the schemas of
     * every file footer (`mergeSchema`) so batches written before a
@@ -100,6 +129,60 @@ object Sink {
     */
   def readPartitionedEvolved(spark: SparkSession, path: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path)
+
+  /** `paths` (partition dirs or data files under `basePath`) as one
+    * DataFrame, without Spark's schema-inference job. The data schema
+    * is the Catalyst schema Spark's writer stores in every file footer
+    * (`org.apache.spark.sql.parquet.row.metadata`), read on the driver
+    * from the first visible file by name; Spark's own inference, without
+    * `mergeSchema`, also reads a single file's footer, but in a job.
+    * Partition columns are still discovered, and typed, from the
+    * directory names. A layout whose first file lacks that metadata
+    * (written by another parquet writer) is read with Spark's inference.
+    */
+  private[graft] def readLayout(spark: SparkSession, basePath: String, paths: Seq[String]): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def firstFile(fs: FileSystem, st: FileStatus): Option[Path] =
+      if (st.isFile) Some(st.getPath)
+      else fs.listStatus(st.getPath).sortBy(_.getPath.getName).iterator
+        .filterNot(c => isHidden(c.getPath))
+        .flatMap(firstFile(fs, _))
+        .nextOption()
+    // a missing path is left to Spark's read, which reports it
+    val footer = paths.iterator.map(new Path(_)).flatMap { p =>
+      val fs = p.getFileSystem(conf)
+      if (fs.exists(p)) firstFile(fs, fs.getFileStatus(p)) else None
+    }.nextOption()
+    val schema = footer.flatMap { f =>
+      val in = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try Option(in.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey))
+      finally in.close()
+    }.flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption.collect { case st: StructType => st })
+    val reader = spark.read.option("basePath", basePath)
+    schema.fold(reader)(st => reader.schema(st)).parquet(paths: _*)
+  }
+
+  /** Where Spark's parquet writer stores the written Catalyst schema. */
+  private val RowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  // Spark's own hidden-path rule: dot-prefixed always; underscore-
+  // prefixed only when NOT a partition dir (`col=value` contains '=')
+  // -- an underscore-named partition COLUMN must stay visible
+  private def isHidden(p: Path): Boolean =
+    p.getName.startsWith(".") || (p.getName.startsWith("_") && !p.getName.contains("="))
+
+  /** The visible partition dirs exactly `depth` levels below `dir`. */
+  private def leaves(fs: FileSystem, dir: Path, depth: Int): Seq[Path] =
+    if (depth == 0) Seq(dir)
+    else fs.listStatus(dir).toSeq
+      .filter(st => st.isDirectory && !isHidden(st.getPath))
+      .flatMap(st => leaves(fs, st.getPath, depth - 1))
+
+  /** The visible parquet data files directly in `dir`. */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[Path] =
+    fs.listStatus(dir).toSeq
+      .filter(st => st.isFile && !isHidden(st.getPath) && st.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath)
 
   /** Small-file maintenance for a [[writePartitioned]] layout: every
     * partition whose parquet file count exceeds `targetFiles` is
@@ -146,7 +229,6 @@ object Sink {
   ): Seq[String] = {
     require(partitionCols.nonEmpty, "partitionCols must be non-empty")
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
-    import org.apache.hadoop.fs.Path
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // qualified so relativization below works: listStatus returns
     // scheme-qualified paths, and a string-prefix mismatch would make
@@ -154,31 +236,13 @@ object Sink {
     val root = fs.makeQualified(new Path(path))
     if (!fs.exists(root)) return Nil
 
-    // Spark's own hidden-path rule: dot-prefixed always; underscore-
-    // prefixed only when NOT a partition dir (`col=value` contains '=')
-    // -- an underscore-named partition COLUMN must stay visible
-    def isHidden(p: Path): Boolean =
-      p.getName.startsWith(".") ||
-        (p.getName.startsWith("_") && !p.getName.contains("="))
-    // leaf partition dirs sit exactly partitionCols.length below root
-    def leaves(dir: Path, depth: Int): Seq[Path] =
-      if (depth == 0) Seq(dir)
-      else fs.listStatus(dir).toSeq
-        .filter(st => st.isDirectory && !isHidden(st.getPath))
-        .flatMap(st => leaves(st.getPath, depth - 1))
-    def dataFiles(dir: Path): Seq[Path] =
-      fs.listStatus(dir).toSeq
-        .filter(st => st.isFile && !isHidden(st.getPath) && st.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath)
-
-    val overfull = leaves(root, partitionCols.length)
-      .filter(d => dataFiles(d).size > targetFiles)
+    val overfull = leaves(fs, root, partitionCols.length)
+      .filter(d => dataFiles(fs, d).size > targetFiles)
     if (overfull.isEmpty) return Nil
 
     val staging = new Path(root, s".compact-${java.util.UUID.randomUUID().toString.take(8)}")
     try {
-      val rows = spark.read.option("basePath", path)
-        .parquet(overfull.map(_.toString): _*)
+      val rows = readLayout(spark, path, overfull.map(_.toString))
       writePartitioned(rows, staging.toString, partitionCols, sortCols,
         maxRecordsPerFile, filesPerPartition = targetFiles)
       overfull.map { dir =>
@@ -186,13 +250,13 @@ object Sink {
         require(rel.nonEmpty && !rel.startsWith("/") && !rel.contains(":"),
           s"partition dir $dir did not relativize under $root (got '$rel')")
         val stagedDir = new Path(staging, rel)
-        val staged = dataFiles(stagedDir)
+        val staged = dataFiles(fs, stagedDir)
         require(staged.nonEmpty, s"compaction produced no files for $rel")
         // rename-in first, delete-old after (the rewriteVia swap
         // order): a racing lister sees at least one complete
         // generation at every instant; the manifest commit between
         // the two gives readSnapshot exactly one
-        val old = dataFiles(dir)
+        val old = dataFiles(fs, dir)
         val oldNames = old.map(_.getName).toSet
         require(staged.forall(f => !oldNames.contains(f.getName)),
           s"staged file names collide with live files in $rel — cannot swap atomically")
@@ -226,6 +290,17 @@ object Sink {
     }.mkString("/")
   }
 
+  /** The distinct partition tuples of `df` as sorted leaf rels, in one
+    * job with no shuffle: each task dedups its own rows and the driver
+    * dedups the rest — bounded by the low-cardinality partition contract.
+    */
+  private def touchedRels(df: DataFrame, partitionCols: Seq[String]): Seq[String] =
+    df.select(partitionCols.map(col): _*).rdd
+      .mapPartitions(_.toSet.iterator)
+      .collect().distinct
+      .map(r => partitionRel(partitionCols.zipWithIndex.map { case (c, i) => c -> r.get(i) }))
+      .toSeq.sorted
+
   /** MERGE INTO for a [[writePartitioned]] layout: every `batch` row
     * replaces the existing row with the same key (or inserts), and
     * only the partitions PRESENT IN THE BATCH are rewritten — cost
@@ -241,7 +316,7 @@ object Sink {
     * keep-one-per-group is the standard reducer).
     *
     * Mechanics: the affected leaf dirs are derived from the batch's
-    * distinct partition tuples (a driver-side collect bounded by the
+    * distinct partition tuples (one driver-side collect bounded by the
     * low-cardinality partition contract), their current rows are
     * anti-joined against the batch keys, survivors + batch rewrite
     * through the deterministic [[writePartitioned]] placement into a
@@ -299,27 +374,21 @@ object Sink {
   ): Seq[String] = {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
     require(partitionCols.nonEmpty, "partitionCols must be non-empty")
-    import org.apache.hadoop.fs.Path
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = fs.makeQualified(new Path(path))
     if (!fs.exists(root)) {
       writePartitioned(batch, path, partitionCols, sortCols, maxRecordsPerFile, filesPerPartition)
-      return batch.select(partitionCols.map(col): _*).distinct().collect()
-        .map(r => partitionRel(partitionCols.zipWithIndex.map { case (c, i) => c -> r.get(i) }))
-        .toSeq.sorted
+      return touchedRels(batch, partitionCols)
     }
     // one driver-side collect covers the batch's partitions AND any
     // relocation sources — a single touched set for a single rewrite
     val touchedF = oldPartitions.foldLeft(batch.select(partitionCols.map(col): _*)) {
       (acc, old) => acc.unionByName(old.select(partitionCols.map(col): _*))
     }
-    val touched = touchedF.distinct().collect()
-      .map(r => partitionRel(partitionCols.zipWithIndex.map { case (c, i) => c -> r.get(i) }))
-      .toSeq.sorted
-    val existingDirs = touched.map(rel => new Path(root, rel)).filter(fs.exists)
+    val existingDirs = touchedRels(touchedF, partitionCols).map(rel => new Path(root, rel)).filter(fs.exists)
     val survivors =
       if (existingDirs.isEmpty) batch.limit(0)
-      else spark.read.option("basePath", path).parquet(existingDirs.map(_.toString): _*)
+      else readLayout(spark, path, existingDirs.map(_.toString))
         .join(batch.select(keyCols.map(col): _*), keyCols, "left_anti")
         .select(batch.columns.map(col).toSeq: _*)
     rewriteVia(spark, fs, root, s".upsert", partitionCols,
@@ -351,18 +420,15 @@ object Sink {
     require(partitionCols.nonEmpty, "partitionCols must be non-empty")
     require(partitionCols.forall(keys.columns.contains),
       s"keys frame must carry the partition columns $partitionCols (stable-partition contract)")
-    import org.apache.hadoop.fs.Path
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = fs.makeQualified(new Path(path))
     if (!fs.exists(root)) return Nil
-    val touched = keys.select(partitionCols.map(col): _*).distinct().collect()
-      .map(r => partitionRel(partitionCols.zipWithIndex.map { case (c, i) => c -> r.get(i) }))
-      .toSeq.sorted
-    val existingDirs = touched.map(rel => new Path(root, rel)).filter(fs.exists)
+    val existingDirs = touchedRels(keys, partitionCols).map(rel => new Path(root, rel)).filter(fs.exists)
     if (existingDirs.isEmpty) return Nil
-    val survivors = spark.read.option("basePath", path)
-      .parquet(existingDirs.map(_.toString): _*)
-      .join(keys.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
+    // no distinct(): a repeated key removes nothing more in a left-anti
+    // join, and deduplicating would cost an aggregation stage
+    val survivors = readLayout(spark, path, existingDirs.map(_.toString))
+      .join(keys.select(keyCols.map(col): _*), keyCols, "left_anti")
     rewriteVia(spark, fs, root, s".delete", partitionCols,
       survivors, sortCols, maxRecordsPerFile, filesPerPartition,
       alsoClear = existingDirs)
@@ -383,21 +449,14 @@ object Sink {
     * LATEST generation sorts lexicographically last; underscore-
     * prefixed without '=' so Spark's own readers never see it.
     */
-  private def writeManifest(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path,
-      fileNames: Seq[String]
-  ): Unit = {
+  private def writeManifest(fs: FileSystem, dir: Path, fileNames: Seq[String]): Unit = {
     val gen = f"${System.currentTimeMillis()}%013d-${java.util.UUID.randomUUID().toString.take(8)}"
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, ManifestPrefix + gen), false)
+    val out = fs.create(new Path(dir, ManifestPrefix + gen), false)
     try out.write(fileNames.sorted.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
-  private def manifestFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path
-  ): Seq[org.apache.hadoop.fs.Path] =
+  private def manifestFiles(fs: FileSystem, dir: Path): Seq[Path] =
     fs.listStatus(dir).toSeq
       .filter(st => st.isFile && st.getPath.getName.startsWith(ManifestPrefix))
       .map(_.getPath)
@@ -444,20 +503,11 @@ object Sink {
       path: String,
       partitionCols: Seq[String]
   ): DataFrame = {
-    import org.apache.hadoop.fs.Path
     require(partitionCols.nonEmpty, "partitionCols must be non-empty")
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = fs.makeQualified(new Path(path))
     require(fs.exists(root), s"no layout at $path")
-    def isHidden(p: Path): Boolean =
-      p.getName.startsWith(".") ||
-        (p.getName.startsWith("_") && !p.getName.contains("="))
-    def leaves(dir: Path, depth: Int): Seq[Path] =
-      if (depth == 0) Seq(dir)
-      else fs.listStatus(dir).toSeq
-        .filter(st => st.isDirectory && !isHidden(st.getPath))
-        .flatMap(st => leaves(st.getPath, depth - 1))
-    val files = leaves(root, partitionCols.length).flatMap { dir =>
+    val files = leaves(fs, root, partitionCols.length).flatMap { dir =>
       def resolve(fireHook: Boolean, retried: Boolean): Seq[Path] = {
         // manifests FIRST: a swap landing after this point only ADDS
         // a newer manifest; the stale one fails validation below and
@@ -470,9 +520,7 @@ object Sink {
             finally in.close()
           }
         if (fireHook) snapshotRaceHook(dir.toString)
-        val listed = fs.listStatus(dir).toSeq
-          .filter(st => st.isFile && !isHidden(st.getPath) && st.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath)
+        val listed = dataFiles(fs, dir)
         val listedNames = listed.map(_.getName).toSet
         manifests.find(names => names.nonEmpty && names.forall(listedNames.contains)) match {
           case Some(names)                              => names.map(n => new Path(dir, n))
@@ -483,7 +531,7 @@ object Sink {
       resolve(fireHook = true, retried = false)
     }
     require(files.nonEmpty, s"snapshot read found no data files under $path")
-    spark.read.option("basePath", path).parquet(files.map(_.toString): _*)
+    readLayout(spark, path, files.map(_.toString))
   }
 
   /** Test seam: invoked once per partition between [[readSnapshot]]'s
@@ -509,38 +557,22 @@ object Sink {
     */
   private def rewriteVia(
       spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
+      fs: FileSystem,
+      root: Path,
       stagePrefix: String,
       partitionCols: Seq[String],
       rows: DataFrame,
       sortCols: Seq[String],
       maxRecordsPerFile: Long,
       filesPerPartition: Int,
-      alsoClear: Seq[org.apache.hadoop.fs.Path]
+      alsoClear: Seq[Path]
   ): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    // Spark's own hidden-path rule: dot-prefixed always; underscore-
-    // prefixed only when NOT a partition dir (`col=value` contains '=')
-    // -- an underscore-named partition COLUMN must stay visible
-    def isHidden(p: Path): Boolean =
-      p.getName.startsWith(".") ||
-        (p.getName.startsWith("_") && !p.getName.contains("="))
-    def leaves(dir: Path, depth: Int): Seq[Path] =
-      if (depth == 0) Seq(dir)
-      else fs.listStatus(dir).toSeq
-        .filter(st => st.isDirectory && !isHidden(st.getPath))
-        .flatMap(st => leaves(st.getPath, depth - 1))
-    def dataFiles(dir: Path): Seq[Path] =
-      fs.listStatus(dir).toSeq
-        .filter(st => st.isFile && !isHidden(st.getPath) && st.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath)
     val staging = new Path(root, s"$stagePrefix-${java.util.UUID.randomUUID().toString.take(8)}")
     try {
       writePartitioned(rows, staging.toString, partitionCols, sortCols,
         maxRecordsPerFile, filesPerPartition)
       val staged =
-        if (fs.exists(staging)) leaves(staging, partitionCols.length).filterNot(isHidden)
+        if (fs.exists(staging)) leaves(fs, staging, partitionCols.length)
         else Nil
       val stagedRels = staged.map { sdir =>
         val rel = staging.toUri.relativize(sdir.toUri).getPath.stripSuffix("/")
@@ -553,7 +585,7 @@ object Sink {
       alsoClear.foreach { dir =>
         val rel = root.toUri.relativize(dir.toUri).getPath.stripSuffix("/")
         if (!stagedRels.contains(rel)) {
-          dataFiles(dir).foreach(f => fs.delete(f, false))
+          dataFiles(fs, dir).foreach(f => fs.delete(f, false))
           manifestFiles(fs, dir).foreach(f => fs.delete(f, false))
           if (fs.listStatus(dir).isEmpty) fs.delete(dir, false)
           ()
@@ -562,8 +594,8 @@ object Sink {
       staged.zip(stagedRels).map { case (sdir, rel) =>
         val dest = new Path(root, rel)
         fs.mkdirs(dest)
-        val old = dataFiles(dest)
-        val in = dataFiles(sdir)
+        val old = dataFiles(fs, dest)
+        val in = dataFiles(fs, sdir)
         val oldNames = old.map(_.getName).toSet
         require(in.forall(f => !oldNames.contains(f.getName)),
           s"staged file names collide with live files in $rel — cannot swap atomically")

@@ -13,30 +13,6 @@ class SchemaMemoSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  /** Call sites of the jobs `body` runs. */
-  private def jobSites(body: => Unit): Seq[String] = {
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        // the result stage's name is the action's call site
-        if (js.stageInfos.nonEmpty) sites.add(js.stageInfos.maxBy(_.stageId).name)
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try body
-    finally {
-      // the listener bus is async — wait for the count to stabilize
-      var last = -1
-      var spins = 0
-      while (sites.size != last && spins < 50) {
-        last = sites.size; Thread.sleep(100); spins += 1
-      }
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    sites.toArray(Array.empty[String]).toSeq
-  }
-
   private def withTempDir(f: File => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft-schema-memo").toFile
     try f(dir) finally FileUtils.deleteQuietly(dir)

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
@@ -432,5 +432,131 @@ class SinkSpec extends SparkSuite {
     val after = Sink.readPartitioned(s, out.toString).select("doc_id", "lang", "n_chars")
     val expected2 = expected.where(col("doc_id") % 5 =!= 0)
     assert(after.exceptAll(expected2).isEmpty && expected2.exceptAll(after).isEmpty)
+  }
+
+  // ---- in-file order, footer schema, job counts --------------------
+
+  /** Descents of the long `sortCol` per parquet file under `root`,
+    * each file read on its own, in file order.
+    */
+  private def descents(root: Path, sortCol: String): Map[String, Int] =
+    Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
+      .map { f =>
+        val ids = spark.read.parquet(f.toString).select(sortCol).collect().map(_.getLong(0))
+        root.relativize(f).toString -> ids.sliding(2).count(w => w.length == 2 && w(0) > w(1))
+      }.toMap
+
+  test("every file written by writePartitioned, compaction, upsert and delete holds sortCols ascending") {
+    // four input splits, each descending: a write that keeps task
+    // order leaves descents inside every split and at its boundaries
+    val rows = spark.range(0, 400, 1, 4).select(
+      (lit(400L) - col("id")).as("id"), (col("id") % 3).cast("string").as("part"),
+      col("id").cast("double").as("v"))
+    val out = tmp()
+    def check(op: String): Unit = {
+      val d = descents(out, "id")
+      assert(d.nonEmpty && d.values.forall(_ == 0), s"after $op, descents per file: $d")
+    }
+    Sink.writePartitioned(rows, out.toString, Seq("part"), Seq("id"), filesPerPartition = 2)
+    check("writePartitioned")
+    assert(Sink.compactPartitions(spark, out.toString, Seq("part"), Seq("id"), targetFiles = 1).nonEmpty)
+    check("compactPartitions")
+    Sink.upsertPartitioned(spark, out.toString,
+      rows.where(col("id") % 7 === 0).withColumn("v", col("v") + 1), Seq("id"), Seq("part"), Seq("id"))
+    check("upsertPartitioned")
+    Sink.deleteKeys(spark, out.toString,
+      rows.where(col("id") % 5 === 0).select("id", "part"), Seq("id"), Seq("part"), Seq("id"))
+    check("deleteKeys")
+    assert(Sink.readPartitioned(spark, out.toString).count() == 400 - 80)
+  }
+
+  test("readLayout: the footer schema is spark.read's, for roots, leaf dirs and files, with no job") {
+    val s = spark; import s.implicits._
+    val base = (1L to 12L).map(i => (i, i * 0.5, s"t$i", (i % 3).toInt, s"p${i % 2}"))
+      .toDF("id", "v", "s", "k", "p")
+    // one and two levels, an underscore-named column, integer dirs
+    val layouts = Seq(Seq("p") -> base, Seq("p", "k") -> base, Seq("k") -> base,
+      Seq("_p") -> base.withColumnRenamed("p", "_p"))
+    for ((partitionCols, df) <- layouts) {
+      val out = tmp().toString
+      Sink.writePartitioned(df, out, partitionCols, Seq("id"))
+      val leaves = layout(Paths.get(out)).keys.map(rel => Paths.get(out, rel).toString).toSeq.sorted
+      val files = leaves.flatMap(dir => Files.list(Paths.get(dir)).iterator().asScala
+        .map(_.toString).filter(_.endsWith(".parquet")))
+      assert(leaves.size > 1 && files.size >= leaves.size, s"$partitionCols: $leaves / $files")
+      for (paths <- Seq(Seq(out), leaves, files)) {
+        var built: org.apache.spark.sql.DataFrame = null
+        val sites = jobSites { built = Sink.readLayout(spark, out, paths) }
+        assert(sites.isEmpty, s"$partitionCols: reading $paths ran jobs $sites")
+        val inferred = spark.read.option("basePath", out).parquet(paths: _*)
+        assert(built.schema == inferred.schema, s"$partitionCols over $paths")
+        assert(built.exceptAll(inferred).isEmpty && inferred.exceptAll(built).isEmpty)
+      }
+    }
+  }
+
+  test("readLayout: files without Spark's row metadata take Spark's inference") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 id; optional binary name (UTF8); optional double score; }")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val out = tmp()
+    for ((part, ids) <- Seq("x" -> (1L to 3L), "y" -> (4L to 5L))) {
+      val file = new org.apache.hadoop.fs.Path(out.resolve(s"part=$part").resolve("f.parquet").toUri)
+      val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, conf)).withType(schema).build()
+      val groups = new SimpleGroupFactory(schema)
+      try ids.foreach(i => w.write(groups.newGroup().append("id", i).append("name", s"n$i").append("score", i * 1.5)))
+      finally w.close()
+    }
+    var built: org.apache.spark.sql.DataFrame = null
+    val sites = jobSites { built = Sink.readLayout(spark, out.toString, Seq(out.toString)) }
+    assert(sites.nonEmpty, "a footer without row metadata must fall back to Spark's inference")
+    val inferred = spark.read.parquet(out.toString)
+    assert(built.schema == inferred.schema)
+    assert(built.orderBy("id").collect().toSeq == inferred.orderBy("id").collect().toSeq)
+    assert(built.count() == 5)
+  }
+
+  test("deleteKeys: duplicate and null keys delete what distinct non-null keys do") {
+    val s = spark; import s.implicits._
+    val out = tmp()
+    val base = Seq((Option(1L), "a", 1.0), (Option(2L), "a", 2.0), (Option.empty[Long], "a", 3.0),
+      (Option(3L), "b", 4.0), (Option(4L), "b", 5.0)).toDF("id", "part", "v")
+    Sink.writePartitioned(base, out.toString, Seq("part"), Seq("id"))
+    // 2 three times, a null id in a and in b, 4 twice
+    val keys = Seq((Option(2L), "a"), (Option(2L), "a"), (Option.empty[Long], "a"), (Option(2L), "a"),
+      (Option(4L), "b"), (Option.empty[Long], "b"), (Option(4L), "b")).toDF("id", "part")
+    assert(Sink.deleteKeys(s, out.toString, keys, Seq("id"), Seq("part"), Seq("id")) ==
+      Seq("part=a", "part=b"))
+    // a null key matches nothing, not even the null-keyed row
+    val back = Sink.readPartitioned(s, out.toString).select("id", "part", "v")
+      .as[(Option[Long], String, Double)].collect().toSet
+    assert(back == Set((Option(1L), "a", 1.0), (Option.empty[Long], "a", 3.0), (Option(3L), "b", 4.0)))
+  }
+
+  test("job counts: deleteKeys runs no inference job and at most 5 jobs; reads build with none") {
+    val s = spark; import s.implicits._
+    val rows = spark.range(0, 300, 1, 3).select(col("id"), (col("id") % 4).cast("string").as("part"),
+      col("id").cast("double").as("v"))
+    val out = tmp().toString
+    Sink.writePartitioned(rows, out, Seq("part"), Seq("id"))
+    val keys = rows.where(col("id") % 5 === 0).select("id", "part")
+    val deleteSites = jobSites { Sink.deleteKeys(s, out, keys, Seq("id"), Seq("part"), Seq("id")); () }
+    // one touched-set job, then the rewrite's broadcast, shuffle and write
+    assert(deleteSites.size <= 5, s"deleteKeys jobs: $deleteSites")
+    assert(!deleteSites.exists(_.startsWith("parquet at Sink")), s"inference job in $deleteSites")
+    assert(jobSites { Sink.readPartitioned(s, out); () }.isEmpty)
+    assert(jobSites { Sink.readSnapshot(s, out, Seq("part")); () }.isEmpty)
+    val upsertSites = jobSites {
+      Sink.upsertPartitioned(s, out, Seq((1L, "1", 9.0), (2L, "2", 9.0)).toDF("id", "part", "v"),
+        Seq("id"), Seq("part"), Seq("id")); ()
+    }
+    assert(upsertSites.count(_.startsWith("collect at Sink")) == 1 && upsertSites.size <= 4,
+      s"upsert jobs, touched set first: $upsertSites")
+    assert(Sink.readPartitioned(s, out).count() == 240)
   }
 }

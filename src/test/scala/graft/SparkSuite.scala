@@ -21,6 +21,30 @@ trait SparkSuite extends AnyFunSuite {
 
   def ts(s: String): Timestamp = Timestamp.valueOf(s + " 00:00:00")
 
+  /** Call sites of the Spark jobs `body` runs, in start order. */
+  def jobSites(body: => Unit): Seq[String] = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        // the result stage's name is the action's call site
+        if (js.stageInfos.nonEmpty) sites.add(js.stageInfos.maxBy(_.stageId).name)
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try body
+    finally {
+      // the listener bus is async — wait for the count to stabilize
+      var last = -1
+      var spins = 0
+      while (sites.size != last && spins < 50) {
+        last = sites.size; Thread.sleep(100); spins += 1
+      }
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    sites.toArray(Array.empty[String]).toSeq
+  }
+
   import scala.language.implicitConversions
 
   // --- fixtures (tests/test_pandas.py:18-145) ---------------------
