@@ -19,44 +19,9 @@ import graft.pipeline.{Contamination, Dedup, Graph, Multimodal, Sampling, Simila
   */
 object SparkEntry {
 
-  // Schema memo. Inferring a parquet table's schema is a one-task
-  // Spark job that reads footers ("parquet at SparkEntry"), run on
-  // every read of every query, so `t` reads each table with the schema
-  // inferred the first time it read that path. The entry holds a
-  // fingerprint of the table: its files' (name, length, modification
-  // time) from one driver-side listing, plus the session's parquet
-  // confs that steer inference. A changed fingerprint infers again and
-  // replaces the entry, so a rewritten table is never read with a stale
-  // schema and the memo holds one entry per path. The memo keeps the
-  // schema, never the DataFrame: every call returns a fresh relation
-  // with fresh attribute ids, so a self-join's sides stay distinct.
-  private type TableFingerprint = (Seq[(String, Long, Long)], Map[String, String])
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (TableFingerprint, org.apache.spark.sql.types.StructType)]()
-
-  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val p = s"$dir/$name.parquet"
-    val fingerprint = tableFingerprint(s, p)
-    Option(schemaMemo.get(p)).filter(m => fingerprint.contains(m._1)) match {
-      case Some((_, schema)) => s.read.schema(schema).parquet(p)
-      case None =>
-        val df = s.read.parquet(p)
-        fingerprint.foreach(f => schemaMemo.put(p, (f, df.schema)))
-        df
-    }
-  }
-
-  /** See `schemaMemo`; `None` when the path cannot be listed (the read
-    * then fails, or succeeds, as an unmemoized read would).
-    */
-  private def tableFingerprint(s: SparkSession, p: String): Option[TableFingerprint] = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    try {
-      val files = path.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(path)
-        .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).toSeq.sorted
-      Some((files, s.conf.getAll.filter(_._1.contains("parquet"))))
-    } catch { case _: java.io.IOException => None }
-  }
+  /** The input table `name` under `dir`, read through [[graft.sources.Parquet]]. */
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
+    graft.sources.Parquet.read(s, s"$dir/$name.parquet")
 
   // -----------------------------------------------------------------
   // deferred cache cleanup. A query function only BUILDS its frame —

@@ -68,7 +68,7 @@ object IncrementalDedup {
     * from.
     */
   def readStore(spark: SparkSession, storePath: String, idCol: String): DataFrame =
-    spark.read.parquet(storePath).select(col(idCol), col("band"), col("bandsig"))
+    graft.sources.Parquet.read(spark, storePath).select(col(idCol), col("band"), col("bandsig"))
 
   /** Candidate pairs of `newDocs` processed against a fingerprint
     * `store` (from [[readStore]]): (id_a, id_b, n_band_matches),
@@ -200,7 +200,7 @@ object IncrementalDedup {
     // (pinned by IncrementalDedupSpec's chaining test)
     val store =
       if (hasData)
-        spark.read.parquet(storePath)
+        graft.sources.Parquet.read(spark, storePath)
           .where(col("batch") =!= batchLabel)
           .select(col(idCol), col("band"), col("bandsig"))
       else

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** PERSISTED IVF index: the serving face of [[Similarity.ivfTopK]].
   *
   * [[Similarity.ivfTopK]] recomputes cell assignment for the whole
@@ -130,13 +132,8 @@ object IvfIndex {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/$LayoutMetaDir")
   }
 
-  private[graft] def readLayoutMeta(spark: SparkSession, path: String): Option[LayoutMeta] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(s"$path/$LayoutMetaDir")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val df = spark.read.parquet(p.toString)
+  private[graft] def readLayoutMeta(spark: SparkSession, path: String): Option[LayoutMeta] =
+    Parquet.readIfExists(spark, s"$path/$LayoutMetaDir").map { df =>
       // r18 sidecars predate the scheme column and stay on scheme 1
       // (their on-disk hashes were minted under it — see LayoutMeta)
       val withScheme =
@@ -147,14 +144,13 @@ object IvfIndex {
       // files) — name it instead of a NoSuchElementException from
       // deep inside every search/append/rebuild call (ADVICE r18 #3)
       withScheme.take(1) match {
-        case Array(r) => Some(LayoutMeta(r.getString(0), r.getSeq[String](1), r.getInt(2)))
+        case Array(r) => LayoutMeta(r.getString(0), r.getSeq[String](1), r.getInt(2))
         case _ => throw new IllegalStateException(
-          s"corrupt _layout sidecar at $p: the directory exists but holds no rows - " +
+          s"corrupt _layout sidecar at $path/$LayoutMetaDir: the directory exists but holds no rows - " +
             "restore it from a backup, delete it to fall back to the legacy metaless " +
             "heuristics, or rebuild the index from original vectors")
       }
     }
-  }
 
   /** Build (or rebuild) the index at `path`: pick the deterministic
     * [[Similarity.ivfCentroids]] draw, assign every corpus row to
@@ -602,22 +598,16 @@ object IvfIndex {
     * to the caller's inference and the raw — non-residual — mode).
     * Metas written before the residual flag read as raw.
     */
-  private def readPqMeta(spark: SparkSession, path: String): Option[(Int, Int, Int, Boolean)] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(s"$path/$PqMetaDir")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val df = spark.read.parquet(p.toString)
+  private def readPqMeta(spark: SparkSession, path: String): Option[(Int, Int, Int, Boolean)] =
+    Parquet.readIfExists(spark, s"$path/$PqMetaDir").map { df =>
       // ONE head() for all four fields (r20 opt): the former
       // two-action form (m/ksub/sub, then residual) paid a second
       // plan+job cycle per serve for a one-row sidecar
       val residualCol =
         if (df.columns.contains("residual")) col("residual") else lit(false)
       val r = df.select(col("m"), col("ksub"), col("sub"), residualCol.as("residual")).head()
-      Some((r.getInt(0), r.getInt(1), r.getInt(2), r.getBoolean(3)))
+      (r.getInt(0), r.getInt(1), r.getInt(2), r.getBoolean(3))
     }
-  }
 
   /** Whether the PQ layout at `path` stores residual codes — the
     * IVFADC mode whose codes are RELATIVE TO the coarse quantizer
@@ -727,7 +717,7 @@ object IvfIndex {
       idCol: String,
       vecCol: String
   ): DataFrame = {
-    val layout = spark.read.parquet(path)
+    val layout = Parquet.read(spark, path)
     pqReconRowsWith(spark, path, layout,
       residual = layoutIsResidual(spark, path),
       payload = payloadColsOf(layout.columns, idCol, vecCol, readLayoutMeta(spark, path)),
@@ -763,7 +753,7 @@ object IvfIndex {
         col("__codes__"), col("__scale__"), col("__cn__"),
         transform(col("__codes__").cast("array<double>"), c => c * col("__scale__")).as(vecCol))
         ++ payload.map(col): _*)
-    val cb = broadcast(spark.read.parquet(s"$path/$CodebooksDir")
+    val cb = broadcast(Parquet.read(spark, s"$path/$CodebooksDir")
       .select(col("sub_id"), col("__ci__"), col("__cbv__")))
     // stored tinyint codes carry the -128 rank offset; undo it for
     // the codebook-rank join (the STORED form still travels verbatim
@@ -787,7 +777,7 @@ object IvfIndex {
       rhat.select(Seq(col(idCol), col("__pq__"), col("__xn__"), col("__rh__").as(vecCol))
         ++ payload.map(col): _*)
     else {
-      val cents = broadcast(spark.read.parquet(s"$path/$CentroidsDir")
+      val cents = broadcast(Parquet.read(spark, s"$path/$CentroidsDir")
         .select(col("cent_id").cast("long").as("cent_id"), col("__cv__")))
       rhat.join(cents, Seq("cent_id"))
         .select(Seq(col(idCol), col("__pq__"), col("__xn__"),
@@ -811,7 +801,7 @@ object IvfIndex {
       payload: Seq[String],
       meta: Option[LayoutMeta]
   ): IvfStats = {
-    val cents = broadcast(spark.read.parquet(s"$path/$CentroidsDir"))
+    val cents = broadcast(Parquet.read(spark, s"$path/$CentroidsDir"))
     val routed = Similarity.ivfAssignTwoLevel(
       rows.select(col(idCol), col(vecCol)), cents, idCol, vecCol, "row", scoreDecimals)
     // refine layouts carry the int8 triple verbatim next to the codes
@@ -840,7 +830,7 @@ object IvfIndex {
       payload: Seq[String],
       meta: Option[LayoutMeta]
   ): IvfStats = {
-    val cents = broadcast(spark.read.parquet(s"$path/$CentroidsDir"))
+    val cents = broadcast(Parquet.read(spark, s"$path/$CentroidsDir"))
     val routed = Similarity.ivfAssignTwoLevel(
       rows.select(col(idCol), col(vecCol)), cents, idCol, vecCol, "row", scoreDecimals)
     val assigned = routed.select(col("cent_id"), col("row_id").as(idCol))
@@ -880,10 +870,10 @@ object IvfIndex {
       centroids: Option[DataFrame] = None
   ): Unit = {
     // ONE layout read + ONE sidecar read decide every branch below —
-    // each fresh spark.read.parquet(path) re-lists the cell directory
+    // each fresh Parquet.read(spark, path) re-lists the cell directory
     // (real cost on an object store); the frames/schemas are reused
     // through the whole rebuild (ADVICE r17)
-    val layoutDf = spark.read.parquet(path)
+    val layoutDf = Parquet.read(spark, path)
     val layoutCols = layoutDf.columns
     val pqMeta = if (layoutCols.contains("__pq__")) readPqMeta(spark, path) else None
     val layoutMeta = readLayoutMeta(spark, path)
@@ -912,9 +902,9 @@ object IvfIndex {
       try {
         graft.sources.Sink.writePartitioned(
           rows, newPath, partitionCols = Seq("cent_id"), sortCols = Seq(idCol))
-        spark.read.parquet(s"$path/$CentroidsDir")
+        Parquet.read(spark, s"$path/$CentroidsDir")
           .write.mode("overwrite").parquet(s"$newPath/$CentroidsDir")
-        spark.read.parquet(s"$path/$CodebooksDir")
+        Parquet.read(spark, s"$path/$CodebooksDir")
           .write.mode("overwrite").parquet(s"$newPath/$CodebooksDir")
         pqMeta.foreach { case (m0, ksub0, sub0, res0) =>
           writePqMeta(spark, newPath, m0, ksub0, sub0,
@@ -948,7 +938,7 @@ object IvfIndex {
           graft.sources.Sink.writePartitioned(
             assigned, newPath, partitionCols = Seq("cent_id"), sortCols = Seq(idCol))
           cents.write.mode("overwrite").parquet(s"$newPath/$CentroidsDir")
-          spark.read.parquet(s"$path/$CodebooksDir")
+          Parquet.read(spark, s"$path/$CodebooksDir")
             .write.mode("overwrite").parquet(s"$newPath/$CodebooksDir")
           // the declared-shape sidecars carry over with the frozen
           // codebooks (legacy metaless stores rebuild metaless)
@@ -1027,13 +1017,13 @@ object IvfIndex {
       vecCol: String,
       scoreDecimals: Int = 4
   ): IvfStats = {
-    val cents = broadcast(spark.read.parquet(s"$path/$CentroidsDir"))
+    val cents = broadcast(Parquet.read(spark, s"$path/$CentroidsDir"))
     val nz = Similarity.dropZeroVectors(batch, vecCol)
     // ONE schema read + ONE layout-meta read decide the layout —
     // appendBatch runs per micro-batch, and each
-    // spark.read.parquet(path) lists the cell directory (real cost on
+    // Parquet.read(spark, path) lists the cell directory (real cost on
     // an object store at 100 TB)
-    val layoutSchema = spark.read.parquet(path).schema
+    val layoutSchema = Parquet.read(spark, path).schema
     val layoutCols = layoutSchema.fieldNames.toSet
     val layoutMeta = readLayoutMeta(spark, path)
     // payload layouts (r17): every extra stored column must arrive
@@ -1056,7 +1046,7 @@ object IvfIndex {
         // conform to the STORE's rank encoding (tinyint-offset vs
         // smallint), recovered from the stored element type — an
         // append must never mix widths into one cell layout
-        val cb = Similarity.PqCodebook.collect(spark.read.parquet(s"$path/$CodebooksDir"))
+        val cb = Similarity.PqCodebook.collect(Parquet.read(spark, s"$path/$CodebooksDir"))
         if (layoutIsResidual(spark, path))
           // residual store: residual vs the FROZEN cell centroid,
           // L2-encoded under the FROZEN codebooks — the append is the
@@ -1174,7 +1164,7 @@ object IvfIndex {
     * when a pre-sidecar layout needs its one-time keymap migration.
     */
   def stats(spark: SparkSession, path: String, idCol: String = "id"): IvfStats = {
-    val nlist = spark.read.parquet(s"$path/$CentroidsDir").count().toInt
+    val nlist = Parquet.read(spark, s"$path/$CentroidsDir").count().toInt
     val cells = keymap(spark, path, idCol)
       .groupBy("cent_id").agg(count(lit(1)).as("__n__"))
       .agg(count(lit(1)).as("cells"), sum("__n__").as("rows"), max("__n__").as("mx"))
@@ -1234,7 +1224,7 @@ object IvfIndex {
     * rank-index array) — one parquet-footer schema read.
     */
   private def layoutIsPq(spark: SparkSession, path: String): Boolean =
-    spark.read.parquet(path).columns.contains("__pq__")
+    Parquet.read(spark, path).columns.contains("__pq__")
 
   /** (key, vector[, payload…]) back OUT of a layout — the input
     * contract of [[build]]/[[managedCatchUp]]. Float layouts project;
@@ -1250,7 +1240,7 @@ object IvfIndex {
       idCol: String,
       vecCol: String
   ): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = Parquet.read(spark, path)
     corpusVectorsOf(df, idCol, vecCol,
       payloadColsOf(df.columns, idCol, vecCol, readLayoutMeta(spark, path)))
   }
@@ -1328,14 +1318,9 @@ object IvfIndex {
   /** The histogram's declared payload columns (recovered from the
     * sidecar's own schema); Nil when the store keeps no histogram.
     */
-  private def cellHistCols(spark: SparkSession, path: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(s"$path/$CellHistDir")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else spark.read.parquet(p.toString).columns
-      .filterNot(c => c == "cent_id" || c == "__n__").toSeq
-  }
+  private def cellHistCols(spark: SparkSession, path: String): Seq[String] =
+    Parquet.readIfExists(spark, s"$path/$CellHistDir").toSeq
+      .flatMap(_.columns.filterNot(c => c == "cent_id" || c == "__n__"))
 
   /** Carry the histogram across a rebuild: recount from the new
     * assignment when the coarse quantizer (and so the cells) changed;
@@ -1352,7 +1337,7 @@ object IvfIndex {
     if (cols.isEmpty) return
     recomputeFrom match {
       case Some(assigned) => writeCellHist(spark, toPath, assigned, cols)
-      case None => spark.read.parquet(s"$fromPath/$CellHistDir")
+      case None => Parquet.read(spark, s"$fromPath/$CellHistDir")
         .coalesce(1).write.mode("overwrite").parquet(s"$toPath/$CellHistDir")
     }
   }
@@ -1370,11 +1355,11 @@ object IvfIndex {
     val cols = cellHistCols(spark, path)
     if (cols.isEmpty || touchedCells.isEmpty) return
     val histPath = s"$path/$CellHistDir"
-    val fresh = spark.read.parquet(path)
+    val fresh = Parquet.read(spark, path)
       .where(col("cent_id").isin(touchedCells.map(_.asInstanceOf[Any]): _*))
       .groupBy(col("cent_id").cast("long").as("cent_id") +: cols.map(col): _*)
       .agg(count(lit(1)).as("__n__"))
-    val kept = spark.read.parquet(histPath)
+    val kept = Parquet.read(spark, histPath)
       .where(!col("cent_id").isin(touchedCells.map(_.asInstanceOf[Any]): _*))
     val tmp = new Path(s"$path/${CellHistDir}_tmp")
     val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1396,24 +1381,20 @@ object IvfIndex {
       spark: SparkSession,
       path: String,
       pred: org.apache.spark.sql.Column
-  ): Option[(Map[Long, Long], Map[Long, Long])] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(s"$path/$CellHistDir")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val hist = spark.read.parquet(p.toString)
-    try {
-      val totals = hist.groupBy(col("cent_id")).agg(sum(col("__n__")).as("n"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val matches = hist.where(pred).groupBy(col("cent_id")).agg(sum(col("__n__")).as("n"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      Some((totals, matches))
-    } catch {
-      // the predicate references columns outside the histogram's
-      // declared set — not an error, just not answerable from counts
-      case _: org.apache.spark.sql.AnalysisException => None
+  ): Option[(Map[Long, Long], Map[Long, Long])] =
+    Parquet.readIfExists(spark, s"$path/$CellHistDir").flatMap { hist =>
+      try {
+        val totals = hist.groupBy(col("cent_id")).agg(sum(col("__n__")).as("n"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val matches = hist.where(pred).groupBy(col("cent_id")).agg(sum(col("__n__")).as("n"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        Some((totals, matches))
+      } catch {
+        // the predicate references columns outside the histogram's
+        // declared set — not an error, just not answerable from counts
+        case _: org.apache.spark.sql.AnalysisException => None
+      }
     }
-  }
 
   /** The sidecar rows for a batch of assignments: (key, cell,
     * bucket, version). `kb` is a pure function of the key, so sidecar
@@ -1534,14 +1515,9 @@ object IvfIndex {
     * the union — legacy sidecars keep their shape (catch-up then
     * falls back to the id-only diff, the pre-r15 behavior).
     */
-  private def conformKeymap(spark: SparkSession, kmPath: String, rows: DataFrame): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(kmPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && !spark.read.parquet(kmPath).columns.contains("__ver__"))
-      rows.drop("__ver__")
+  private def conformKeymap(spark: SparkSession, kmPath: String, rows: DataFrame): DataFrame =
+    if (Parquet.readIfExists(spark, kmPath).exists(!_.columns.contains("__ver__"))) rows.drop("__ver__")
     else rows
-  }
 
   /** One-shot migration of a LEGACY (metaless, or older-scheme) store
     * to the current declared layout + version scheme (r19, VERDICT
@@ -1571,7 +1547,7 @@ object IvfIndex {
       idCol: String,
       vecCol: String
   ): Unit = {
-    val layoutDf = spark.read.parquet(path)
+    val layoutDf = Parquet.read(spark, path)
     val payload = readLayoutMeta(spark, path).map(_.payloadCols)
       .getOrElse(payloadColsOf(layoutDf.columns, idCol, vecCol, None))
     val meta = LayoutMeta(vecCol, payload, CurrentVerScheme)
@@ -1605,18 +1581,16 @@ object IvfIndex {
     * changed-vector catch-up for free.
     */
   private def keymapFull(spark: SparkSession, path: String, idCol: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val km = new Path(s"$path/$KeymapDir")
-    val fs = km.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(km)) {
-      val layout = spark.read.parquet(path)
+    val km = s"$path/$KeymapDir"
+    val df = Parquet.readIfExists(spark, km).getOrElse {
+      val layout = Parquet.read(spark, path)
       require(layout.columns.contains(idCol),
         s"index at $path has no '$idCol' column; cannot derive the _keymap sidecar")
       graft.sources.Sink.writePartitioned(
         keymapRows(layout, idCol, readLayoutMeta(spark, path)),
-        km.toString, partitionCols = Seq("kb"), sortCols = Seq(idCol))
+        km, partitionCols = Seq("kb"), sortCols = Seq(idCol))
+      Parquet.read(spark, km)
     }
-    val df = spark.read.parquet(km.toString)
     val withVer =
       if (df.columns.contains("__ver__")) df
       else df.withColumn("__ver__", lit(null).cast("long"))
@@ -1944,14 +1918,14 @@ object IvfIndex {
     // round on purpose: the live generation keeps receiving appends
     // whose upserts swap files, and a listing captured before a swap
     // would read deleted file names (same rule as resurrectDiff below)
-    val fromSchema = spark.read.parquet(fromPath).schema
+    val fromSchema = Parquet.read(spark, fromPath).schema
     val isPq = fromSchema.fieldNames.contains("__pq__")
     val pqMeta = if (isPq) readPqMeta(spark, fromPath) else None
     val isResidual = pqMeta.exists(_._4)
     val layoutMeta = readLayoutMeta(spark, fromPath)
     val payload = payloadColsOf(fromSchema.fieldNames, idCol, vecCol, layoutMeta)
     while (rounds < 5 && !drained) {
-      val fromLayout = spark.read.parquet(fromPath)
+      val fromLayout = Parquet.read(spark, fromPath)
       val missing = catchUpDiff(spark, fromPath, toPath, idCol)
       var acted = false
       if (isResidual) {
@@ -2295,13 +2269,13 @@ object IvfIndex {
   ): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     import spark.implicits._
-    val nlist = spark.read.parquet(s"$path/$CentroidsDir").count().toInt
+    val nlist = Parquet.read(spark, s"$path/$CentroidsDir").count().toInt
     // the store-derived truth keeps payload columns (pqReconRows /
     // corpusVectors carry them), so a payload `filter` applies to it
     // exactly as it applies inside the probed scan. ONE layout read +
     // one read per sidecar (the one-listing discipline).
     val truthSrc0 = truthCorpus.getOrElse {
-      val layoutDf = spark.read.parquet(path)
+      val layoutDf = Parquet.read(spark, path)
       val payload = payloadColsOf(layoutDf.columns, idCol, vecCol,
         readLayoutMeta(spark, path))
       if (layoutDf.columns.contains("__pq__"))
@@ -2382,9 +2356,9 @@ object IvfIndex {
       refine: Int = 0
   ): DataFrame = {
     // ONE read of the cell layout serves the layout dispatch AND the
-    // probed scan — a second spark.read.parquet(path) would re-list
+    // probed scan — a second Parquet.read(spark, path) would re-list
     // the cell directory per query batch (object-store cost at scale)
-    searchTopKOver(spark, path, spark.read.parquet(path), centsOpt = None,
+    searchTopKOver(spark, path, Parquet.read(spark, path), centsOpt = None,
       queries, idCol, vecCol, k, nprobe, scoreDecimals, filter, refine = refine)
   }
 
@@ -2423,7 +2397,7 @@ object IvfIndex {
     require(refine == 0,
       "searchTopK: refine re-ranking needs a PQ layout built with refineInt8 = true " +
         "(float and int8 layouts already score candidates at their full stored fidelity)")
-    val cents = centsOpt.getOrElse(broadcast(spark.read.parquet(s"$path/$CentroidsDir")))
+    val cents = centsOpt.getOrElse(broadcast(Parquet.read(spark, s"$path/$CentroidsDir")))
     val qNz = Similarity.dropZeroVectors(queries, vecCol)
     // qRankedOpt (r20 opt): a caller that already ranked the queries
     // against every cell (the adaptive serve) passes the ranked frame;
@@ -2551,11 +2525,11 @@ object IvfIndex {
       searchTopK(spark, path, queries, idCol, vecCol, k, nprobe, scoreDecimals,
         refine = refine)
     case Some(pred) =>
-      val layoutDf = spark.read.parquet(path)
+      val layoutDf = Parquet.read(spark, path)
       // ONE collect of the centroid sidecar (r20 opt): nlist comes from
       // the collected rows (the former count() job is gone) and every
       // downstream routing reference plans against a literal relation
-      val centDf = spark.read.parquet(s"$path/$CentroidsDir")
+      val centDf = Parquet.read(spark, s"$path/$CentroidsDir")
       val centRows = centDf.collect()
       val cents = broadcast(spark.createDataFrame(java.util.Arrays.asList(centRows: _*), centDf.schema))
       val nlist = centRows.length
@@ -2636,8 +2610,8 @@ object IvfIndex {
     require(refine == 0 || refine >= k,
       s"searchTopK: refine=$refine must be >= k=$k - the re-rank pool cannot be smaller " +
         "than the result")
-    val cents = centsOpt.getOrElse(broadcast(spark.read.parquet(s"$path/$CentroidsDir")))
-    val cb = broadcast(spark.read.parquet(s"$path/$CodebooksDir"))
+    val cents = centsOpt.getOrElse(broadcast(Parquet.read(spark, s"$path/$CentroidsDir")))
+    val cb = broadcast(Parquet.read(spark, s"$path/$CodebooksDir"))
     // DECLARED shape from the _pq_meta sidecar when the store has one
     // (ADVICE r16: inferring ksub = codebookRows / m would silently
     // mis-address the flat LUT if a subspace ever lost a codeword);

@@ -20,6 +20,7 @@ object ReadFile {
     // compression suffixes (.gz/.zst/...) are handled by the codecs
     // inside each text source; dispatch on the logical extension
     val ext = lower.stripSuffix(".gz").stripSuffix(".zst").stripSuffix(".bz2")
+    // input from outside graft: Spark's summary-file and mergeSchema rules apply
     if (ext.endsWith(".parquet")) spark.read.parquet(path)
     else if (ext.endsWith(".csv"))
       spark.read.option("header", "true").option("inferSchema", "true").csv(path)
@@ -58,11 +59,7 @@ object ReadFile {
       val sm = Files.getLastModifiedTime(src).toMillis
       cm >= sm
     }
-    if (cacheFresh) spark.read.parquet(cachePath)
-    else {
-      val df = readFile(spark, path)
-      df.write.mode("overwrite").parquet(cachePath)
-      spark.read.parquet(cachePath)
-    }
+    if (!cacheFresh) readFile(spark, path).write.mode("overwrite").parquet(cachePath)
+    Parquet.read(spark, cachePath)
   }
 }

@@ -1,11 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Partitioned parquet sink — the output half of a 100 TB pipeline.
   * (Reference analog: the parquet side-cache in
@@ -39,11 +36,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Schema: every read of a layout ([[readPartitioned]],
   * [[readSnapshot]], and the reads inside [[compactPartitions]],
   * [[upsertPartitioned]], [[upsertRelocating]] and [[deleteKeys]])
-  * takes the data schema from the Catalyst schema Spark's writer
-  * stores in the footer of one file, read on the driver, and the
-  * partition columns from the directory names; none runs a
-  * schema-inference job. [[readPartitionedEvolved]] merges every
-  * footer instead.
+  * goes through [[Parquet.read]], which says where the schema comes
+  * from; none runs a schema-inference job. [[readPartitionedEvolved]]
+  * merges every footer instead.
   *
   * Jobs per op on an existing layout, when the keys or batch are small
   * enough to broadcast and need no shuffle of their own:
@@ -116,7 +111,7 @@ object Sink {
     * on them prune to a directory walk).
     */
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    readLayout(spark, path, Seq(path))
+    Parquet.read(spark, path)
 
   /** [[readPartitioned]] with schema evolution: union the schemas of
     * every file footer (`mergeSchema`) so batches written before a
@@ -130,58 +125,17 @@ object Sink {
   def readPartitionedEvolved(spark: SparkSession, path: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path)
 
-  /** `paths` (partition dirs or data files under `basePath`) as one
-    * DataFrame, without Spark's schema-inference job. The data schema
-    * is the Catalyst schema Spark's writer stores in every file footer
-    * (`org.apache.spark.sql.parquet.row.metadata`), read on the driver
-    * from the first visible file by name; Spark's own inference, without
-    * `mergeSchema`, also reads a single file's footer, but in a job.
-    * Partition columns are still discovered, and typed, from the
-    * directory names. A layout whose first file lacks that metadata
-    * (written by another parquet writer) is read with Spark's inference.
-    */
-  private[graft] def readLayout(spark: SparkSession, basePath: String, paths: Seq[String]): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def firstFile(fs: FileSystem, st: FileStatus): Option[Path] =
-      if (st.isFile) Some(st.getPath)
-      else fs.listStatus(st.getPath).sortBy(_.getPath.getName).iterator
-        .filterNot(c => isHidden(c.getPath))
-        .flatMap(firstFile(fs, _))
-        .nextOption()
-    // a missing path is left to Spark's read, which reports it
-    val footer = paths.iterator.map(new Path(_)).flatMap { p =>
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) firstFile(fs, fs.getFileStatus(p)) else None
-    }.nextOption()
-    val schema = footer.flatMap { f =>
-      val in = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try Option(in.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey))
-      finally in.close()
-    }.flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption.collect { case st: StructType => st })
-    val reader = spark.read.option("basePath", basePath)
-    schema.fold(reader)(st => reader.schema(st)).parquet(paths: _*)
-  }
-
-  /** Where Spark's parquet writer stores the written Catalyst schema. */
-  private val RowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
-
-  // Spark's own hidden-path rule: dot-prefixed always; underscore-
-  // prefixed only when NOT a partition dir (`col=value` contains '=')
-  // -- an underscore-named partition COLUMN must stay visible
-  private def isHidden(p: Path): Boolean =
-    p.getName.startsWith(".") || (p.getName.startsWith("_") && !p.getName.contains("="))
-
   /** The visible partition dirs exactly `depth` levels below `dir`. */
   private def leaves(fs: FileSystem, dir: Path, depth: Int): Seq[Path] =
     if (depth == 0) Seq(dir)
     else fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && !isHidden(st.getPath))
+      .filter(st => st.isDirectory && !Parquet.isHidden(st.getPath))
       .flatMap(st => leaves(fs, st.getPath, depth - 1))
 
   /** The visible parquet data files directly in `dir`. */
   private def dataFiles(fs: FileSystem, dir: Path): Seq[Path] =
     fs.listStatus(dir).toSeq
-      .filter(st => st.isFile && !isHidden(st.getPath) && st.getPath.getName.endsWith(".parquet"))
+      .filter(st => st.isFile && !Parquet.isHidden(st.getPath) && st.getPath.getName.endsWith(".parquet"))
       .map(_.getPath)
 
   /** Small-file maintenance for a [[writePartitioned]] layout: every
@@ -242,7 +196,7 @@ object Sink {
 
     val staging = new Path(root, s".compact-${java.util.UUID.randomUUID().toString.take(8)}")
     try {
-      val rows = readLayout(spark, path, overfull.map(_.toString))
+      val rows = Parquet.read(spark, path, overfull.map(_.toString))
       writePartitioned(rows, staging.toString, partitionCols, sortCols,
         maxRecordsPerFile, filesPerPartition = targetFiles)
       overfull.map { dir =>
@@ -388,7 +342,7 @@ object Sink {
     val existingDirs = touchedRels(touchedF, partitionCols).map(rel => new Path(root, rel)).filter(fs.exists)
     val survivors =
       if (existingDirs.isEmpty) batch.limit(0)
-      else readLayout(spark, path, existingDirs.map(_.toString))
+      else Parquet.read(spark, path, existingDirs.map(_.toString))
         .join(batch.select(keyCols.map(col): _*), keyCols, "left_anti")
         .select(batch.columns.map(col).toSeq: _*)
     rewriteVia(spark, fs, root, s".upsert", partitionCols,
@@ -427,7 +381,7 @@ object Sink {
     if (existingDirs.isEmpty) return Nil
     // no distinct(): a repeated key removes nothing more in a left-anti
     // join, and deduplicating would cost an aggregation stage
-    val survivors = readLayout(spark, path, existingDirs.map(_.toString))
+    val survivors = Parquet.read(spark, path, existingDirs.map(_.toString))
       .join(keys.select(keyCols.map(col): _*), keyCols, "left_anti")
     rewriteVia(spark, fs, root, s".delete", partitionCols,
       survivors, sortCols, maxRecordsPerFile, filesPerPartition,
@@ -531,7 +485,7 @@ object Sink {
       resolve(fireHook = true, retried = false)
     }
     require(files.nonEmpty, s"snapshot read found no data files under $path")
-    readLayout(spark, path, files.map(_.toString))
+    Parquet.read(spark, path, files.map(_.toString))
   }
 
   /** Test seam: invoked once per partition between [[readSnapshot]]'s

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.Sink
+import graft.sources.{Parquet, Sink}
 
 /** The partitioned sink: the properties a 100 TB pipeline's output
   * layout lives or dies by — lossless round-trip, deterministic
@@ -487,7 +487,7 @@ class SinkSpec extends SparkSuite {
       assert(leaves.size > 1 && files.size >= leaves.size, s"$partitionCols: $leaves / $files")
       for (paths <- Seq(Seq(out), leaves, files)) {
         var built: org.apache.spark.sql.DataFrame = null
-        val sites = jobSites { built = Sink.readLayout(spark, out, paths) }
+        val sites = jobSites { built = Parquet.read(spark, out, paths) }
         assert(sites.isEmpty, s"$partitionCols: reading $paths ran jobs $sites")
         val inferred = spark.read.option("basePath", out).parquet(paths: _*)
         assert(built.schema == inferred.schema, s"$partitionCols over $paths")
@@ -496,7 +496,7 @@ class SinkSpec extends SparkSuite {
     }
   }
 
-  test("readLayout: files without Spark's row metadata take Spark's inference") {
+  test("readLayout: files without Spark's row metadata read the converted footer schema, with no job") {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.util.HadoopOutputFile
@@ -513,8 +513,8 @@ class SinkSpec extends SparkSuite {
       finally w.close()
     }
     var built: org.apache.spark.sql.DataFrame = null
-    val sites = jobSites { built = Sink.readLayout(spark, out.toString, Seq(out.toString)) }
-    assert(sites.nonEmpty, "a footer without row metadata must fall back to Spark's inference")
+    val sites = jobSites { built = Parquet.read(spark, out.toString, Seq(out.toString)) }
+    assert(sites.isEmpty, s"a footer without row metadata ran jobs $sites")
     val inferred = spark.read.parquet(out.toString)
     assert(built.schema == inferred.schema)
     assert(built.orderBy("id").collect().toSeq == inferred.orderBy("id").collect().toSeq)

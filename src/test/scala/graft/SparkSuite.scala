@@ -22,12 +22,23 @@ trait SparkSuite extends AnyFunSuite {
   def ts(s: String): Timestamp = Timestamp.valueOf(s + " 00:00:00")
 
   /** Call sites of the Spark jobs `body` runs, in start order. */
-  def jobSites(body: => Unit): Seq[String] = {
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  def jobSites(body: => Unit): Seq[String] = jobStarts(body).map(_._1)
+
+  /** (call site, Spark method that started the job) of the jobs `body`
+    * runs, in start order. The method is the top frame of the result
+    * stage's long call site, e.g. `...DataFrameReader.parquet(...)` for
+    * a read's schema-inference job and `...DataFrameWriter.parquet(...)`
+    * for a write, which share the short site "parquet at <file>".
+    */
+  def jobStarts(body: => Unit): Seq[(String, String)] = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         // the result stage's name is the action's call site
-        if (js.stageInfos.nonEmpty) sites.add(js.stageInfos.maxBy(_.stageId).name)
+        if (js.stageInfos.nonEmpty) {
+          val result = js.stageInfos.maxBy(_.stageId)
+          sites.add((result.name, result.details.linesIterator.nextOption().getOrElse("")))
+        }
         ()
       }
     }
@@ -42,7 +53,7 @@ trait SparkSuite extends AnyFunSuite {
       }
       spark.sparkContext.removeSparkListener(listener)
     }
-    sites.toArray(Array.empty[String]).toSeq
+    sites.toArray(Array.empty[(String, String)]).toSeq
   }
 
   import scala.language.implicitConversions
