@@ -6,11 +6,11 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Parquet, Sink}
-
 /** [[graft.sources.Parquet]]: every read of graft's parquet has
   * `spark.read.parquet`'s schema, runs no schema-inference job, and
-  * keeps no state between reads.
+  * keeps no state between reads. `SinkSpec`'s readLayout tests cover
+  * Spark-written directories, partitioned layouts and files without
+  * Spark's row metadata.
   */
 class ParquetReadSpec extends SparkSuite {
 
@@ -26,13 +26,6 @@ class ParquetReadSpec extends SparkSuite {
     */
   private def readerJobs(body: => Unit): Seq[String] =
     jobStarts(body).collect { case (site, top) if top.contains("DataFrameReader") => site }
-
-  /** The helper's read of `paths`, its jobs, and `spark.read`'s read. */
-  private def both(read: => DataFrame, inferred: => DataFrame): (DataFrame, Seq[String], DataFrame) = {
-    var built: DataFrame = null
-    val sites = jobSites { built = read }
-    (built, sites, inferred)
-  }
 
   test("a query's first build on a fresh directory runs no schema-inference job") {
     withTempDir { dir =>
@@ -58,35 +51,15 @@ class ParquetReadSpec extends SparkSuite {
     val tables = new File(sf).list().filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted
     assert(tables.contains("events") && tables.contains("embeddings"))
     for (name <- tables) {
-      val (built, sites, inferred) = both(SparkEntry.t(spark, sf, name), spark.read.parquet(s"$sf/$name.parquet"))
+      var built: DataFrame = null
+      val sites = jobSites { built = SparkEntry.t(spark, sf, name) }
       assert(sites.isEmpty, s"$name: $sites")
-      assert(built.schema == inferred.schema, name)
+      assert(built.schema == spark.read.parquet(s"$sf/$name.parquet").schema, name)
     }
     // two reads of one table join as two relations, not as one
     val (a, b) = (SparkEntry.t(spark, sf, "region"), SparkEntry.t(spark, sf, "region"))
     val pairs = a.join(b, a("r_regionkey") === b("r_regionkey") + 1).count()
     assert(pairs == a.count() - 1)
-  }
-
-  test("a Spark-written directory and one- and two-level layouts read spark.read's schema and rows, with no job") {
-    withTempDir { dir =>
-      val s = spark; import s.implicits._
-      val df = (1L to 12L).map(i => (i, i * 0.5, s"t$i", (i % 3).toInt, s"p${i % 2}"))
-        .toDF("id", "v", "s", "k", "p")
-      val plain = new File(dir, "plain").getPath
-      df.repartition(3).write.parquet(plain)
-      val layouts = Seq(Seq("p"), Seq("p", "k")).map { cols =>
-        val out = new File(dir, cols.mkString("_")).getPath
-        Sink.writePartitioned(df, out, cols, Seq("id"))
-        out
-      }
-      for (path <- plain +: layouts) {
-        val (built, sites, inferred) = both(Parquet.read(spark, path), spark.read.parquet(path))
-        assert(sites.isEmpty, s"$path: $sites")
-        assert(built.schema == inferred.schema, path)
-        assert(built.exceptAll(inferred).isEmpty && inferred.exceptAll(built).isEmpty, path)
-      }
-    }
   }
 
   test("a table rewritten between two reads is read with its new schema") {
@@ -100,37 +73,6 @@ class ParquetReadSpec extends SparkSuite {
       val reread = SparkEntry.t(spark, dir.getPath, "t")
       assert(reread.columns.toSeq == Seq("id", "new_name"))
       assert(reread.select(col("new_name")).as[String].collect().toSeq == Seq("z"))
-    }
-  }
-
-  test("binaryAsString set between two reads of a foreign file applies to the second") {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.hadoop.util.HadoopOutputFile
-    import org.apache.parquet.schema.MessageTypeParser
-    withTempDir { dir =>
-      // no Spark row metadata: the schema comes from the converter
-      val schema = MessageTypeParser.parseMessageType("message m { required int64 id; optional binary b; }")
-      val file = new org.apache.hadoop.fs.Path(new File(dir, "f.parquet").toURI)
-      val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
-        .withType(schema).build()
-      try w.write(new SimpleGroupFactory(schema).newGroup().append("id", 1L).append("b", "x"))
-      finally w.close()
-      val key = "spark.sql.parquet.binaryAsString"
-      val before = spark.conf.getOption(key)
-      def readB(): (DataFrame, Seq[String], DataFrame) =
-        both(Parquet.read(spark, file.toString), spark.read.parquet(file.toString))
-      try {
-        spark.conf.set(key, "false")
-        val (asBinary, sites1, inferred1) = readB()
-        spark.conf.set(key, "true")
-        val (asString, sites2, inferred2) = readB()
-        assert(sites1.isEmpty && sites2.isEmpty, s"$sites1 / $sites2")
-        assert(asBinary.schema("b").dataType == org.apache.spark.sql.types.BinaryType)
-        assert(asString.schema("b").dataType == org.apache.spark.sql.types.StringType)
-        assert(asBinary.schema == inferred1.schema && asString.schema == inferred2.schema)
-        assert(asString.select("b").collect().map(_.getString(0)).toSeq == Seq("x"))
-      } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
   }
 }

@@ -485,15 +485,27 @@ class SinkSpec extends SparkSuite {
       val files = leaves.flatMap(dir => Files.list(Paths.get(dir)).iterator().asScala
         .map(_.toString).filter(_.endsWith(".parquet")))
       assert(leaves.size > 1 && files.size >= leaves.size, s"$partitionCols: $leaves / $files")
-      for (paths <- Seq(Seq(out), leaves, files)) {
-        var built: org.apache.spark.sql.DataFrame = null
-        val sites = jobSites { built = Parquet.read(spark, out, paths) }
-        assert(sites.isEmpty, s"$partitionCols: reading $paths ran jobs $sites")
-        val inferred = spark.read.option("basePath", out).parquet(paths: _*)
-        assert(built.schema == inferred.schema, s"$partitionCols over $paths")
-        assert(built.exceptAll(inferred).isEmpty && inferred.exceptAll(built).isEmpty)
-      }
+      for (paths <- Seq(Seq(out), leaves, files))
+        sameAsSpark(s"$partitionCols over $paths", Parquet.read(spark, out, paths),
+          spark.read.option("basePath", out).parquet(paths: _*))
+      // the one-path form, which sets no basePath
+      sameAsSpark(s"$partitionCols root", Parquet.read(spark, out), spark.read.parquet(out))
     }
+    // a plain Spark-written directory
+    val plain = tmp().resolve("plain").toString
+    base.repartition(3).write.parquet(plain)
+    sameAsSpark("plain directory", Parquet.read(spark, plain), spark.read.parquet(plain))
+  }
+
+  /** `read` runs no job and has `inferred`'s schema and rows. */
+  private def sameAsSpark(label: String, read: => org.apache.spark.sql.DataFrame,
+                          inferred: => org.apache.spark.sql.DataFrame): Unit = {
+    var built: org.apache.spark.sql.DataFrame = null
+    val sites = jobSites { built = read }
+    assert(sites.isEmpty, s"$label: ran jobs $sites")
+    val expected = inferred
+    assert(built.schema == expected.schema, label)
+    assert(built.exceptAll(expected).isEmpty && expected.exceptAll(built).isEmpty, label)
   }
 
   test("readLayout: files without Spark's row metadata read the converted footer schema, with no job") {
@@ -501,24 +513,34 @@ class SinkSpec extends SparkSuite {
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.util.HadoopOutputFile
     import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.types.{BinaryType, StringType}
     val schema = MessageTypeParser.parseMessageType(
-      "message m { required int64 id; optional binary name (UTF8); optional double score; }")
+      "message m { required int64 id; optional binary name (UTF8); optional double score; optional binary raw; }")
     val conf = spark.sparkContext.hadoopConfiguration
     val out = tmp()
     for ((part, ids) <- Seq("x" -> (1L to 3L), "y" -> (4L to 5L))) {
       val file = new org.apache.hadoop.fs.Path(out.resolve(s"part=$part").resolve("f.parquet").toUri)
       val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, conf)).withType(schema).build()
       val groups = new SimpleGroupFactory(schema)
-      try ids.foreach(i => w.write(groups.newGroup().append("id", i).append("name", s"n$i").append("score", i * 1.5)))
+      try ids.foreach(i => w.write(groups.newGroup().append("id", i).append("name", s"n$i")
+        .append("score", i * 1.5).append("raw", s"r$i")))
       finally w.close()
     }
-    var built: org.apache.spark.sql.DataFrame = null
-    val sites = jobSites { built = Parquet.read(spark, out.toString, Seq(out.toString)) }
-    assert(sites.isEmpty, s"a footer without row metadata ran jobs $sites")
-    val inferred = spark.read.parquet(out.toString)
-    assert(built.schema == inferred.schema)
-    assert(built.orderBy("id").collect().toSeq == inferred.orderBy("id").collect().toSeq)
-    assert(built.count() == 5)
+    // the converter reads the session conf at call time: the same file
+    // reads `raw` as binary, then, with binaryAsString set, as a string
+    val key = "spark.sql.parquet.binaryAsString"
+    val before = spark.conf.getOption(key)
+    try for ((asString, rawType) <- Seq("false" -> BinaryType, "true" -> StringType)) {
+      spark.conf.set(key, asString)
+      var built: org.apache.spark.sql.DataFrame = null
+      val sites = jobSites { built = Parquet.read(spark, out.toString, Seq(out.toString)) }
+      assert(sites.isEmpty, s"a footer without row metadata ran jobs $sites")
+      val inferred = spark.read.parquet(out.toString)
+      assert(built.schema("raw").dataType == rawType)
+      assert(built.schema == inferred.schema)
+      assert(built.orderBy("id").collect().toSeq == inferred.orderBy("id").collect().toSeq)
+      assert(built.count() == 5)
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("deleteKeys: duplicate and null keys delete what distinct non-null keys do") {
